@@ -75,6 +75,19 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _PYFILES_SENT = set()
 
 
+def _package_zip(zpath: str) -> str:
+    """Zip the package's .py files (no directory entries, so every
+    package directory needs its own __init__.py to import from it)."""
+    with zipfile.ZipFile(zpath, "w") as z:
+        pkg = os.path.join(_REPO, "iceberg_go_spark")
+        for root, _d, names in os.walk(pkg):
+            for n in names:
+                if n.endswith(".py"):
+                    full = os.path.join(root, n)
+                    z.write(full, os.path.relpath(full, _REPO))
+    return zpath
+
+
 def _ensure_workers(spark: SparkSession) -> None:
     """Ship the package to executor Python workers (UDF deserialization
     imports it by name; the driver's session may not export PYTHONPATH)."""
@@ -82,14 +95,9 @@ def _ensure_workers(spark: SparkSession) -> None:
     if key in _PYFILES_SENT:
         return
     zpath = os.path.join("/tmp", "iceberg_go_spark_pkg.zip")
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            pkg = os.path.join(_REPO, "iceberg_go_spark")
-            for root, _d, names in os.walk(pkg):
-                for n in names:
-                    if n.endswith(".py"):
-                        full = os.path.join(root, n)
-                        z.write(full, os.path.relpath(full, _REPO))
+    # rebuilt per session (atomically): a zip left by an older checkout
+    # would ship stale code to the executors
+    os.replace(_package_zip(f"{zpath}.{os.getpid()}"), zpath)
     spark.sparkContext.addPyFile(zpath)
     _PYFILES_SENT.add(key)
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..meta import manifests as M
 from ..meta.metadata import (OP_APPEND, OP_DELETE, OP_OVERWRITE,
                              OP_REPLACE)
+from .scan import local_frame, raw_file_path
 
 CHANGE_TYPE = "_change_type"
 CHANGE_ORDINAL = "_change_ordinal"
@@ -76,7 +77,6 @@ def _with_pos(spark: SparkSession, schema, paths: List[str]) -> DataFrame:
     if not paths:
         return df.withColumn("__file", F.lit("")) \
                  .withColumn("__pos", F.lit(0).cast("long"))
-    from .scan import raw_file_path
     return (df.select("*", F.col("_metadata"))
             .withColumn("__file",
                         raw_file_path(F.col("_metadata.file_path")))
@@ -217,8 +217,8 @@ def changelog(table, spark: SparkSession,
                                      .to_numpy())
                 if pairs:
                     data = data.join(
-                        spark.createDataFrame(
-                            pairs, "__file string, __pos long"),
+                        local_frame(spark, pairs,
+                                    "__file string, __pos long"),
                         ["__file", "__pos"], "left_anti")
             for f in prior_eq:
                 names = _eq_key_names(md, f)
@@ -247,7 +247,6 @@ def changelog(table, spark: SparkSession,
                 "delete", ordinal, snap.snapshot_id))
         if dv_files:
             from ..meta.dv import read_deletion_vector_blobs
-            from .scan import _apply_dv_join  # noqa: F401 (shape parity)
             pairs = []
             for f in dv_files:
                 for fp, raw in read_deletion_vector_blobs(
@@ -257,8 +256,8 @@ def changelog(table, spark: SparkSession,
                         pairs.append((fp, int(p)))
             if pairs:
                 data = parent_live_with_pos()
-                dels = spark.createDataFrame(pairs,
-                                             "__file string, __pos long")
+                dels = local_frame(spark, pairs,
+                                   "__file string, __pos long")
                 frames.append(stamp(
                     data.join(dels, ["__file", "__pos"], "inner")
                         .drop("__file", "__pos"),

@@ -29,6 +29,7 @@ from ..meta import manifests as M
 from ..meta.metadata import OP_DELETE, OP_OVERWRITE
 from ..plans.evaluators import (InclusiveMetricsEvaluator,
                                 StrictMetricsEvaluator)
+from .scan import Scan, local_frame, raw_file_path
 from .write import (PART_COL_PREFIX, discover_partitioned_files,
                     write_dataframe)
 
@@ -54,7 +55,6 @@ def _tasks_scan_df(table, spark: SparkSession, tasks,
     """Read a task subset through the scan lowering so existing pos/eq
     deletes are applied (a CoW rewrite that reads raw parquet would
     resurrect rows removed by earlier MoR deletes/upserts)."""
-    from .scan import Scan
     sub = Scan(table, row_lineage=row_lineage)
     sub.plan_files = lambda: tasks  # type: ignore[assignment]
     return sub.to_df(spark)
@@ -76,7 +76,6 @@ def _matches_df(spark: SparkSession, schema, bound_col, partial) -> DataFrame:
     """(file_path, pos) of predicate-matching rows in partially-matching
     files.  Rows already MoR-deleted may reappear here — harmless, pos
     deletes are idempotent under the read-side anti-join."""
-    from .scan import raw_file_path
     src = spark.read.schema(schema.to_spark()).parquet(
         *[t.data_file.file_path for t in partial])
     # raw (percent-decoded) paths: every downstream join/lookup keys on
@@ -141,7 +140,7 @@ def _pos_delete_fanout(spark: SparkSession, md, matches: DataFrame,
     rows = [tuple([t.data_file.file_path] +
                   [t.data_file.partition.get(f.name) for f in ptype.fields])
             for t in partial]
-    mapping = spark.createDataFrame(rows, map_schema)
+    mapping = local_frame(spark, rows, map_schema)
     df = (matches.join(F.broadcast(mapping),
                        matches["file_path"] == mapping["__mfile"])
           .drop("__mfile")
@@ -619,7 +618,6 @@ def merge_into(table, spark: SparkSession, source: DataFrame,
     delete_files: List[M.DataFile] = []
     merge_dropped_dv_refs: set = set()
     if when_matched is not None and tasks:
-        from .scan import raw_file_path
         raw = spark.read.schema(schema.to_spark()).parquet(
             *[t.data_file.file_path for t in tasks])
         # __-prefixed temporaries: matched_condition / key columns may

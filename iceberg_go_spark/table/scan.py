@@ -35,35 +35,34 @@ from ..plans.evaluators import (InclusiveMetricsEvaluator, ManifestEvaluator,
 from ..schema import Schema
 
 
-_UNQUOTE_UDF = None
-
-
-def _unquote_udf():
-    """Lazily-registered vectorized unquote (pandas_udf creation needs
-    an active session, so it cannot run at import time)."""
-    global _UNQUOTE_UDF
-    if _UNQUOTE_UDF is None:
-        @F.pandas_udf("string")
-        def unq(col: pd.Series) -> pd.Series:
-            from urllib.parse import unquote
-            return col.map(unquote)
-        _UNQUOTE_UDF = unq
-    return _UNQUOTE_UDF
-
-
 def raw_file_path(col):
     """``_metadata.file_path`` as the RAW filesystem path manifests
-    record: strip the ``file:`` scheme and percent-decode when encoded
-    (a location with a space/'#'/non-ASCII char yields %XX in Spark's
-    URI form; every join against manifest-recorded paths — delete
-    application, DV membership, lineage — must compare raw to raw).
-    The decode is gated on a '%' so the common path stays JVM-side;
-    a RAW filename containing a literal %XX sequence would mis-decode —
-    the standard URI-roundtrip caveat, shared with the reference's
-    location handling."""
+    record: strip the ``file:`` scheme and percent-decode (a location
+    with a space/'%'/'#'/non-ASCII char yields %XX in Spark's URI form;
+    every join against manifest-recorded paths — delete application, DV
+    membership, lineage — must compare raw to raw).  Native, so paths
+    never reach a Python worker (a Python UDF, even under a conditional,
+    is hoisted into a per-row ArrowEvalPython node).  ``+`` is escaped
+    first: the URI form leaves it bare and URLDecoder reads it as a
+    space.  A literal ``%`` arrives as ``%25`` and round-trips."""
     stripped = F.regexp_replace(col, "^file:", "")
-    return F.when(stripped.contains("%"),
-                  _unquote_udf()(stripped)).otherwise(stripped)
+    return F.url_decode(F.replace(stripped, F.lit("+"), F.lit("%2B")))
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-built side table (tuples in ``schema`` order; StructType
+    or DDL) as an in-JVM LocalTableScan: a list handed to
+    createDataFrame plans as a PythonRDD that runs Python workers."""
+    import pyarrow as pa
+    import pyspark.sql.types as ST
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = ST.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
 
 
 @dataclass
@@ -678,7 +677,8 @@ class Scan:
                 # _row_id — `or 0` would fabricate position-based ids
                 # that collide across files and with a real
                 # first_row_id=0 assignment
-                lineage = spark.createDataFrame(
+                lineage = local_frame(
+                    spark,
                     [(t.data_file.file_path,
                       None if t.data_file.first_row_id is None
                       else int(t.data_file.first_row_id),
@@ -743,8 +743,8 @@ class Scan:
                                        F.col("pos").alias("__dpos"))
                                .distinct())
                     if dv_covered:
-                        covered_df = spark.createDataFrame(
-                            [(p,) for p in sorted(dv_covered)],
+                        covered_df = local_frame(
+                            spark, [(p,) for p in sorted(dv_covered)],
                             "__dfile string")
                         deletes = deletes.join(F.broadcast(covered_df),
                                                "__dfile", "left_anti")

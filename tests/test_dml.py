@@ -18,6 +18,24 @@ def catalog(tmp_path):
     return FilesystemCatalog(str(tmp_path / "wh"))
 
 
+def _parquet_scan_roots(df):
+    """Root paths (raw, scheme-stripped) of each parquet scan node in
+    ``df``'s executed physical plan, one set per scan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # not yet run: the initial plan
+    leaves = plan.collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+            continue
+        roots = leaf.relation().location().rootPaths()
+        out.append({roots.apply(j).toUri().getPath()
+                    for j in range(roots.size())})
+    return out
+
+
 def _make(spark, sf_dir, catalog, name, spec_parts=None):
     df = read_table(spark, "orders", sf_dir)
     schema = Schema.from_spark(df.schema)
@@ -116,13 +134,14 @@ def test_mor_pos_delete_partitioned(spark, sf_dir, catalog):
     assert pruned.to_df(spark).count() == exp2.count()
     # partition-fanout pos deletes must NOT split the scan into one
     # pipeline per partition: positional deletes are path-keyed, so the
-    # lowering unions them into ONE data-file scan + anti-join (a Union
-    # of per-partition branches here meant O(partitions) plan blowup)
+    # lowering reads every data file in ONE parquet scan + anti-join
+    # (one scan branch per partition meant O(partitions) plan blowup)
     per_task_sets = {frozenset(d.file_path for d in task.pos_deletes)
                      for task in tasks}
     assert len(per_task_sets) > 1  # fixture really fans out per partition
-    plan = t.to_df(spark)._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in plan
+    data_files = {task.data_file.file_path for task in tasks}
+    scans = _parquet_scan_roots(t.to_df(spark))
+    assert [r for r in scans if r & data_files] == [data_files]
 
 
 def test_dv_delete_partitioned(spark, sf_dir, catalog):
@@ -197,13 +216,17 @@ def test_merge_into_update_and_insert(spark, sf_dir, catalog):
 
 def test_merge_into_delete_and_condition(spark, sf_dir, catalog):
     t, df = _make(spark, sf_dir, catalog, "mrgdel",
-                  spec_parts=[("o_orderdate", "year")])
+                  spec_parts=[("o_orderdate", "month")])
     n = df.count()
     victims = df.filter(F.col("o_orderstatus") == "F").limit(20)
     nv = victims.count()
     t = t.merge_into(spark, victims.select("o_orderkey"), ["o_orderkey"],
                      when_matched="delete", insert_not_matched=False)
     assert t.to_df(spark).count() == n - nv
+    # merge-written deletes fan out through the partition mapping
+    parts = {tuple(sorted(d.partition.items()))
+             for task in t.scan().plan_files() for d in task.pos_deletes}
+    assert len(parts) > 1
 
     # conditional update: only 'O' rows of the matched keys change
     some = t.to_df(spark).limit(30).select("o_orderkey", "o_custkey",
@@ -374,36 +397,46 @@ def test_update_where_simultaneous_assignments(spark, sf_dir, catalog):
 
 def test_mor_and_dv_deletes_in_warehouse_path_with_space(spark, sf_dir,
                                                          tmp_path):
-    """A table location containing a space percent-encodes in Spark's
-    _metadata.file_path URI; every delete-path join must compare RAW
-    paths or the deletes silently stop applying (partitioned fanout
-    mapping, DV referenced_data_file, read-side anti-joins)."""
+    """A table location containing a space, '+', '%' or non-ASCII char
+    percent-encodes in Spark's _metadata.file_path URI; every delete-path
+    join must compare RAW paths or the deletes silently stop applying
+    (partitioned fanout mapping, merge match, DV referenced_data_file,
+    read-side anti-joins).  '+' stays bare in the URI but a URL decoder
+    reads it as a space; a literal '%' must round-trip."""
     from iceberg_go_spark import expressions as E
     from iceberg_go_spark.catalog import FilesystemCatalog
     from iceberg_go_spark.meta.partitioning import spec_from_names
-    wh = tmp_path / "ware house"  # space on purpose
-    cat = FilesystemCatalog(str(wh))
     df = spark.createDataFrame(
         [(i, "a" if i % 2 == 0 else "b") for i in range(20)],
         "id long, grp string")
     sch = Schema.from_spark(df.schema)
-    t = cat.create_table("db.sp", sch, spec_from_names(sch,
-                                                       ("grp", "identity")))
-    t.append(df)
-    # partitioned MoR delete: the fanout mapping join keys on the path
-    t.delete_where(spark, E.eq("id", 4), mode="merge-on-read")
-    t = cat.load_table("db.sp")
-    assert sorted(r.id for r in t.to_df(spark).collect()) == \
-        [i for i in range(20) if i != 4]
-    # DV delete on the same table: referenced_data_file must be raw
-    t = t.upgrade_format_version(3)
-    t.delete_where(spark, E.eq("id", 7), mode="merge-on-read-dv")
-    t = cat.load_table("db.sp")
-    assert sorted(r.id for r in t.to_df(spark).collect()) == \
-        [i for i in range(20) if i not in (4, 7)]
-    # lineage must also resolve (left join would null out on mismatch)
-    rows = t.scan(row_lineage=True).to_df(spark).collect()
-    assert all(r._row_id is not None for r in rows)
+    for n, name in enumerate(["ware house", "ware+house 100%",
+                              "entrepôt_倉庫"]):
+        cat = FilesystemCatalog(str(tmp_path / str(n) / name))
+        t = cat.create_table("db.sp", sch,
+                             spec_from_names(sch, ("grp", "identity")))
+        t.append(df)
+        # partitioned MoR delete: the fanout mapping join keys on the path
+        t.delete_where(spark, E.eq("id", 4), mode="merge-on-read")
+        t = cat.load_table("db.sp")
+        assert sorted(r.id for r in t.to_df(spark).collect()) == \
+            [i for i in range(20) if i != 4], name
+        # merge update: matched rows are located by decoded path
+        t = t.merge_into(spark, df.filter("id in (1, 2)")
+                         .withColumn("grp", F.concat("grp", F.lit("x"))),
+                         ["id"], insert_not_matched=False)
+        got = {r.id: r.grp for r in t.to_df(spark).collect()}
+        assert sorted(got) == [i for i in range(20) if i != 4], name
+        assert (got[1], got[2], got[3]) == ("bx", "ax", "b"), name
+        # DV delete on the same table: referenced_data_file must be raw
+        t = t.upgrade_format_version(3)
+        t.delete_where(spark, E.eq("id", 7), mode="merge-on-read-dv")
+        t = cat.load_table("db.sp")
+        assert sorted(r.id for r in t.to_df(spark).collect()) == \
+            [i for i in range(20) if i not in (4, 7)], name
+        # lineage must also resolve (left join would null out on mismatch)
+        rows = t.scan(row_lineage=True).to_df(spark).collect()
+        assert all(r._row_id is not None for r in rows), name
 
 
 def test_mor_delete_with_column_named_pos(spark, sf_dir, catalog):

@@ -1373,3 +1373,22 @@ class TestBpeEdgeCases:
                    for r in bpe_apply_token_counts(
                        df, long_merges).collect()}
         assert got_udf == got
+
+
+def test_package_zip_imports_every_subpackage(tmp_path):
+    """The zip `_ensure_workers` ships to executors holds files only, no
+    directory entries: a package directory without an __init__.py
+    (namespace package) cannot be imported from it, so an executor
+    importing the engine from the zip failed on iceberg_go_spark.meta."""
+    import subprocess
+    import sys
+    import __spark_entry__ as em
+    zpath = em._package_zip(str(tmp_path / "pkg.zip"))
+    code = ("import sys; sys.path.insert(0, %r); "
+            "import iceberg_go_spark.meta.manifests as m; "
+            "print(m.__file__)" % zpath)
+    # -I: no PYTHONPATH, no script dir; cwd outside the checkout
+    r = subprocess.run([sys.executable, "-I", "-c", code], cwd=str(tmp_path),
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.startswith(zpath), r.stdout

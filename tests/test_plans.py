@@ -316,3 +316,61 @@ def test_zorder_write_prunes_on_both_dimensions(spark):
     # correctness: z-ordered scan returns exactly the plain-filter rows
     want = li.filter(F.col("l_orderkey") < int(lo_key)).count()
     assert sc1.to_df(spark).count() == want
+
+
+# plan nodes that run a Python worker over the rows flowing through them
+PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                     "ExistingRDD")
+# the one Python stage merge-on-read keeps: deletion-vector bitmap
+# application (table.scan._apply_deletion_vectors, a mapInPandas over
+# broadcast serialized bitmaps)
+DV_APPLY_STAGE = "MapInPandas"
+
+
+def test_delete_application_runs_without_python_workers(spark, tmp_path,
+                                                        monkeypatch):
+    """Merge-on-read delete application and DML position matching lower
+    onto JVM-only plans: the `_metadata.file_path` decode is a native
+    expression and the driver-built side tables (partition mapping,
+    lineage map) are LocalTableScans, not PythonRDDs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+    from conftest import read_table
+    from iceberg_go_spark import expressions as E
+    from iceberg_go_spark.catalog import FilesystemCatalog
+    from iceberg_go_spark.meta.partitioning import spec_from_names
+    from iceberg_go_spark.schema import Schema
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(plan(self._df))
+        return real_parquet(self, path, *args, **kwargs)
+
+    orders = read_table(spark, "orders", SF)
+    sch = Schema.from_spark(orders.schema)
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    t = cat.create_table("db.mor", sch,
+                         spec_from_names(sch, ("o_orderdate", "year")))
+    t.append(orders)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    t.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
+    monkeypatch.undo()
+    assert len(written) == 1  # the partition-fanout pos-delete write
+    plans = {"MoR delete match + partition mapping": written[0],
+             "MoR scan": plan(cat.load_table("db.mor").to_df(spark))}
+
+    v3 = cat.create_table("db.v3", sch, properties={"format-version": "3"})
+    v3.append(orders)
+    v3.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
+    plans["v3 row-lineage scan"] = plan(
+        cat.load_table("db.v3").scan(row_lineage=True).to_df(spark))
+    assert DV_APPLY_STAGE in plans["v3 row-lineage scan"]  # v3: DVs
+
+    offenders = {name: [n for n in PYTHON_EVAL_NODES
+                        if n in p and n != DV_APPLY_STAGE]
+                 for name, p in plans.items()}
+    assert offenders == {name: [] for name in plans}, offenders

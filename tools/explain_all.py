@@ -6,18 +6,26 @@ Usage: python tools/explain_all.py <tag> [suffix] [query ...]
 
 Captures the ANALYZED physical plan (pre-execution, AQE initial) — the
 artifact the judge reads to verify plan-shape claims (Exchange count,
-join strategy, PushedFilters, Python-eval nodes).
+join strategy, PushedFilters, Python-eval nodes). Each written file is
+echoed with its count of Python-eval nodes (ArrowEvalPython,
+BatchEvalPython, MapInPandas, Scan ExistingRDD).
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# nodes that run a Python worker over their rows, matched on the
+# formatted plan's numbered detail headers (one per node)
+_PY_EVAL = re.compile(r"^\(\d+\) (?:Scan )?(?:ArrowEvalPython|"
+                      r"BatchEvalPython|MapInPandas|ExistingRDD)\b", re.M)
 
 
 def main() -> None:
@@ -50,7 +58,8 @@ def main() -> None:
         with io.open(os.path.join(outdir, f"{name}_{suffix}.txt"),
                      "w", encoding="utf-8") as f:
             f.write(plan)
-        print(f"wrote {name}_{suffix}.txt ({len(plan)} chars)")
+        print(f"wrote {name}_{suffix}.txt ({len(plan)} chars, "
+              f"{len(_PY_EVAL.findall(plan))} python-eval nodes)")
 
 
 if __name__ == "__main__":
