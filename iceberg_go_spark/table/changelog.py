@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..meta import manifests as M
 from ..meta.metadata import (OP_APPEND, OP_DELETE, OP_OVERWRITE,
                              OP_REPLACE)
-from .scan import local_frame, raw_file_path
+from .scan import local_frame, raw_file_path, read_delete_files
 
 CHANGE_TYPE = "_change_type"
 CHANGE_ORDINAL = "_change_ordinal"
@@ -102,6 +102,14 @@ def _eq_key_names(md, delete_file) -> List[str]:
             f"equality delete {delete_file.file_path} carries no "
             f"equality ids")
     return names
+
+
+def _read_eq_keys(spark: SparkSession, md, delete_file,
+                  names: List[str]) -> DataFrame:
+    """Distinct key tuples of one eq-delete file."""
+    return read_delete_files(
+        spark, [delete_file.file_path], delete_file.equality_ids,
+        md.schema(), md.schemas).select(*names).dropDuplicates()
 
 
 def changelog(table, spark: SparkSession,
@@ -201,8 +209,8 @@ def changelog(table, spark: SparkSession,
             prior_eq = [f for f in prev_dels.values()
                         if f.content == M.CONTENT_EQ_DELETES]
             if prior_pos:
-                pdels = (spark.read.parquet(
-                    *sorted({f.file_path for f in prior_pos}))
+                pdels = (read_delete_files(
+                    spark, sorted({f.file_path for f in prior_pos}))
                     .select(F.col("file_path").alias("__file"),
                             F.col("pos").alias("__pos")).distinct())
                 data = data.join(pdels, ["__file", "__pos"], "left_anti")
@@ -222,7 +230,7 @@ def changelog(table, spark: SparkSession,
                         ["__file", "__pos"], "left_anti")
             for f in prior_eq:
                 names = _eq_key_names(md, f)
-                keys = spark.read.parquet(f.file_path).select(*names)                     .dropDuplicates()
+                keys = _read_eq_keys(spark, md, f, names)
                 data = data.join(
                     keys, [data[n].eqNullSafe(keys[n]) for n in names],
                     "left_anti")
@@ -236,8 +244,8 @@ def changelog(table, spark: SparkSession,
 
         if pos_files:
             data = parent_live_with_pos()
-            dels = (spark.read.parquet(
-                *sorted({f.file_path for f in pos_files}))
+            dels = (read_delete_files(
+                spark, sorted({f.file_path for f in pos_files}))
                 .select(F.regexp_replace(F.col("file_path"), "^file:", "")
                         .alias("__file"),
                         F.col("pos").alias("__pos")))
@@ -266,8 +274,7 @@ def changelog(table, spark: SparkSession,
             data = parent_live_with_pos().drop("__file", "__pos")
             for f in eq_files:
                 names = _eq_key_names(md, f)
-                keys = spark.read.parquet(f.file_path).select(*names) \
-                    .dropDuplicates()
+                keys = _read_eq_keys(spark, md, f, names)
                 cond = [data[n].eqNullSafe(keys[n]) for n in names]
                 frames.append(stamp(
                     data.alias("d").join(keys, cond, "leftsemi"),

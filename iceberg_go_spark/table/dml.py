@@ -581,9 +581,12 @@ def merge_into(table, spark: SparkSession, source: DataFrame,
 
     Scale shape: match detection is one raw scan of candidate files
     semi-joined on the keys (shuffle keyed by the join); pos deletes
-    fan out partition-aware; the replacement/insert union writes
-    through the normal distributed path.  Everything commits atomically
-    with OCC retry."""
+    fan out partition-aware; the replacement/insert rows write through
+    the normal distributed path.  The default form (update + insert,
+    no condition or filter, pre-v3) writes ``source`` as-is and reads
+    the target only in match detection; the other forms split
+    ``source`` against key sets read through the delete-applying scan.
+    Everything commits atomically with OCC retry."""
     if when_matched not in ("update", "delete", None):
         raise ValueError(f"unsupported when_matched: {when_matched!r}")
     md = table.metadata
@@ -642,14 +645,22 @@ def merge_into(table, spark: SparkSession, source: DataFrame,
         else:
             delete_files = _pos_delete_fanout(spark, md, matches, tasks)
 
-    # 2. replacement + insert rows, one distributed write.  Key sets
-    #    come from the scan lowering (existing deletes applied) — two
-    #    passes over the target, which beats materializing every key.
+    # 2. replacement + insert rows, one distributed write.  The default
+    #    form (update every match, insert the rest, table-wide) writes
+    #    `source` as-is: each source row is either a matched update or
+    #    an unmatched insert (a null key matches nothing and inserts),
+    #    and step 1 already retired every matched target row.  Every
+    #    other form splits `source` by key sets from the scan lowering
+    #    (existing deletes applied): one pass over the target for the
+    #    matched side, one over the table for the insert side.
     fv3 = md.format_version >= 3
     from ..types import to_spark_type
+    write_source = (when_matched == "update" and insert_not_matched
+                    and cond is None and candidate_filter is None
+                    and not fv3)
     target = _tasks_scan_df(table, spark, tasks, row_lineage=fv3) \
-        if tasks else None
-    pieces = []
+        if tasks and not write_source else None
+    pieces = [source] if write_source else []
     if when_matched == "update" and target is not None:
         matched_keys = target.filter(cond) if cond is not None else target
         if fv3:
@@ -666,7 +677,7 @@ def merge_into(table, spark: SparkSession, source: DataFrame,
             matched_keys = matched_keys.select(*key_columns).distinct()
             pieces.append(source.join(matched_keys, key_columns,
                                       "leftsemi"))
-    if insert_not_matched:
+    if insert_not_matched and not write_source:
         # insert-side existence is decided against the WHOLE table even
         # under a candidate_filter — a key living outside the filter
         # must not be re-inserted
@@ -746,8 +757,13 @@ def upsert(table, spark: SparkSession, df: DataFrame,
     # write out; no single-task coalesce) under deletes/ so the streaming
     # file source never tails them.  Scope is global (unpartitioned) —
     # the read side groups all eq files with the same key set into ONE
-    # anti-join, so file count doesn't multiply joins.
-    keys = df.select(*key_columns).distinct()
+    # anti-join, so file count doesn't multiply joins.  Keys carry the
+    # table's types, as the data write does: readers read these files
+    # with the table schema (scan.read_delete_files).
+    from ..types import to_spark_type
+    keys = df.select(*[
+        F.col(c).cast(to_spark_type(schema.find_field(c).field_type))
+        .alias(c) for c in key_columns]).distinct()
     out_dir = os.path.join(md.location, "deletes",
                            f"eq-{uuid.uuid4().hex[:12]}")
     keys.write.parquet(out_dir)

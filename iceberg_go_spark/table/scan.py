@@ -65,6 +65,48 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         schema=arrow), schema)
 
 
+def read_delete_files(spark: SparkSession, paths: List[str],
+                      equality_ids=None, schema: Optional[Schema] = None,
+                      schemas=()) -> DataFrame:
+    """Position-delete files (no ``equality_ids``) or equality-delete
+    files over ``equality_ids`` as a DataFrame, read with a known schema:
+    an inferred read runs a Spark job per call, at build time.
+
+    - position deletes: the spec's ``file_path string, pos long``;
+    - equality deletes: one column per key, named as in ``schema`` and
+      typed from it.  No field ids: the engine's delete files carry
+      none, and ``fieldId.read.ignoreMissing`` would read an id-less
+      file as nulls, so columns resolve by name.  A file names a key as
+      the key was called when it was written, so a key renamed in
+      ``schemas`` (the table's schema history) is read under each of its
+      names and coalesced: a file carries exactly one of them.
+
+    A nested key, or a name that another column has also had, keeps the
+    inferred read (it fails loudly where a guess could read nulls)."""
+    if not equality_ids:
+        return spark.read.schema("file_path string, pos long").parquet(*paths)
+    import pyspark.sql.types as ST
+    history = [schema, *schemas]
+    fields, keys = [], []
+    for fid in equality_ids:
+        name = schema.find_column_name(fid)
+        names: Dict[str, str] = {}
+        for s in history:
+            n = s.find_column_name(fid)
+            if n is not None:
+                names.setdefault(n.lower(), n)
+        taken = {f.name.lower() for s in history for f in s.fields
+                 if f.field_id != fid}
+        if (name is None or any("." in n for n in names.values())
+                or taken & names.keys()):
+            return spark.read.parquet(*paths)
+        dtype = T.to_spark_type(schema.find_field(fid).field_type)
+        fields += [ST.StructField(n, dtype) for n in names.values()]
+        keys.append(F.coalesce(*map(F.col, names.values())).alias(name))
+    return spark.read.schema(ST.StructType(fields)).parquet(*paths) \
+        .select(*keys)
+
+
 @dataclass
 class FileScanTask:
     data_file: M.DataFile
@@ -737,22 +779,26 @@ class Scan:
                     for pth in puffin_dels:
                         dv_covered.update(list_deletion_vector_keys(pth))
                 if parquet_dels:
-                    deletes = (spark.read.parquet(
-                                   *[p for p, _ in parquet_dels])
-                               .select(F.col("file_path").alias("__dfile"),
-                                       F.col("pos").alias("__dpos"))
-                               .distinct())
+                    # broadcast only when manifest stats say the delete
+                    # set is small; at large delete counts let AQE pick a
+                    # shuffled anti-join instead of OOMing the driver
+                    small = (sum(n for _, n in parquet_dels)
+                             <= _broadcast_row_limit())
+                    deletes = read_delete_files(
+                        spark, [p for p, _ in parquet_dels]).select(
+                        F.col("file_path").alias("__dfile"),
+                        F.col("pos").alias("__dpos"))
+                    if not small:
+                        # an anti-join ignores duplicates on its build
+                        # side; only a shuffled join pays for them
+                        deletes = deletes.distinct()
                     if dv_covered:
                         covered_df = local_frame(
                             spark, [(p,) for p in sorted(dv_covered)],
                             "__dfile string")
                         deletes = deletes.join(F.broadcast(covered_df),
                                                "__dfile", "left_anti")
-                    # broadcast only when manifest stats say the delete
-                    # set is small; at large delete counts let AQE pick a
-                    # shuffled anti-join instead of OOMing the driver
-                    n_del = sum(n for _, n in parquet_dels)
-                    if n_del <= _broadcast_row_limit():
+                    if small:
                         deletes = F.broadcast(deletes)
                     df = df.join(
                         deletes,
@@ -789,15 +835,19 @@ class Scan:
                             f"equality delete on nested field {name!r} "
                             f"is not supported by this reader")
                     cols.append(name)
-                ddf = spark.read.parquet(*[p for p, _ in dentries]).select(
-                    *[F.col(c).alias(f"__eq_{c}") for c in cols]).distinct()
+                ddf = read_delete_files(
+                    spark, [p for p, _ in dentries], eq_ids, schema,
+                    md.schemas).select(
+                    *[F.col(c).alias(f"__eq_{c}") for c in cols])
                 # broadcast only when manifest record counts say the key
                 # set is small; a 100 TB upsert stream accumulates
                 # billion-key eq-delete sets — above the threshold let
                 # AQE pick a shuffled anti-join (mirrors the pos-delete
-                # gate above)
+                # gate above, dedupe included)
                 if sum(n for _, n in dentries) <= _broadcast_row_limit():
                     ddf = F.broadcast(ddf)
+                else:
+                    ddf = ddf.distinct()
                 # null-safe equality: an eq-delete key with NULL matches
                 # rows with NULL (reference null-tagged key encoding)
                 cond = None

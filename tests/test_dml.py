@@ -251,6 +251,102 @@ def test_merge_into_rejects_duplicate_source_keys(spark, sf_dir, catalog):
         t.merge_into(spark, src, ["o_orderkey"])
 
 
+def _merge_fixture(spark, sf_dir, catalog, name):
+    """Orders carrying MoR position deletes, an upsert's equality
+    delete and a duplicated key (one more row for key ``dup``)."""
+    t, df = _make(spark, sf_dir, catalog, name, [("o_orderdate", "year")])
+    t.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
+    live = df.filter(F.col("o_orderstatus") == "O").orderBy("o_orderkey")
+    t.upsert(spark, live.limit(20).withColumn("o_totalprice", F.lit(1.5)),
+             ["o_orderkey"])
+    dup = live.limit(1).withColumn("o_orderpriority", F.lit("DUP"))
+    t.append(dup)
+    return catalog.load_table(f"db.{name}"), df, dup.first().o_orderkey
+
+
+def test_merge_into_default_form_matches_general_path(spark, sf_dir,
+                                                      catalog):
+    """The default MERGE (update + insert, no condition or filter) writes
+    the source as-is; the same merge forced through the general key-set
+    path (``matched_condition="true"``) must leave the same rows."""
+    fast, df, dup = _merge_fixture(spark, sf_dir, catalog, "mrgfast")
+    slow, _, _ = _merge_fixture(spark, sf_dir, catalog, "mrgslow")
+    gone = df.filter(F.col("o_orderstatus") == "F") \
+        .orderBy("o_orderkey").first().o_orderkey
+    mx = df.agg(F.max("o_orderkey")).first()[0]
+    base = df.filter(F.col("o_orderkey") == dup).drop("o_orderkey")
+    src = (base.crossJoin(spark.createDataFrame(
+               [(dup,), (gone,), (mx + 1,), (None,)], "o_orderkey long"))
+           .withColumn("o_orderpriority",
+                       F.concat(F.lit("SRC-"),
+                                F.coalesce(F.col("o_orderkey").cast("string"),
+                                           F.lit("null"))))
+           .select(*df.columns))
+    assert src.count() == 4
+
+    fast = fast.merge_into(spark, src, ["o_orderkey"])
+    slow = slow.merge_into(spark, src, ["o_orderkey"],
+                           matched_condition="true")
+
+    def rows(t):
+        return sorted(t.to_df(spark).select(*df.columns).collect(),
+                      key=lambda r: (r.o_orderkey is None, r.o_orderkey or 0,
+                                     r.o_orderpriority))
+
+    got = rows(fast)
+    assert got == rows(slow)
+    by_key = {}
+    for r in got:
+        by_key.setdefault(r.o_orderkey, []).append(r.o_orderpriority)
+    # the duplicated key collapses to the one source row; the deleted,
+    # new and null keys insert
+    for k in (dup, gone, mx + 1, None):
+        want = f"SRC-{k if k is not None else 'null'}"
+        assert by_key[k] == [want], (k, by_key[k])
+    n_live = df.filter(F.col("o_orderstatus") != "F").count()
+    assert len(got) == n_live + 3  # gone, new and null keys
+
+
+def test_upsert_across_key_rename_matches_model(spark, catalog):
+    """Equality deletes written before and after a key rename carry
+    different column names; a scan applies both (a renamed key is read
+    under each of its names) and matches a plain model."""
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(10)],
+                               "id long, v string")
+    t = catalog.create_table("db.ren", Schema.from_spark(df.schema))
+    t.append(df)
+    model = {i: f"v{i}" for i in range(10)}
+    t.upsert(spark, spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, "a")], "id long, v string"), ["id"])
+    model.update({1: "a", 2: "a", 3: "a"})
+    t = catalog.load_table("db.ren")
+    t.update_schema().rename_column("id", "key").commit()
+    t = catalog.load_table("db.ren")
+    t.upsert(spark, spark.createDataFrame(
+        [(3, "b"), (4, "b"), (10, "b")], "key long, v string"), ["key"])
+    model.update({3: "b", 4: "b", 10: "b"})
+    got = sorted(tuple(r) for r in
+                 catalog.load_table("db.ren").to_df(spark).collect())
+    assert got == sorted(model.items())
+
+
+def test_upsert_key_wider_than_table_column(spark, catalog):
+    """An upsert batch whose key type is wider than the table's (long
+    into an int key) writes its equality-delete keys with the table's
+    type: readers read delete files with the table schema, and a long
+    column does not read as int."""
+    t = catalog.create_table("db.widekey", Schema.from_spark(
+        spark.createDataFrame([], "id int, v string").schema))
+    t.append(spark.createDataFrame([(i, "old") for i in range(5)],
+                                   "id int, v string"))
+    t.upsert(spark, spark.createDataFrame([(1, "new"), (7, "new")],
+                                          "id long, v string"), ["id"])
+    got = sorted(tuple(r) for r in
+                 catalog.load_table("db.widekey").to_df(spark).collect())
+    assert got == [(0, "old"), (1, "new"), (2, "old"), (3, "old"),
+                   (4, "old"), (7, "new")]
+
+
 def test_merge_into_candidate_filter_prunes(spark, sf_dir, catalog):
     """candidate_filter bounds the match scan to the source's partition
     range; keys outside it are neither matched nor re-inserted."""

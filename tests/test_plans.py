@@ -374,3 +374,66 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
                         if n in p and n != DV_APPLY_STAGE]
                  for name, p in plans.items()}
     assert offenders == {name: [] for name in plans}, offenders
+
+
+def _broadcast_subtrees(plan: str):
+    """The text of each BroadcastExchange node's subtree in a plan's
+    tree string: the lines below it indented deeper than it."""
+    import re
+    lines = plan.splitlines()
+    depth = [re.match(r"[\s:+\-|]*", ln).end() for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if "BroadcastExchange" not in ln:
+            continue
+        j = i + 1
+        while j < len(lines) and depth[j] > depth[i]:
+            j += 1
+        out.append("\n".join(lines[i:j]))
+    return out
+
+
+def test_mor_scan_build_launches_no_spark_job(spark, tmp_path):
+    """Building a merge-on-read scan DataFrame runs no Spark job: delete
+    files are read with the spec's or the table's schema (an inferred
+    read runs a schema job per call), and a broadcast delete side is
+    not deduplicated first (a HashAggregate there costs a shuffle stage
+    and an extra job per delete side at execution)."""
+    import pyspark.sql.functions as F
+    from conftest import read_table
+    from iceberg_go_spark import expressions as E
+    from iceberg_go_spark.catalog import FilesystemCatalog
+    from iceberg_go_spark.meta.partitioning import spec_from_names
+    from iceberg_go_spark.schema import Schema
+
+    orders = read_table(spark, "orders", SF)
+    sch = Schema.from_spark(orders.schema)
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    t = cat.create_table("db.jobs", sch,
+                         spec_from_names(sch, ("o_orderdate", "year")))
+    t.append(orders)
+    # the upsert's rows turn "F", so the delete hits both scan groups:
+    # the files under the equality delete and the upsert's own files
+    t.upsert(spark, orders.filter(F.col("o_orderstatus") == "O").limit(50)
+             .withColumn("o_orderstatus", F.lit("F")), ["o_orderkey"])
+    t = cat.load_table("db.jobs")
+    t.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
+    t = cat.load_table("db.jobs")
+    tasks = t.scan().plan_files()
+    assert any(task.pos_deletes for task in tasks)
+    assert any(task.eq_deletes for task in tasks)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("mor-scan-build", "scan build job-count probe")
+    try:
+        df = t.scan().to_df(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("mor-scan-build")) == 0
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    sides = _broadcast_subtrees(plan)
+    assert len(sides) >= 2, plan  # a pos-delete and an eq-delete side
+    assert [s for s in sides if "HashAggregate" in s] == [], plan
+    assert df.count() == \
+        orders.filter(F.col("o_orderstatus") != "F").count() - 50
