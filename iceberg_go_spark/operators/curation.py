@@ -1019,7 +1019,16 @@ def snapshot_value_drift(table, spark, column: str,
     Time travel supplies both sides from the SAME table (no second
     copy): each side is one value-histogram aggregation; the histogram
     join is keyed by value; the TV fold is the closed-form used by
-    source_token_divergence, in DECIMAL(38,0)."""
+    source_token_divergence, in DECIMAL(38,0).
+
+    Materialization: the joined histogram (one row per distinct value
+    on either side) is localCheckpointed, so building the result runs
+    a Spark job eagerly.  It is small for the categorical columns drift
+    is meant for; on a high-cardinality column (a key, a timestamp) it
+    holds about one row per table row in executor block storage.  Those
+    blocks are unreplicated: losing an executor fails the query rather
+    than recomputing it (see the module docstring of
+    ``operators.dedup``)."""
     old = table.scan(selected=[column]).use_ref(from_ref).to_df(spark)
     new = table.scan(selected=[column]).to_df(spark)
     ch = old.groupBy(column).agg(F.count(F.lit(1)).alias("__co"))

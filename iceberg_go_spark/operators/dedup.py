@@ -19,14 +19,19 @@ checkpointed blocks are unreplicated — on a cluster, losing an executor
 fails the query instead of recomputing truncated lineage.  That trade
 is taken deliberately for frames that are small relative to the corpus
 scan they avoid re-running; use reliable checkpointing (a configured
-checkpoint dir) where executor churn is expected.
+checkpoint dir) where executor churn is expected.  connected_components
+goes one step further under the engine's broadcast row gate: it fetches
+its edge list to the driver (one Arrow job) and returns its result as a
+driver-built LocalTableScan, so the returned frame holds no lineage and
+no executor blocks at all.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql import types as T
 
 from ..functions import text_funcs as TX
 
@@ -359,22 +364,18 @@ def _simhash64_sig_frame(df: DataFrame, text_col: str,
         *[F.conv(F.substring("__m", off, 4), 16, 10).cast("long")
           .alias(f"__h{j}")
           for j, off in enumerate(TX.SIMHASH64_OFFSETS)])
-    aggs = []
-    for j in range(4):
-        for i in range(16):
-            aggs.append(F.sum(
-                F.when(F.col(f"__h{j}").isNull(), 0)
-                .when(F.col(f"__h{j}").bitwiseAND(F.lit(1 << i)) > 0, 1)
-                .otherwise(-1)).alias(f"__v{j}_{i}"))
-    votes = hs.groupBy(id_col).agg(*aggs)
-    parts = []
-    for j in range(4):
-        acc = F.lit(0).cast("long")
-        for i in range(16):
-            acc = acc + F.when(F.col(f"__v{j}_{i}") > 0,
-                               F.lit(1 << i)).otherwise(0)
-        parts.append(acc.alias(f"__p{j}"))
-    return votes.select(F.col(id_col), *parts)
+    # SQL strings, not chained Column calls: each wrapped F.*/Column call
+    # pays ~13 py4j round-trips of call-site capture, and the ~840 calls
+    # the votes take as Columns cost more driver time than the job
+    votes = hs.groupBy(id_col).agg(*[F.expr(
+        f"sum(CASE WHEN __h{j} IS NULL THEN 0 "
+        f"WHEN (__h{j} & {1 << i}) > 0 THEN 1 ELSE -1 END) AS __v{j}_{i}")
+        for j in range(4) for i in range(16)])
+    return votes.selectExpr(f"`{id_col}`", *[
+        "CAST(0 AS BIGINT) + " + " + ".join(
+            f"CASE WHEN __v{j}_{i} > 0 THEN {1 << i} ELSE 0 END"
+            for i in range(16)) + f" AS __p{j}"
+        for j in range(4)])
 
 
 def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
@@ -616,44 +617,140 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     per component", not "one per pair".
 
     Algorithm: min-label propagation + pointer jumping.  Each round
-    every vertex takes the minimum label among itself and its neighbors
-    (one edge-list join + keyed min), then COMPRESSES by following its
-    label's label (a |V|-row self-join) — the path-halving step turns
-    O(diameter) convergence into O(log diameter), which is what matters
-    when a 100 TB near-dup graph grows long chains.  All joins are hash
-    shuffles on vertex ids, never quadratic; localCheckpoint truncates
-    the plan lineage per round (an iterative driver loop over
-    DataFrames, not a driver loop over rows).
+    every vertex takes the minimum label among itself and its neighbors,
+    then COMPRESSES by following its label's label — the path-halving
+    step turns O(diameter) convergence into O(log diameter), which is
+    what matters when a 100 TB near-dup graph grows long chains.
+
+    Where it runs: the symmetric, de-duplicated edge list is
+    localCheckpointed (one job) and its row count rides that job as an
+    observed metric.  At or under the engine's broadcast row gate
+    (``table.scan._broadcast_row_limit``: ``ICEBERG_SPARK_BROADCAST_ROW_LIMIT``,
+    default 2,000,000 rows) the edges come to the driver in one Arrow
+    job and the rounds run there as numpy passes over dense vertex
+    indices; the result is an Arrow-backed LocalTableScan, so no Python
+    worker runs.  The driver loop terminates because labels only
+    decrease (a label is always the index of a vertex in the same
+    component, never above the vertex's own) and it stops on the first
+    round that changes nothing, so it is always exact.  Above the gate
+    the rounds are Spark jobs: edge-list joins and keyed mins, all hash
+    shuffles on vertex ids, never quadratic, with localCheckpoint
+    truncating the lineage per round; ``max_iterations`` bounds only
+    these distributed rounds.
+
+    The driver finish takes integral and (binary-collated) string ids,
+    whose Arrow order is Spark's order; other orderable id types always
+    run the distributed rounds.  The output columns take the edge
+    list's id type.  A NULL id is a vertex that takes the smallest
+    cluster_id among its non-NULL neighbors (NULL if it has none) but
+    never passes a label on, because a NULL key joins nothing.
 
     Returns (doc_id, cluster_id) for every vertex that appears in pairs.
     """
+    from ..table.scan import _broadcast_row_limit
     edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
              .union(pairs.select(F.col(id_b).alias("src"),
                                  F.col(id_a).alias("dst")))
              .distinct())
-    edges = edges.localCheckpoint(eager=True)
+    obs = Observation("cc_edges")
+    edges = (edges.observe(obs, F.count(F.lit(1)).alias("n"))
+             .localCheckpoint(eager=True))
+    id_type = edges.schema["src"].dataType
+    if not (isinstance(id_type, T.IntegralType)
+            or id_type == T.StringType()):
+        return _components_in_rounds(edges, max_iterations)
+    limit = _broadcast_row_limit()
+    n = _observed(obs)
+    if n is None:
+        # no metric within the bounded wait: a fetch of at most limit + 1
+        # rows decides the gate, and is the edge list itself when it fits
+        table = edges.limit(limit + 1).toArrow()
+    elif n <= limit:
+        table = edges.toArrow()
+    else:
+        table = None
+    if table is not None and table.num_rows <= limit:
+        return _components_on_driver(edges, table)
+    return _components_in_rounds(edges, max_iterations)
+
+
+def _observed(obs: Observation) -> Optional[int]:
+    """The first metric of an Observation whose action has run, or None
+    when it is absent.  The JVM's getRowOrEmpty waits at most 100 ms,
+    where ``Observation.get`` waits with no bound (a metric that never
+    arrives, e.g. on Spark Connect, would hang the caller)."""
+    jo = getattr(obs, "_jo", None)
+    row = jo.getRowOrEmpty() if jo is not None else None
+    if row is None or not row.isDefined():
+        return None
+    row = row.get()
+    return None if row.isNullAt(0) else row.get(0)
+
+
+def _components_on_driver(edges: DataFrame, table) -> DataFrame:
+    """Min-label + pointer jumping over the fetched edge list (``table``:
+    src/dst, symmetric and distinct) with numpy, as a LocalTableScan."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+    id_type = edges.schema["src"].dataType
+    schema = T.StructType([
+        T.StructField("doc_id", id_type, edges.schema["src"].nullable),
+        T.StructField("cluster_id", id_type, True)])
+    src, dst = table.column("src"), table.column("dst")
+    # dense indices in id order, so the smallest index is the smallest id
+    ids = pc.unique(src.drop_null())
+    ids = ids.take(pc.array_sort_indices(ids))
+    si = pc.fill_null(pc.index_in(src, value_set=ids), -1).to_numpy()
+    di = pc.fill_null(pc.index_in(dst, value_set=ids), -1).to_numpy()
+    both = (si >= 0) & (di >= 0)
+    u, v = si[both], di[both]
+    label = np.arange(len(ids))
+    while True:
+        new = label.copy()
+        np.minimum.at(new, u, label[v])
+        new = new[new]
+        if np.array_equal(new, label):
+            break
+        label = new
+    doc, cluster = ids, ids.take(pa.array(label))
+    if src.null_count:
+        # the NULL vertex: its non-NULL neighbors' smallest cluster
+        near = label[di[(si < 0) & (di >= 0)]]
+        doc = pa.concat_arrays([doc, pa.nulls(1, ids.type)])
+        cluster = pa.concat_arrays([cluster, ids.take(pa.array(
+            [near.min()] if len(near) else [None], pa.int64()))])
+    out = pa.Table.from_arrays([doc, cluster], names=["doc_id", "cluster_id"])
+    return edges.sparkSession.createDataFrame(
+        out.cast(to_arrow_schema(schema)), schema)
+
+
+def _components_in_rounds(edges: DataFrame,
+                          max_iterations: int) -> DataFrame:
+    """The distributed rounds over a checkpointed edge list: one
+    checkpointed Spark round per iteration."""
     labels = (edges.select(F.col("src").alias("id"))
               .distinct()
               .withColumn("label", F.col("id")))
     jump_enabled = False
     prev_changed = None
     # convergence check: labels are monotone non-increasing per vertex
-    # (each round takes a min that includes the old label), so the label
-    # SUM strictly decreases iff ANY label changed.  Comparing sums costs
-    # one agg over the new frame per round — the old shape joined new
-    # labels against old and counted diffs, a full extra |V|-row join
-    # every round (guide §2.4).  decimal(38,0) keeps the sum exact for
-    # any realistic |V| x max-id (no long overflow).
-    # F.sum over ZERO rows is NULL -> None on the driver; an empty pairs
-    # frame (clean corpus, no duplicate pairs) must converge on round 1
-    # with changed_mass == 0 instead of raising on None arithmetic
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)"))).first()[0] or 0
+    # (each round takes a min that includes the old label; a NULL label
+    # counts as the largest), so a round that changes no label is the
+    # fixed point.  The old label rides the keyed min as the min over
+    # the vertex's own row (exactly one per id), so counting changed
+    # vertices needs no join against the previous round and works for
+    # any orderable id type.
     for it in range(max_iterations):
         neighbor = (edges.join(labels, edges.src == labels.id)
-                    .select(F.col("dst").alias("id"), "label"))
-        new_labels = (labels.unionByName(neighbor)
-                      .groupBy("id").agg(F.min("label").alias("label")))
+                    .select(F.col("dst").alias("id"), "label",
+                            F.lit(None).cast(labels.schema["label"]
+                                             .dataType).alias("__old")))
+        new_labels = (labels.withColumn("__old", F.col("label"))
+                      .unionByName(neighbor)
+                      .groupBy("id").agg(F.min("label").alias("label"),
+                                         F.min("__old").alias("__old")))
         if jump_enabled:
             # pointer jumping, label <- label(label): halves remaining
             # path lengths, turning long chains into O(log d) rounds.
@@ -664,37 +761,38 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             # Explicit renames on the right side — dataset-alias
             # self-joins on this lineage trip Spark's attribute
             # resolution (NoSuchElementException at checkpoint time).
+            # A left join keeps a vertex whose label is still NULL.
             jump = new_labels.select(F.col("id").alias("__jid"),
                                      F.col("label").alias("__jlabel"))
             new_labels = (new_labels
-                          .join(jump, F.col("label") == F.col("__jid"))
+                          .join(jump, F.col("label") == F.col("__jid"),
+                                "left")
                           .select("id",
                                   F.least(F.col("label"),
                                           F.col("__jlabel"))
-                                  .alias("label")))
-        # the convergence sum rides the checkpoint job as an observed
+                                  .alias("label"), "__old"))
+        # the changed count rides the checkpoint job as an observed
         # metric (CollectMetrics) instead of a second agg action — one
-        # pass over the new labels per round, not two.  At 100 TB the
-        # removed pass is a full |V|-row scan per iteration; locally it
-        # removes one fixed-latency job per round.  Observation fires on
-        # the eager localCheckpoint's materialization job (verified).
-        from pyspark.sql import Observation
+        # pass over the new labels per round, not two.  It is read with
+        # a bounded wait; when it is absent an explicit agg over the
+        # checkpointed round pays the pass the metric would have saved.
+        changed_col = F.sum(F.when(F.col("label").eqNullSafe(F.col("__old")),
+                                   0).otherwise(1)).alias("c")
         obs = Observation(f"cc_round_{it}")
-        new_labels = new_labels.observe(
-            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        new_labels = new_labels.localCheckpoint(eager=True)
-        new_sum = obs.get["s"] or 0
-        changed_mass = prev_sum - new_sum  # > 0 iff any label changed
-        labels = new_labels
-        prev_sum = new_sum
-        if changed_mass == 0:
+        new_labels = (new_labels.observe(obs, changed_col)
+                      .localCheckpoint(eager=True))
+        changed = _observed(obs)
+        if changed is None:
+            changed = new_labels.agg(changed_col).first()[0]
+        labels = new_labels.drop("__old")
+        if not changed:
             break
-        # adaptive pointer-jumping trigger, now on label-mass decay: a
-        # slowly shrinking per-round decrease means long chains (each
-        # round only the frontier moves), exactly when path-halving pays
+        # adaptive pointer-jumping trigger: a slowly shrinking changed
+        # count means long chains (each round only the frontier moves),
+        # exactly when path-halving pays
         jump_enabled = (prev_changed is not None
-                        and changed_mass * 4 > prev_changed)
-        prev_changed = changed_mass
+                        and changed * 4 > prev_changed)
+        prev_changed = changed
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("label").alias("cluster_id"))
 

@@ -24,6 +24,25 @@ def read_table(spark, name, sf=SF_DIR):
     return spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
 
 
+def components_on_both_paths(pairs, monkeypatch, **kw):
+    """connected_components under an open broadcast gate (driver finish)
+    and a closed one (distributed rounds).  Both must give the same
+    schema and rows; returns {doc_id: cluster_id}."""
+    from iceberg_go_spark.operators.dedup import connected_components
+    out = []
+    for gate in (None, "0"):
+        if gate is None:
+            monkeypatch.delenv("ICEBERG_SPARK_BROADCAST_ROW_LIMIT",
+                               raising=False)
+        else:
+            monkeypatch.setenv("ICEBERG_SPARK_BROADCAST_ROW_LIMIT", gate)
+        df = connected_components(pairs, **kw)
+        rows = df.collect()
+        out.append((df.schema, sorted(map(tuple, rows), key=repr)))
+    assert out[0] == out[1]
+    return dict(out[0][1])
+
+
 # -- shared throwaway PostgreSQL server (live-wire tests) --------------------
 # ONE cluster per pytest session, lazily started; consumers must import
 # THIS module as `tests.conftest` (consistently — a bare

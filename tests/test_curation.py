@@ -1,6 +1,8 @@
 """Corpus-curation operators (operators/curation.py): repetition
 metrics, benchmark decontamination, deterministic stratified sampling."""
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,24 +96,81 @@ def test_pack_sequences_contiguous_fill(spark):
     assert (out[4]["pack_id"], out[4]["pack_offset"]) == (0, 0)
 
 
-def test_connected_components(spark):
-    from iceberg_go_spark.operators import dedup as DD
+def test_connected_components(spark, monkeypatch):
+    from conftest import components_on_both_paths
     # two components: a 4-chain (diameter > 1 forces multiple rounds)
     # and a separate pair; ids chosen so min-label must propagate "up"
     pairs = spark.createDataFrame(
         [(9, 7), (7, 5), (5, 1), (20, 30)], ["id_a", "id_b"])
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in DD.connected_components(pairs).collect()}
+    out = components_on_both_paths(pairs, monkeypatch)
     assert out == {1: 1, 5: 1, 7: 1, 9: 1, 20: 20, 30: 20}
 
 
-def test_connected_components_empty_pairs(spark):
+def test_connected_components_empty_pairs(spark, monkeypatch):
     # a clean corpus yields ZERO duplicate pairs; F.sum over zero rows is
-    # NULL, so the label-sum convergence check must coalesce to 0 instead
-    # of raising TypeError on None arithmetic (ADVICE r9, high)
+    # NULL, so the convergence count must coalesce to 0 instead of
+    # raising TypeError on None arithmetic (ADVICE r9, high)
+    from conftest import components_on_both_paths
     from iceberg_go_spark.operators import dedup as DD
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert DD.connected_components(pairs).collect() == []
+    assert components_on_both_paths(pairs, monkeypatch) == {}
+    # a zero-row edge list passes even a closed gate, so run the
+    # distributed rounds on it directly
+    edges = pairs.select(pairs.id_a.alias("src"), pairs.id_b.alias("dst"))
+    assert DD._components_in_rounds(edges, 50).collect() == []
+
+
+@pytest.mark.parametrize("rows, ddl, want", [
+    # a NULL endpoint: NULL takes its neighbors' cluster, passes none on
+    ([(1, 2), (None, 3), (3, 4)], "id_a long, id_b long",
+     {1: 1, 2: 1, 3: 3, 4: 3, None: 3}),
+    # NULL's label appears while other labels fall: a label-sum check
+    # saw no net change here and stopped one round early (None: 3)
+    ([(None, 3), (3, 1), (7, 6)], "id_a long, id_b long",
+     {1: 1, 3: 1, 6: 6, 7: 6, None: 1}),
+    # a self-loop, duplicate and reversed pairs, int ids
+    ([(1, 1), (2, 1), (1, 2), (2, 1), (5, 5), (6, 5), (5, 6)],
+     "id_a int, id_b int", {1: 1, 2: 1, 5: 5, 6: 5}),
+    # string ids order as strings ("10" < "9"), including non-ASCII
+    ([("9", "10"), ("b", "a"), ("é", "b"), (None, "é")],
+     "id_a string, id_b string",
+     {"9": "10", "10": "10", "a": "a", "b": "a", "é": "a", None: "a"}),
+    # a NULL with only NULL neighbors keeps a NULL cluster, also once
+    # the 64-chain has switched pointer jumping on
+    ([(i, i + 1) for i in range(63)] + [(None, None)],
+     "id_a long, id_b long", {**{i: 0 for i in range(64)}, None: None}),
+    # a date id always runs the distributed rounds
+    ([(datetime.date(2024, 1, 3), datetime.date(2024, 1, 2))],
+     "id_a date, id_b date",
+     {datetime.date(2024, 1, d): datetime.date(2024, 1, 2) for d in (2, 3)}),
+], ids=["null_endpoint", "null_label_appears", "int_self_loop_dup_reversed",
+        "string_ids", "null_only_null_neighbors", "date_ids"])
+def test_connected_components_edge_inputs_match_across_gate(
+        spark, monkeypatch, rows, ddl, want):
+    from conftest import components_on_both_paths
+    from pyspark.sql.types import StructType
+    from iceberg_go_spark.operators.dedup import connected_components
+    pairs = spark.createDataFrame(rows, ddl)
+    assert components_on_both_paths(pairs, monkeypatch) == want
+    # output columns take the id type
+    id_type = StructType.fromDDL(ddl)["id_a"].dataType
+    assert [f.dataType for f in connected_components(pairs).schema] == \
+        [id_type, id_type]
+
+
+def test_connected_components_without_observed_metrics(spark, monkeypatch):
+    """The edge count and each round's changed count ride their
+    checkpoint jobs as observed metrics, read with a bounded wait.  When
+    a metric is absent the gate falls back to a bounded fetch and the
+    rounds to an explicit agg, with the same components."""
+    from conftest import components_on_both_paths
+    from iceberg_go_spark.operators import dedup as DD
+    monkeypatch.setattr(DD, "_observed", lambda obs: None)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)] + [(100, 101)],
+        "id_a long, id_b long")
+    got = components_on_both_paths(chain, monkeypatch, max_iterations=10)
+    assert got == {**{i: 0 for i in range(21)}, 100: 100, 101: 100}
 
 
 def test_scrub_pii(spark):
@@ -502,16 +561,17 @@ def test_dedup_paragraphs_regex_metachar_separator(spark):
     assert out[2].clean_text == "other"
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark,
+                                                       monkeypatch):
     """Pointer jumping: a 64-vertex chain resolves within O(log d)
     rounds — max_iterations=10 must fully converge where plain
-    propagation would need ~63."""
-    from iceberg_go_spark.operators.dedup import connected_components
+    propagation would need ~63 (distributed rounds; the driver finish
+    is exact whatever max_iterations says)."""
+    from conftest import components_on_both_paths
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)] + [(100, 101)],
         "id_a long, id_b long")
-    out = connected_components(chain, max_iterations=10).collect()
-    got = {r.doc_id: r.cluster_id for r in out}
+    got = components_on_both_paths(chain, monkeypatch, max_iterations=10)
     assert all(got[i] == 0 for i in range(64))
     assert got[100] == got[101] == 100
 

@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 
 from iceberg_go_spark.operators import curation as CU
 from iceberg_go_spark.operators import dedup as DD
+from conftest import components_on_both_paths
 
 
 @pytest.mark.parametrize("seed", [7, 23, 99])
-def test_connected_components_vs_union_find(spark, seed):
+def test_connected_components_vs_union_find(spark, monkeypatch, seed):
     rng = random.Random(seed)
     n = 60
     edges = sorted({tuple(sorted(rng.sample(range(1, n + 1), 2)))
@@ -37,9 +38,7 @@ def test_connected_components_vs_union_find(spark, seed):
             for v in members}
 
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in DD.connected_components(pairs).collect()}
-    assert got == want
+    assert components_on_both_paths(pairs, monkeypatch) == want
 
 
 @pytest.mark.parametrize("seed", [3, 41])
