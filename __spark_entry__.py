@@ -1065,8 +1065,9 @@ SELECT * FROM (
 
 
 def iceberg_dv_delete_scan(spark, sf_dir):
-    """Deletion-vector (v3) MoR scan on a year-partitioned table: bitmaps
-    stay serialized driver-side, membership runs vectorized on executors."""
+    """Deletion-vector (v3) MoR scan on a year-partitioned table: the DV
+    positions join the position-delete anti-join, expanded on the driver
+    and broadcast under the row gate."""
     cat = _fixtures(spark, sf_dir)
     t = cat.load_table("db.orders_dv")
     return (t.scan(E.gt_eq("o_totalprice", 1000.0)).to_df(spark)

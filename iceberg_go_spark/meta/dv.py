@@ -381,9 +381,48 @@ def list_deletion_vector_keys(path: str) -> List[str]:
             for meta in r.blobs if meta["type"] == BLOB_TYPE_DV]
 
 
+def read_dv_blobs(path: str, offset: Optional[int] = None,
+                  length: Optional[int] = None,
+                  referenced: Optional[str] = None
+                  ) -> List[Tuple[str, bytes]]:
+    """(referenced data file, serialized DV) pairs of one container:
+    every DV blob its footer lists (a legacy one-entry-per-container
+    manifest entry), or, given the manifest-recorded ``offset`` and
+    ``length`` of a v3 DV entry, the one blob of ``referenced``."""
+    if offset is None:
+        return list(read_deletion_vector_blobs(path).items())
+    return [(referenced, read_dv_blob_slice(path, offset, length))]
+
+
+def dv_positions(blobs):
+    """Expand (referenced data file, serialized DV) pairs into an Arrow
+    table with one row per DV: ``file_path string, pos list<int64>``,
+    its sorted deleted positions.  Exploding ``pos`` gives the
+    position-delete shape.  The positions stay numpy arrays, with no
+    Python object per position and no file path repeated per position.
+    The scan (on the driver under the broadcast row gate, on executors
+    above it) and the changelog all expand blobs here."""
+    import numpy as np
+    import pyarrow as pa
+    files, parts = [], []
+    for fp, raw in blobs:
+        files.append(fp)
+        parts.append(deserialize_dv(raw).to_numpy())
+    offsets = np.zeros(len(parts) + 1, np.int64)
+    np.cumsum([len(p) for p in parts], out=offsets[1:])
+    # list offsets are int32: more than 2**31 positions in one table
+    # raises here instead of wrapping
+    return pa.table({
+        "file_path": pa.array(files, pa.string()),
+        "pos": pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()),
+            pa.array(np.concatenate(parts) if parts
+                     else np.empty(0, np.int64)))})
+
+
 def read_deletion_vector_blobs(path: str) -> Dict[str, bytes]:
-    """Serialized DV blobs by referenced data file — deserialization is
-    deferred to executors (the driver only ships compressed bytes)."""
+    """Serialized DV blobs of a container by referenced data file,
+    resolved through its footer (``dv_positions`` deserializes them)."""
     r = PuffinReader(path)
     out = {}
     for meta in r.blobs:

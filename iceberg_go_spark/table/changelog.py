@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..meta import manifests as M
 from ..meta.metadata import (OP_APPEND, OP_DELETE, OP_OVERWRITE,
                              OP_REPLACE)
-from .scan import local_frame, raw_file_path, read_delete_files
+from ..meta.dv import dv_positions, read_dv_blobs
+from .scan import DV_SCHEMA, raw_file_path, read_delete_files
 
 CHANGE_TYPE = "_change_type"
 CHANGE_ORDINAL = "_change_ordinal"
@@ -82,6 +83,17 @@ def _with_pos(spark: SparkSession, schema, paths: List[str]) -> DataFrame:
                         raw_file_path(F.col("_metadata.file_path")))
             .withColumn("__pos", F.col("_metadata.row_index"))
             .drop("_metadata"))
+
+
+def _dv_deletes(spark: SparkSession, containers) -> Optional[DataFrame]:
+    """(__file, __pos) of every DV blob in the ``containers``' footers,
+    or None when they hold none."""
+    blobs = [b for p in sorted({f.file_path for f in containers})
+             for b in read_dv_blobs(p)]
+    if not blobs:
+        return None
+    return spark.createDataFrame(dv_positions(blobs), DV_SCHEMA).select(
+        F.col("file_path").alias("__file"), F.explode("pos").alias("__pos"))
 
 
 def _eq_key_names(md, delete_file) -> List[str]:
@@ -214,20 +226,10 @@ def changelog(table, spark: SparkSession,
                     .select(F.col("file_path").alias("__file"),
                             F.col("pos").alias("__pos")).distinct())
                 data = data.join(pdels, ["__file", "__pos"], "left_anti")
-            if prior_puffin:
-                from ..meta.dv import (deserialize_dv,
-                                       read_deletion_vector_blobs)
-                pairs = []
-                for f in sorted({f.file_path for f in prior_puffin}):
-                    for fp, raw in read_deletion_vector_blobs(f).items():
-                        pairs.extend((fp, int(pp))
-                                     for pp in deserialize_dv(raw)
-                                     .to_numpy())
-                if pairs:
-                    data = data.join(
-                        local_frame(spark, pairs,
-                                    "__file string, __pos long"),
-                        ["__file", "__pos"], "left_anti")
+            prior_dvs = _dv_deletes(spark, prior_puffin)
+            if prior_dvs is not None:
+                data = data.join(prior_dvs, ["__file", "__pos"],
+                                 "left_anti")
             for f in prior_eq:
                 names = _eq_key_names(md, f)
                 keys = _read_eq_keys(spark, md, f, names)
@@ -253,23 +255,13 @@ def changelog(table, spark: SparkSession,
                 data.join(dels, ["__file", "__pos"], "inner")
                     .drop("__file", "__pos"),
                 "delete", ordinal, snap.snapshot_id))
-        if dv_files:
-            from ..meta.dv import read_deletion_vector_blobs
-            pairs = []
-            for f in dv_files:
-                for fp, raw in read_deletion_vector_blobs(
-                        f.file_path).items():
-                    from ..meta.dv import deserialize_dv
-                    for p in deserialize_dv(raw).to_numpy():
-                        pairs.append((fp, int(p)))
-            if pairs:
-                data = parent_live_with_pos()
-                dels = local_frame(spark, pairs,
-                                   "__file string, __pos long")
-                frames.append(stamp(
-                    data.join(dels, ["__file", "__pos"], "inner")
-                        .drop("__file", "__pos"),
-                    "delete", ordinal, snap.snapshot_id))
+        dels = _dv_deletes(spark, dv_files)
+        if dels is not None:
+            data = parent_live_with_pos()
+            frames.append(stamp(
+                data.join(dels, ["__file", "__pos"], "inner")
+                    .drop("__file", "__pos"),
+                "delete", ordinal, snap.snapshot_id))
         if eq_files:
             data = parent_live_with_pos().drop("__file", "__pos")
             for f in eq_files:

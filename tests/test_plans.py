@@ -320,11 +320,7 @@ def test_zorder_write_prunes_on_both_dimensions(spark):
 
 # plan nodes that run a Python worker over the rows flowing through them
 PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                     "ExistingRDD")
-# the one Python stage merge-on-read keeps: deletion-vector bitmap
-# application (table.scan._apply_deletion_vectors, a mapInPandas over
-# broadcast serialized bitmaps)
-DV_APPLY_STAGE = "MapInPandas"
+                     "MapInArrow", "ExistingRDD")
 
 
 def test_delete_application_runs_without_python_workers(spark, tmp_path,
@@ -332,7 +328,8 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     """Merge-on-read delete application and DML position matching lower
     onto JVM-only plans: the `_metadata.file_path` decode is a native
     expression and the driver-built side tables (partition mapping,
-    lineage map) are LocalTableScans, not PythonRDDs."""
+    lineage map, deletion-vector positions) are LocalTableScans, not
+    PythonRDDs."""
     from pyspark.sql.readwriter import DataFrameWriter
     from conftest import read_table
     from iceberg_go_spark import expressions as E
@@ -368,10 +365,10 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     v3.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
     plans["v3 row-lineage scan"] = plan(
         cat.load_table("db.v3").scan(row_lineage=True).to_df(spark))
-    assert DV_APPLY_STAGE in plans["v3 row-lineage scan"]  # v3: DVs
+    # v3: the deletes are DVs, expanded on the driver under the row gate
+    assert "LocalTableScan [file_path" in plans["v3 row-lineage scan"]
 
-    offenders = {name: [n for n in PYTHON_EVAL_NODES
-                        if n in p and n != DV_APPLY_STAGE]
+    offenders = {name: [n for n in PYTHON_EVAL_NODES if n in p]
                  for name, p in plans.items()}
     assert offenders == {name: [] for name in plans}, offenders
 

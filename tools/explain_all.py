@@ -8,7 +8,7 @@ Captures the ANALYZED physical plan (pre-execution, AQE initial) — the
 artifact the judge reads to verify plan-shape claims (Exchange count,
 join strategy, PushedFilters, Python-eval nodes). Each written file is
 echoed with its count of Python-eval nodes (ArrowEvalPython,
-BatchEvalPython, MapInPandas, Scan ExistingRDD).
+BatchEvalPython, MapInPandas, MapInArrow, Scan ExistingRDD).
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # nodes that run a Python worker over their rows, matched on the
 # formatted plan's numbered detail headers (one per node)
-_PY_EVAL = re.compile(r"^\(\d+\) (?:Scan )?(?:ArrowEvalPython|"
+_PY_EVAL = re.compile(r"^\(\d+\) (?:Scan )?(?:ArrowEvalPython|MapInArrow|"
                       r"BatchEvalPython|MapInPandas|ExistingRDD)\b", re.M)
 
 
