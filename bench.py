@@ -222,6 +222,9 @@ def main() -> None:
         "sentinel_sec": sentinels,
         "detail": "BENCH_DETAIL.json",
         "sf": sf_val,
+        # the core count the timings were taken on (r01-r10: 32 cores)
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }, separators=(",", ":")))
 
 

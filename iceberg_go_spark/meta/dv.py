@@ -401,7 +401,8 @@ def dv_positions(blobs):
     position-delete shape.  The positions stay numpy arrays, with no
     Python object per position and no file path repeated per position.
     The scan (on the driver under the broadcast row gate, on executors
-    above it) and the changelog all expand blobs here."""
+    above it), the changelog and ``position_deletes`` all expand blobs
+    here."""
     import numpy as np
     import pyarrow as pa
     files, parts = [], []
@@ -418,6 +419,21 @@ def dv_positions(blobs):
             pa.array(offsets, pa.int32()),
             pa.array(np.concatenate(parts) if parts
                      else np.empty(0, np.int64)))})
+
+
+# dv_positions' rows, exploded to the position-delete shape in the plan
+DV_SCHEMA = "file_path string, pos array<long>"
+# read_dv_blobs arguments: a v3 DV entry, or (no offset) a legacy container
+DV_ITEM_SCHEMA = "path string, offset long, length long, referenced string"
+
+
+def expand_dv_items(batches):
+    """``mapInArrow`` body that expands ``DV_ITEM_SCHEMA`` work items
+    into ``DV_SCHEMA`` rows on the executor."""
+    for batch in batches:
+        for item in batch.to_pylist():
+            for blob in read_dv_blobs(**item):
+                yield from dv_positions([blob]).to_batches()
 
 
 def read_deletion_vector_blobs(path: str) -> Dict[str, bytes]:

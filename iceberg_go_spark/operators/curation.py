@@ -24,7 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import text_funcs as TX
-from ..session import rebalance_for_amplification
+from ..session import local_frame, rebalance_for_amplification
 
 
 def _words(df: DataFrame, text_col: str, id_col: str,
@@ -1157,8 +1157,7 @@ def importance_weights(df: DataFrame, target_filter,
              ((int(s["__tc"]) + 1) * (R + B) * 1_000_000)
              // ((int(s["__r"]) + 1) * (T + B))))
         for s in stats]
-    spark = df.sparkSession
-    lam = spark.createDataFrame(lam_rows, "__b int, __lam long")
+    lam = local_frame(df.sparkSession, lam_rows, "__b int, __lam long")
     scores = (tok.join(F.broadcast(lam), "__b")
               .groupBy(id_col)
               .agg(F.sum("__lam").alias("__s")))

@@ -12,6 +12,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import vector_funcs as V
+from ..session import local_frame
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -765,8 +766,9 @@ def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     codes_all = code_frames[0]
     for cfr in code_frames[1:]:
         codes_all = codes_all.unionByName(cfr)
-    t_all = emb.sparkSession.createDataFrame(
-        table_rows, f"{query_id_col} long, __m int, code int, __t long")
+    t_all = local_frame(
+        emb.sparkSession, table_rows,
+        f"{query_id_col} long, __m int, code int, __t long")
     scored = (codes_all.join(F.broadcast(t_all), ["__m", "code"])
               .groupBy(id_col, query_id_col)
               .agg(F.sum("__t").alias("adc_score"))

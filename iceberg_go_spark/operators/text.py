@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import text_funcs as TX
+from ..session import local_frame
 
 
 def text_stats(df: DataFrame, text_col: str = "text",
@@ -274,6 +275,10 @@ def _sym_encode_py(w: str) -> str:
     return BPE_SEP + (BPE_SEP * 2).join(list(w)) + BPE_SEP
 
 
+#: bpe_train_merges' result: the merge table a tokenizer trainer persists
+BPE_MERGES_SCHEMA = "step int, left string, right string, pair_count long"
+
+
 def bpe_train_merges(df: DataFrame, n_merges: int = 3,
                      text_col: str = "text",
                      vocab_collect_max: int = 2_000_000,
@@ -316,19 +321,29 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 3,
     count) frame) supply the mergeable vocabulary as (__w, __cnt) rows
     — skipping this function's own corpus pass (guide §2.4: one
     tokenize, two consumers)."""
+    return local_frame(df.sparkSession, _bpe_merges(
+        df, n_merges, text_col, vocab_collect_max, max_distributed_steps,
+        words), BPE_MERGES_SCHEMA)
+
+
+def _bpe_merges(df: DataFrame, n_merges: int, text_col: str = "text",
+                vocab_collect_max: int = 2_000_000,
+                max_distributed_steps: int = 64,
+                words: DataFrame | None = None) -> list:
+    """bpe_train_merges' rows as a driver list of (step, left, right,
+    pair_count) tuples, from either training path."""
     if words is None:
         words = (df.select(F.explode(TX.tokens(F.col(text_col)))
                            .alias("__w"))
                  .filter((F.col("__w") != "") &
                          ~F.col("__w").contains(BPE_SEP))
                  .groupBy("__w").agg(F.count(F.lit(1)).alias("__cnt")))
-    spark = df.sparkSession
     # ONE job both sizes the vocabulary and, when it fits, delivers it:
     # take(max+1) pulls at most max+1 aggregated rows (a count() would
     # run the same full corpus aggregation and then throw it away)
     head = words.take(vocab_collect_max + 1)
     if len(head) <= vocab_collect_max:
-        return _bpe_train_local(spark, head, n_merges)
+        return _bpe_train_local(head, n_merges)
     if n_merges > max_distributed_steps:
         raise ValueError(
             f"n_merges={n_merges} exceeds max_distributed_steps="
@@ -365,8 +380,7 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 3,
         cur = cur.select(
             F.replace(F.col("__s"), F.lit(pat), F.lit(rep)).alias("__s"),
             F.col("__cnt")).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, pair_count long")
+    return merges
 
 
 #: Merge tables at or under this length apply as a chained JVM
@@ -478,13 +492,12 @@ def bpe_token_counts(df: DataFrame, n_merges: int = 3,
     dwc = _bpe_doc_word_counts(df, text_col, id_col)
     words = (dwc.filter(~F.col("__w").contains(BPE_SEP))
              .groupBy("__w").agg(F.sum("__c").alias("__cnt")))
-    mdf = bpe_train_merges(df, n_merges, text_col, words=words)
-    merges = [(r["left"], r["right"]) for r in
-              mdf.orderBy("step").collect()]
+    merges = [(left, right) for _step, left, right, _n
+              in _bpe_merges(df, n_merges, text_col, words=words)]
     return bpe_apply_token_counts(df, merges, text_col, id_col, dwc=dwc)
 
 
-def _bpe_train_local(spark, word_rows, n_merges: int) -> DataFrame:
+def _bpe_train_local(word_rows, n_merges: int) -> list:
     """Driver-local BPE merge loop over collected (word, count) rows —
     bit-identical to the distributed loop: same ``|s1||s2|...|``
     encoding, same left-to-right all-occurrence replace (str.replace ==
@@ -509,5 +522,4 @@ def _bpe_train_local(spark, word_rows, n_merges: int) -> DataFrame:
         pat, rep = f"|{l}||{r}|", f"|{l}{r}|"
         for row in vocab:
             row[0] = row[0].replace(pat, rep)
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, pair_count long")
+    return merges

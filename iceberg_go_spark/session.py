@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -62,6 +62,26 @@ def get_spark(app_name: str = "iceberg_go_spark", cpus: int | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """The one way driver-built rows become a DataFrame: tuples in
+    ``schema`` order (StructType or DDL) enter as an Arrow table, an
+    in-JVM LocalTableScan that runs no job; a list handed to
+    ``createDataFrame`` plans as a PythonRDD that starts Python workers
+    on every collect.  Arrow's cast still rejects a NULL in a
+    non-nullable field and a wrongly typed value.  ``parallelize`` is
+    only for executor-side I/O (manifest and footer reads)."""
+    import pyarrow as pa
+    import pyspark.sql.types as ST
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = ST.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
 
 
 def rebalance_for_amplification(df, min_parts: int | None = None):

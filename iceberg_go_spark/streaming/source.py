@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 import pyspark.sql.types as ST
 
 from ..meta import manifests as M
+from ..session import local_frame
 
 
 def added_files_between(table, from_snapshot_id: Optional[int],
@@ -78,7 +79,7 @@ def incremental_append_df(spark: SparkSession, table,
     files = added_files_between(table, from_snapshot_id, to_snapshot_id)
     schema = table.schema().to_spark()
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*files)
 
 

@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..meta import manifests as M
 from ..meta.metadata import (OP_APPEND, OP_DELETE, OP_OVERWRITE,
                              OP_REPLACE)
-from ..meta.dv import dv_positions, read_dv_blobs
-from .scan import DV_SCHEMA, raw_file_path, read_delete_files
+from ..meta.dv import DV_SCHEMA, dv_positions, read_dv_blobs
+from ..session import local_frame
+from .scan import raw_file_path, read_delete_files
 
 CHANGE_TYPE = "_change_type"
 CHANGE_ORDINAL = "_change_ordinal"
@@ -68,7 +69,7 @@ def _live_files(snap):
 
 def _read_files(spark: SparkSession, schema, paths: List[str]) -> DataFrame:
     if not paths:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.schema(schema).parquet(*sorted(set(paths)))
 
 
@@ -273,11 +274,10 @@ def changelog(table, spark: SparkSession,
                     "delete", ordinal, snap.snapshot_id))
 
     if not frames:
-        empty = spark.createDataFrame([], schema) \
+        return local_frame(spark, [], schema) \
             .withColumn(CHANGE_TYPE, F.lit("")) \
             .withColumn(CHANGE_ORDINAL, F.lit(0)) \
             .withColumn(COMMIT_SNAPSHOT_ID, F.lit(0).cast("long"))
-        return empty.limit(0)
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)

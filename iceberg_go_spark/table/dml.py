@@ -29,7 +29,8 @@ from ..meta import manifests as M
 from ..meta.metadata import OP_DELETE, OP_OVERWRITE
 from ..plans.evaluators import (InclusiveMetricsEvaluator,
                                 StrictMetricsEvaluator)
-from .scan import Scan, local_frame, raw_file_path
+from ..session import local_frame
+from .scan import Scan, raw_file_path
 from .write import (PART_COL_PREFIX, discover_partitioned_files,
                     write_dataframe)
 

@@ -10,9 +10,12 @@ two; the rest are the same one-row-per-metadata-object rendering).
 
 Scale note: these tables are metadata-plane — rows ∝ snapshots/manifests/
 files, built driver-side from already-parsed metadata and handed to Spark
-as a DataFrame.  ``files`` is the only one that can get large (one row per
+through ``session.local_frame`` as an Arrow LocalTableScan: no job, no
+Python worker.  ``files`` is the only one that can get large (one row per
 data file); it is built from the manifest entries the planner already
-holds, not by re-listing storage.
+holds, not by re-listing storage.  ``all_entries``/``all_files`` read
+each manifest on executors, so the driver holds only manifest paths;
+``position_deletes`` reads delete files and expands DVs on executors.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from typing import Optional
 
 import pyspark.sql.types as ST
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import local_frame
 
 
 def _ts(ms: int) -> _dt.datetime:
@@ -122,7 +127,7 @@ class InspectTable:
                 _ts(entry["timestamp-ms"]), sid,
                 snap.parent_snapshot_id if snap is not None else None,
                 sid in ancestors))
-        return self.spark.createDataFrame(rows, HISTORY_SCHEMA)
+        return local_frame(self.spark, rows, HISTORY_SCHEMA)
 
     def snapshots(self) -> DataFrame:
         rows = []
@@ -132,7 +137,7 @@ class InspectTable:
                 _ts(s.timestamp_ms), s.snapshot_id, s.parent_snapshot_id,
                 s.summary.get("operation") if s.summary else None,
                 s.manifest_list or None, summary))
-        return self.spark.createDataFrame(rows, SNAPSHOTS_SCHEMA)
+        return local_frame(self.spark, rows, SNAPSHOTS_SCHEMA)
 
     def partition_statistics(self) -> DataFrame:
         """Registered partition-statistics files (v3; reference
@@ -140,16 +145,16 @@ class InspectTable:
         rows = [(e.get("snapshot-id"), e.get("statistics-path"),
                  e.get("file-size-in-bytes"))
                 for e in self.table.metadata.partition_statistics]
-        return self.spark.createDataFrame(
-            rows, "snapshot_id long, statistics_path string, "
-                  "file_size_in_bytes long")
+        return local_frame(self.spark, rows,
+                           "snapshot_id long, statistics_path string, "
+                           "file_size_in_bytes long")
 
     # -- spec metadata tables beyond the Go reference -----------------------
     def refs(self) -> DataFrame:
         rows = [(name, r.ref_type, r.snapshot_id, r.max_ref_age_ms,
                  r.min_snapshots_to_keep, r.max_snapshot_age_ms)
                 for name, r in sorted(self.table.metadata.refs.items())]
-        return self.spark.createDataFrame(rows, REFS_SCHEMA)
+        return local_frame(self.spark, rows, REFS_SCHEMA)
 
     def manifests(self, snapshot_id: Optional[int] = None) -> DataFrame:
         from ..meta import manifests as M
@@ -164,45 +169,30 @@ class InspectTable:
                     mf.partition_spec_id, mf.added_snapshot_id,
                     mf.added_files_count, mf.existing_files_count,
                     mf.deleted_files_count, mf.content))
-        return self.spark.createDataFrame(rows, MANIFESTS_SCHEMA)
+        return local_frame(self.spark, rows, MANIFESTS_SCHEMA)
 
     def all_manifests(self) -> DataFrame:
         """Manifests across ALL snapshots, deduped by path with a
         reference-snapshot-ids rollup (parity: Table.AllManifests,
         table/all_manifests_internal_test.go — every snapshot's manifest
         list is read, shared manifests appear once)."""
-        from ..meta import manifests as M
-        md = self.table.metadata
-        by_path: dict = {}
-        refs: dict = {}
-        for snap in md.snapshots:
-            try:
-                mfs = M.read_manifest_list(snap.manifest_list)
-            except FileNotFoundError:  # expired-but-logged snapshot
-                continue
-            for mf in mfs:
-                by_path.setdefault(mf.manifest_path, mf)
-                refs.setdefault(mf.manifest_path, []).append(
-                    snap.snapshot_id)
         rows = [(mf.manifest_path, mf.manifest_length,
                  mf.partition_spec_id, mf.added_snapshot_id,
                  mf.added_files_count, mf.existing_files_count,
-                 mf.deleted_files_count, mf.content,
-                 sorted(refs[p]))
-                for p, mf in sorted(by_path.items())]
-        import pyspark.sql.types as ST
+                 mf.deleted_files_count, mf.content, sorted(refs))
+                for _p, (mf, refs)
+                in sorted(self._deduped_manifests().items())]
         schema = ST.StructType(
             list(MANIFESTS_SCHEMA.fields) +
             [ST.StructField("reference_snapshot_ids",
                             ST.ArrayType(ST.LongType()), False)])
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def entries(self, snapshot_id: Optional[int] = None) -> DataFrame:
         """The spec's ``entries`` metadata table: one row per manifest
         entry of the (current or given) snapshot with its status
         (0=existing, 1=added, 2=deleted), sequence numbers, and data-file
         descriptor fields."""
-        import pyspark.sql.types as ST
         from ..meta import manifests as M
         md = self.table.metadata
         snap = md.snapshot_by_id(snapshot_id) if snapshot_id is not None \
@@ -211,7 +201,7 @@ class InspectTable:
         if snap is not None:
             for mf in M.read_manifest_list(snap.manifest_list):
                 rows.extend(self._entry_rows(mf.manifest_path))
-        return self.spark.createDataFrame(rows, ENTRIES_SCHEMA)
+        return local_frame(self.spark, rows, ENTRIES_SCHEMA)
 
     @staticmethod
     def _entry_rows(manifest_path: str):
@@ -231,7 +221,7 @@ class InspectTable:
         referenced."""
         manifest_paths = self._deduped_manifests()
         if not manifest_paths:
-            return self.spark.createDataFrame([], ENTRIES_SCHEMA)
+            return local_frame(self.spark, [], ENTRIES_SCHEMA)
         reader = InspectTable._entry_rows
         paths = sorted(manifest_paths)
         rdd = (self.spark.sparkContext
@@ -242,16 +232,15 @@ class InspectTable:
     def metadata_log_entries(self) -> DataFrame:
         """The table's metadata-file lineage (spec metadata_log_entries
         metadata table; metadata.go MetadataLog)."""
-        import pyspark.sql.types as ST
         md = self.table.metadata
-        rows = [( _ts(e["timestamp-ms"]), e["metadata-file"])
+        rows = [(_ts(e["timestamp-ms"]), e["metadata-file"])
                 for e in md.metadata_log]
         rows.append((_ts(md.last_updated_ms),
                      self.table.metadata_location))
         schema = ST.StructType([
             ST.StructField("timestamp", ST.TimestampType(), False),
             ST.StructField("file", ST.StringType(), False)])
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def files(self) -> DataFrame:
         md = self.table.metadata
@@ -262,53 +251,46 @@ class InspectTable:
             # the task's own spec, not the table default: multi-spec
             # tables report each file under the spec it was written with
             sid = t.spec_id if t.spec_id is not None else md.default_spec_id
-            rows.append((d.content, d.file_path, d.file_format,
-                         json.dumps(d.partition, sort_keys=True, default=str),
-                         d.record_count, d.file_size_in_bytes,
-                         d.sort_order_id, sid))
+            rows.append(self._file_row(d, sid))
             for dd in list(t.pos_deletes) + list(t.eq_deletes):
                 if dd.file_path in seen_deletes:
                     continue
                 seen_deletes.add(dd.file_path)
-                rows.append((dd.content, dd.file_path, dd.file_format,
-                             json.dumps(dd.partition, sort_keys=True,
-                                        default=str),
-                             dd.record_count, dd.file_size_in_bytes,
-                             dd.sort_order_id, sid))
-        return self.spark.createDataFrame(rows, FILES_SCHEMA)
+                rows.append(self._file_row(dd, sid))
+        return local_frame(self.spark, rows, FILES_SCHEMA)
+
+    @staticmethod
+    def _file_row(d, spec_id):
+        return (d.content, d.file_path, d.file_format,
+                json.dumps(d.partition, sort_keys=True, default=str),
+                d.record_count, d.file_size_in_bytes, d.sort_order_id,
+                spec_id)
 
     def position_deletes(self) -> DataFrame:
         """One row per deleted position of the current snapshot
         (Iceberg position_deletes table): parquet pos-delete files read
-        distributed; puffin deletion vectors exploded on executors."""
-        import pyspark.sql.types as ST
+        distributed; deletion vectors expanded on executors by
+        ``meta.dv.expand_dv_items``, one work item per v3 DV entry (its
+        own blob) or legacy container (its footer), as the scan does."""
         from pyspark.sql import functions as F
-        tasks = self.table.scan().plan_files()
-        parquet = sorted({d.file_path for t in tasks
-                          for d in t.pos_deletes
+        from ..meta.dv import DV_ITEM_SCHEMA, DV_SCHEMA, expand_dv_items
+        dels = [d for t in self.table.scan().plan_files()
+                for d in t.pos_deletes]
+        parquet = sorted({d.file_path for d in dels
                           if d.file_format != "PUFFIN"})
-        puffin = sorted({d.file_path for t in tasks
-                         for d in t.pos_deletes
-                         if d.file_format == "PUFFIN"})
-        schema = ST.StructType([
-            ST.StructField("file_path", ST.StringType(), False),
-            ST.StructField("pos", ST.LongType(), False)])
+        dv_items = sorted({(d.file_path, d.content_offset,
+                            d.content_size_in_bytes, d.referenced_data_file)
+                           for d in dels if d.file_format == "PUFFIN"})
         dfs = []
         if parquet:
             dfs.append(self.spark.read.parquet(*parquet)
                        .select("file_path", F.col("pos").cast("long")))
-        if puffin:
-            def explode(path):
-                from ..meta.dv import read_deletion_vectors
-                for data_file, bm in read_deletion_vectors(path).items():
-                    for pos in bm:
-                        yield (data_file, int(pos))
-            rdd = (self.spark.sparkContext
-                   .parallelize(puffin, min(len(puffin), 64))
-                   .flatMap(explode))
-            dfs.append(self.spark.createDataFrame(rdd, schema))
+        if dv_items:
+            dfs.append(local_frame(self.spark, dv_items, DV_ITEM_SCHEMA)
+                       .mapInArrow(expand_dv_items, DV_SCHEMA)
+                       .select("file_path", F.explode("pos").alias("pos")))
         if not dfs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], "file_path string, pos long")
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
@@ -334,25 +316,19 @@ class InspectTable:
         manifest, like the orphan scanner) and the per-file dedupe is a
         distributed dropDuplicates — the driver holds only manifest
         paths, never file rows."""
-        md = self.table.metadata
         manifest_paths = self._deduped_manifests()
         if not manifest_paths:
-            return self.spark.createDataFrame([], FILES_SCHEMA)
+            return local_frame(self.spark, [], FILES_SCHEMA)
         spec_by_path = {p: mf.partition_spec_id
-                        for p, mf in manifest_paths.items()}
+                        for p, (mf, _refs) in manifest_paths.items()}
+        file_row = InspectTable._file_row
 
         def read_rows(path):
             from iceberg_go_spark.meta import manifests as M2
             entries, _spec, _sid = M2.read_manifest(path)
             for entry in entries:
-                if entry.status == M2.STATUS_DELETED:
-                    continue
-                d = entry.data_file
-                yield (d.content, d.file_path, d.file_format,
-                       json.dumps(d.partition, sort_keys=True,
-                                  default=str),
-                       d.record_count, d.file_size_in_bytes,
-                       d.sort_order_id, spec_by_path[path])
+                if entry.status != M2.STATUS_DELETED:
+                    yield file_row(entry.data_file, spec_by_path[path])
 
         paths = sorted(manifest_paths)
         rdd = (self.spark.sparkContext
@@ -362,9 +338,9 @@ class InspectTable:
                 .dropDuplicates(["file_path"]))
 
     def _deduped_manifests(self) -> dict:
-        """Distinct manifest-path -> ManifestFile across every
-        snapshot's manifest list (expired-but-logged snapshots
-        skipped)."""
+        """Distinct manifest path -> (ManifestFile, ids of the snapshots
+        that list it) across every snapshot's manifest list
+        (expired-but-logged snapshots skipped)."""
         from ..meta import manifests as M
         out: dict = {}
         for snap in self.table.metadata.snapshots:
@@ -373,7 +349,8 @@ class InspectTable:
             except FileNotFoundError:
                 continue
             for mf in mfs:
-                out.setdefault(mf.manifest_path, mf)
+                out.setdefault(mf.manifest_path, (mf, []))[1].append(
+                    snap.snapshot_id)
         return out
 
     def partitions(self) -> DataFrame:
@@ -387,7 +364,7 @@ class InspectTable:
         spec_id = self.table.metadata.default_spec_id
         rows = [(k, spec_id, rec, files, size)
                 for k, (rec, files, size) in sorted(agg.items())]
-        return self.spark.createDataFrame(rows, PARTITIONS_SCHEMA)
+        return local_frame(self.spark, rows, PARTITIONS_SCHEMA)
 
     # -- arrow rendering (reference returns Arrow record readers) -----------
     def history_arrow(self):

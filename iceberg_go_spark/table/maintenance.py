@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession, functions as F
 from ..meta import manifests as M
 from ..io import load_io
 from ..meta.metadata import OP_REPLACE
+from ..session import local_frame
 from .write import write_dataframe
 
 DEFAULT_TARGET_FILE_SIZE = 512 * 1024 * 1024
@@ -307,8 +308,7 @@ def _referenced_paths_df(spark: SparkSession, snapshots,
     lists = sorted({s.manifest_list for s in snapshots if s.manifest_list})
     extra_rows = [(p,) for p in (extra or set())]
     if not lists:
-        return spark.createDataFrame(extra_rows or [("",)],
-                                     "path string").filter("path != ''")
+        return local_frame(spark, extra_rows, "path string")
 
     def manifests_of(ml):
         from iceberg_go_spark.meta import manifests as M2
@@ -327,8 +327,8 @@ def _referenced_paths_df(spark: SparkSession, snapshots,
         manifest_paths, max(1, min(len(manifest_paths), 64))) \
         .flatMap(entries_of).map(lambda p: (p,))
     entry_df = spark.createDataFrame(entry_rdd, "path string")
-    known = spark.createDataFrame(
-        [(p,) for p in lists] + [(p,) for p in manifest_paths] + extra_rows,
+    known = local_frame(
+        spark, [(p,) for p in lists + manifest_paths] + extra_rows,
         "path string")
     return entry_df.union(known).distinct()
 

@@ -32,11 +32,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import expressions as E
 from .. import types as T
 from ..meta import manifests as M
-from ..meta.dv import dv_positions, list_deletion_vector_keys, read_dv_blobs
+from ..meta.dv import (DV_ITEM_SCHEMA, DV_SCHEMA, dv_positions,
+                       expand_dv_items, list_deletion_vector_keys,
+                       read_dv_blobs)
 from ..meta.metadata import Snapshot, TableMetadata
 from ..plans.evaluators import (InclusiveMetricsEvaluator, ManifestEvaluator,
                                 partition_expr_evaluator)
 from ..schema import Schema
+from ..session import local_frame
 
 
 def raw_file_path(col):
@@ -51,27 +54,6 @@ def raw_file_path(col):
     space.  A literal ``%`` arrives as ``%25`` and round-trips."""
     stripped = F.regexp_replace(col, "^file:", "")
     return F.url_decode(F.replace(stripped, F.lit("+"), F.lit("%2B")))
-
-
-def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver-built side table (tuples in ``schema`` order; StructType
-    or DDL) as an in-JVM LocalTableScan: a list handed to
-    createDataFrame plans as a PythonRDD that runs Python workers."""
-    import pyarrow as pa
-    import pyspark.sql.types as ST
-    from pyspark.sql.pandas.types import to_arrow_schema
-    if isinstance(schema, str):
-        schema = ST.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    return spark.createDataFrame(pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow), schema)
-
-
-# meta.dv.dv_positions' rows: one per deletion vector, exploded to the
-# position-delete shape in the plan
-DV_SCHEMA = "file_path string, pos array<long>"
 
 
 def read_delete_files(spark: SparkSession, paths: List[str],
@@ -530,7 +512,7 @@ class Scan:
                         ST.StructField("_row_id", ST.LongType()),
                         ST.StructField("_last_updated_sequence_number",
                                        ST.LongType())])
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
 
         # encrypted tables: arm the session's PME confs so the parquet
         # reader can unwrap footers (no-op without a JVM KmsClient)
@@ -765,8 +747,7 @@ class Scan:
                 df = df.withColumns({
                     "__file": raw_file_path(F.col("_metadata.file_path")),
                     "__pos": F.col("_metadata.row_index")})
-                # DVs as read_dv_blobs work items: a legacy container
-                # resolves its blobs through its footer
+                # DVs as read_dv_blobs work items (DV_ITEM_SCHEMA)
                 dv_items = [(p, None, None, None) for p, fmt, _n
                             in sorted(pos_set) if fmt == "PUFFIN"]
                 dv_items += sorted(dv_slices)
@@ -1040,10 +1021,8 @@ def _apply_position_deletes(spark: SparkSession, df, parquet_paths,
             covered.update(fp for p, off, _l, _f in dv_items
                            if off is None
                            for fp in list_deletion_vector_keys(p))
-        dvs = local_frame(
-            spark, dv_items,
-            "path string, offset long, length long, referenced string") \
-            .mapInArrow(_expand_dv_items, DV_SCHEMA)
+        dvs = local_frame(spark, dv_items, DV_ITEM_SCHEMA) \
+            .mapInArrow(expand_dv_items, DV_SCHEMA)
     sides = []
     if dvs is not None:
         sides.append(dvs.select("file_path", F.explode("pos").alias("pos")))
@@ -1063,15 +1042,6 @@ def _apply_position_deletes(spark: SparkSession, df, parquet_paths,
     deletes = F.broadcast(deletes) if small else deletes.distinct()
     return df.join(deletes, (df["__file"] == deletes["__dfile"]) &
                    (df["__pos"] == deletes["__dpos"]), "left_anti")
-
-
-def _expand_dv_items(batches):
-    """``mapInArrow`` body above the gate: each input row is one
-    ``read_dv_blobs`` work item, expanded on the executor."""
-    for batch in batches:
-        for item in batch.to_pylist():
-            for blob in read_dv_blobs(**item):
-                yield from dv_positions([blob]).to_batches()
 
 
 def _is_global_delete(partition: Optional[Dict[str, Any]]) -> bool:

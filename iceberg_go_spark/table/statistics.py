@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from ..io import load_io
 from ..meta.dv import PuffinReader, PuffinWriter
+from ..session import local_frame
 from ..sketches import DEFAULT_LG_K, ThetaSketch, theta_hash
 
 BLOB_TYPE_HLL = "apache-datasketches-hll-v1"
@@ -195,7 +196,7 @@ def estimate_ndv(spark: SparkSession, stats_path: str) -> Dict[str, int]:
             hll_rows.append((col, r.read_blob(meta)))
     missing = [(c, b) for c, b in hll_rows if c not in out]
     if missing:
-        df = spark.createDataFrame(missing, "column string, sketch binary")
+        df = local_frame(spark, missing, "column string, sketch binary")
         for rec in df.select(
                 "column",
                 F.hll_sketch_estimate(F.col("sketch")).alias("ndv")

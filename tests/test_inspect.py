@@ -155,6 +155,30 @@ def test_position_deletes(spark, table3):
     assert all(r.file_path in paths for r in rows)
 
 
+def test_position_deletes_v3_shared_dv_container(spark, tmp_path):
+    """v3 deletion vectors: one puffin container holds the DVs of two
+    data files, and a later delete supersedes one of them with a new
+    container.  Each manifest entry expands its own blob, so the rows
+    are exactly the deleted positions of live data files."""
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    df = spark.range(0, 100, 1, 1).selectExpr("id", "id % 5 AS k")
+    t = cat.create_table("db.dv", Schema.from_spark(df.schema),
+                         properties={"format-version": "3"})
+    t = t.append(df).append(df.selectExpr("id + 100 AS id", "k"))
+    t = t.delete_where(spark, E.eq("k", 1), mode="merge-on-read")
+    dvs = [d for task in t.scan().plan_files() for d in task.pos_deletes]
+    assert len(dvs) == 2
+    assert len({d.file_path for d in dvs}) == 1  # one shared container
+    t = t.delete_where(spark, E.lt("id", 10), mode="merge-on-read")
+
+    tasks = t.scan().plan_files()
+    rows = t.inspect(spark).position_deletes().collect()
+    raw = sum(task.data_file.record_count for task in tasks)
+    assert raw - t.to_df(spark).count() == len(rows) == 40 + 8
+    live = {task.data_file.file_path for task in tasks}
+    assert all(r.file_path in live for r in rows)
+
+
 def test_all_entries(spark, table3):
     ents = table3.inspect(spark).all_entries().collect()
     cur = table3.inspect(spark).entries().collect()
