@@ -2335,17 +2335,12 @@ def kmeans_topic_clusters(spark, sf_dir):
     return SIM.kmeans_cluster_profile(emb, k=8, iters=2)
 
 
-def _kmeans_sql(k: int = 8, final: str | None = None) -> str:
+def _kmeans_sql(k: int = 8) -> str:
     # every aggregate output is cast ::BIGINT: DuckDB SUM(BIGINT) yields
-    # HUGEINT, and a dtype-audit of all 132 oracles showed the ONLY two
-    # HUGEINT output columns were exactly the two driver-red rows
-    # (sum_ids here and in kmeans_members_profile) — same serialization
-    # divergence class the r7 ::BIGINT on sum_cos_e6 closed.  Values are
+    # HUGEINT, which result hashers serialize differently from BIGINT (an
+    # un-cast sum_ids here made this oracle's rows mismatch;
+    # tests/test_plans.py locks the rule for every oracle).  Values are
     # unchanged (sums are far below 2^63); only the declared type moves.
-    final = final or """
-SELECT cluster, COUNT(*) AS n_members, SUM(vec_id)::BIGINT AS sum_ids,
-       SUM(cos_e6)::BIGINT AS sum_cos_e6
-FROM a1 GROUP BY cluster"""
     cos0 = V.quantized_cosine_e6_sql("v.qq", "c.csum")
     return f"""
 WITH q AS (SELECT vec_id, {V.quantize_sql('embedding')} AS qq
@@ -2379,285 +2374,9 @@ a1 AS (
                               ORDER BY {cos0} DESC,
                                        c.cluster) AS rn
     FROM q v CROSS JOIN c1 c) WHERE rn = 1)
-{final}
-"""
-
-
-def kmeans_members_profile(spark, sf_dir):
-    """kmeans_topic_clusters WITHOUT the cosine column — (cluster,
-    n_members, sum_ids) only.  Diagnostic split (VERDICT r8 #1a): the
-    r5-r8 driver hash mismatch is isolated by elimination to the summed
-    per-vector cosine_e6 values; this row pins the ASSIGNMENT half of
-    the output so the isolation is visible in the artifact itself
-    (expected green while kmeans_cosine_profile carries the red)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    return (SIM.kmeans_cluster_profile(emb, k=8, iters=2)
-            .select("cluster", "n_members", "sum_ids"))
-
-
-def kmeans_cosine_profile(spark, sf_dir):
-    """The OTHER half of the kmeans_topic_clusters split (VERDICT r8
-    #1a): per-cluster summed micro-cosines only.  If the r5-r8 driver
-    divergence is really in the cosine values, THIS row is red while
-    kmeans_members_profile stays green."""
-    emb = _read(spark, sf_dir, "embeddings")
-    return (SIM.kmeans_cluster_profile(emb, k=8, iters=2)
-            .select("cluster", "sum_cos_e6"))
-
-
-def _kmeans_checksum(spark, sf_dir, mod: int):
-    """Row-count side channel: emits (total sum of cosine_e6 over the
-    final kmeans assignment, mod ``mod``) + 1 CONSTANT rows.  The
-    CORRECTNESS artifact records spark_rows and oracle_rows separately,
-    so when the cosine sums diverge in the driver env the artifact
-    itself carries both engines' checksums — two coprime moduli (8191,
-    7919) CRT-reconstruct the difference up to ~64.9M."""
-    emb = _read(spark, sf_dir, "embeddings")
-    tot = (SIM.kmeans_cluster_profile(emb, k=8, iters=2)
-           .agg(F.sum("sum_cos_e6").alias("t")))
-    return (tot.select(F.explode(F.sequence(
-                F.lit(0).cast("long"),
-                F.pmod(F.col("t"), F.lit(mod).cast("long")))).alias("g"))
-            .select(F.lit(1).cast("int").alias("one")))
-
-
-def kmeans_cosine_checksum(spark, sf_dir):
-    return _kmeans_checksum(spark, sf_dir, 8191)
-
-
-def kmeans_cosine_checksum2(spark, sf_dir):
-    return _kmeans_checksum(spark, sf_dir, 7919)
-
-
-def _kmeans_checksum_sql(mod: int) -> str:
-    final = f"""
-SELECT 1::INT AS one FROM (
-  SELECT unnest(generate_series(0, chk)) FROM (
-    SELECT ((SUM(cos_e6)::BIGINT % {mod}) + {mod}) % {mod} AS chk
-    FROM a1))"""
-    return _kmeans_sql(final=final)
-
-
-# Fixed probe set for the numpy cosine-argmax kernel: 4 centroids x 7
-# vectors chosen to hit every corner of the integer micro-cosine at REAL
-# kmeans magnitudes (the duckdb_semantics_canary probes only small
-# values + one isqrt literal, and since r8 the production cosine comes
-# from the numpy kernel, which the old canary never exercised):
-#   v0 perfect square at the isqrt domain edge (na*nb = 46340^4, cos
-#      exactly 1e6), v1 negative unit-dot + a +21 micro-positive, v2
-#      small mixed signs, v3 exact antipode of c1, v4 EXACT argmax tie
-#      between c0 and c3 at na*nb = 4.4e18 (first-max rule), v5 zero
-#      dots with ties at 0, v6 exact tie again at tiny magnitude.
-# Expected values are HARDCODED literals computed with pure-Python
-# math.isqrt + trunc division (the spec); tests/test_similarity
-# re-derives them so a typo cannot silently pass.
-_KERNEL_PROBE_CENTS = [
-    [46340, 0, 0, 0],
-    [-30000, 30000, 12345, -6789],
-    [1000, 2000, -3000, 500],
-    [0, 46340, 0, 0],
-]
-_KERNEL_PROBE_VECS = [
-    [46340, 0, 0, 0],
-    [-46340, 1, 0, 0],
-    [100, -100, 100, -100],
-    [30000, -30000, -12345, 6789],
-    [32000, 32000, 1, -1],
-    [0, 0, 0, 1],
-    [1, 1, 0, 0],
-]
-_KERNEL_PROBE_WANT = [
-    (0, 0, 1000000),
-    (1, 1, 671088),
-    (2, 0, 500000),
-    (3, 0, 671073),
-    (4, 0, 707106),
-    (5, 2, 132485),
-    (6, 0, 707113),
-]
-
-
-def numpy_kernel_canary(spark, sf_dir):
-    """Driver-gate canary for the PRODUCTION cosine path (VERDICT r8
-    #1b): since r8 the kmeans/PQ cosine_e6 comes from the numpy kernel
-    in operators/similarity._map_side_cosine_argmax, which the
-    duckdb_semantics_canary (SQL-expression probes) never exercises.
-    Runs the 7 fixed probe vectors through the REAL kernel on an
-    executor and compares (cluster, cosine_e6) to hardcoded exact
-    values; each failing probe pid emits 2^pid rows, so the artifact
-    row count is a bitmask of failing probes.  pid 98 carries the
-    EXECUTOR python worker's numpy version (captured inside
-    mapInPandas), pid 99 the driver-env duckdb version — the oracle
-    bakes the driver-env numpy version and the gate's own version()
-    into the same rows, so a hash mismatch on only 98/99 means a
-    version split, not a math bug."""
-    import duckdb as _dd
-    import pyspark.sql.types as ST
-
-    df = spark.createDataFrame(
-        [(i, [int(x) for x in v]) for i, v in
-         enumerate(_KERNEL_PROBE_VECS)],
-        ST.StructType([
-            ST.StructField("pid", ST.IntegerType()),
-            ST.StructField("__q", ST.ArrayType(ST.LongType()))]))
-    got = SIM._map_side_cosine_argmax(
-        df, "pid", "__q", _KERNEL_PROBE_CENTS,
-        out_col="cluster", cos_col="cosine_e6", keep_vec=False)
-    exp = spark.createDataFrame(
-        [(int(p), int(c), int(v)) for p, c, v in _KERNEL_PROBE_WANT],
-        "pid int, want_cluster int, want_cos long")
-    fails = (got.join(exp, "pid")
-             .filter((F.col("cluster") != F.col("want_cluster")) |
-                     (F.col("cosine_e6") != F.col("want_cos")))
-             .select(F.col("pid"),
-                     F.explode(F.sequence(
-                         F.lit(1).cast("long"),
-                         F.expr("shiftleft(1L, pid)"))).alias("__i"))
-             .select(F.col("pid").cast("int").alias("pid"),
-                     F.lit("kernel-probe-failed").alias("detail")))
-
-    def _worker_ver(batches):
-        import numpy as _np
-        import pandas as _pd
-        for _ in batches:
-            pass
-        yield _pd.DataFrame({"pid": [98],
-                             "detail": [str(_np.__version__)]})
-
-    ver98 = (spark.range(1).repartition(1)
-             .mapInPandas(_worker_ver, "pid int, detail string"))
-    ver99 = spark.range(1).select(
-        F.lit(99).cast("int").alias("pid"),
-        F.lit(str(_dd.__version__).lstrip("v")).alias("detail"))
-    return fails.unionAll(ver98).unionAll(ver99)
-
-
-def _numpy_kernel_canary_sql() -> str:
-    """DuckDB twin: the SAME probes through quantized_cosine_e6_sql +
-    row_number argmax (tie -> lowest cluster), against the SAME
-    hardcoded literals — so a failing probe on the gate's DuckDB at
-    these REAL magnitudes shows up in ITS half of the row count.  The
-    driver-env numpy version is baked in as a literal at SQL-generation
-    time (oracle_sql() runs next to Spark in the driver env)."""
-    import numpy as _np
-    cos = V.quantized_cosine_e6_sql("v.q", "c.cq")
-    vvals = ", ".join(
-        f"({i}, {list(v)}::BIGINT[])"
-        for i, v in enumerate(_KERNEL_PROBE_VECS))
-    cvals = ", ".join(
-        f"({j}, {list(c)}::BIGINT[])"
-        for j, c in enumerate(_KERNEL_PROBE_CENTS))
-    wvals = ", ".join(
-        f"({p}, {c}, {w}::BIGINT)" for p, c, w in _KERNEL_PROBE_WANT)
-    return f"""
-WITH v(pid, q) AS (VALUES {vvals}),
-c(cl, cq) AS (VALUES {cvals}),
-want(pid, wcl, wcos) AS (VALUES {wvals}),
-a AS (
-  SELECT pid, cl, cos FROM (
-    SELECT v.pid, c.cl, {cos} AS cos,
-           row_number() OVER (PARTITION BY v.pid
-                              ORDER BY {cos} DESC, c.cl) AS rn
-    FROM v CROSS JOIN c) WHERE rn = 1),
-fails AS (
-  SELECT a.pid FROM a JOIN want w ON a.pid = w.pid
-  WHERE a.cl <> w.wcl OR a.cos <> w.wcos)
-SELECT pid, detail FROM (
-  SELECT f.pid::INT AS pid, 'kernel-probe-failed' AS detail
-  FROM fails f JOIN (SELECT unnest(range(128)) AS i) n
-    ON n.i < (1::BIGINT << f.pid)
-  UNION ALL
-  SELECT 98::INT, '{str(_np.__version__)}'
-  UNION ALL
-  SELECT 99::INT, ltrim(version(), 'v'))
-"""
-
-
-def env_version_canary(spark, sf_dir):
-    """Version-as-row-count canary (VERDICT r8 #1c): emits
-    (duckdb_major*100 + duckdb_minor) * 1000 + numpy_major*100 +
-    numpy_minor CONSTANT rows — e.g. duckdb 1.0 + numpy 1.26 ->
-    100126 rows.  The oracle computes the SAME count from the gate's
-    own version() (numpy half baked at SQL-generation time), so when
-    the gate's DuckDB matches the driver-env import the row counts
-    agree (green) AND the CORRECTNESS artifact's spark_rows /
-    oracle_rows fields document both envs' versions mechanically —
-    readable even in rounds where every hash matches."""
-    import duckdb as _dd
-    import numpy as _np
-    dd = str(_dd.__version__).lstrip("v").split(".")
-    npv = str(_np.__version__).split(".")
-    n = ((int(dd[0]) * 100 + int(dd[1])) * 1000
-         + int(npv[0]) * 100 + int(npv[1]))
-    return spark.range(n).select(F.lit(1).cast("int").alias("one"))
-
-
-def _env_version_canary_sql() -> str:
-    import numpy as _np
-    npv = str(_np.__version__).split(".")
-    np_enc = int(npv[0]) * 100 + int(npv[1])
-    return f"""
-WITH p AS (SELECT string_split(ltrim(version(), 'v'), '.') AS parts),
-n AS (SELECT (parts[1]::INT * 100 + parts[2]::INT) * 1000 + {np_enc}
-      AS cnt FROM p)
-SELECT 1::INT AS one FROM n, range(1000000) r WHERE r.range < n.cnt
-"""
-
-
-def duckdb_semantics_canary(spark, sf_dir):
-    """Driver-gate canary that LOCALIZES engine-vs-oracle divergence
-    (kmeans was red r5-r7 with no way to tell whether the driver's
-    DuckDB `//`, isqrt correction, or round semantics diverged).  Both
-    sides evaluate the same integer-semantics probes and emit one row
-    per FAILING probe, replicated 2^pid times — so the row count in the
-    CORRECTNESS artifact is a BITMASK of failing probes:
-      p0 `//`-is-trunc, p1 isqrt at 2^62-2, p2 micro-cosine w/ negative
-      dot, p3 round(319.5)=320, p4 round(-2.5)=-3;
-    plus an always-present row (pid 99) carrying the DuckDB version
-    string — a hash mismatch on ONLY that row means the gate's DuckDB
-    differs from the one imported next to Spark."""
-    import duckdb as _dd
-    one = spark.range(1)
-    checks = [
-        (0, F.expr("-7 div 2"), -3),
-        (1, V.isqrt_long(F.lit((1 << 62) - 2).cast("long")), 2147483647),
-        (2, V.quantized_cosine_e6(F.expr("array(1000L, 0L)"),
-                                  F.expr("array(-707L, 707L)")), -707107),
-        (3, F.round(F.lit(319.5).cast("double")).cast("long"), 320),
-        (4, F.round(F.lit(-2.5).cast("double")).cast("long"), -3),
-    ]
-    fails = None
-    for pid, expr, want in checks:
-        row = (one.select(expr.cast("long").alias("__got"))
-               .filter(F.col("__got") != F.lit(int(want)).cast("long"))
-               .select(F.explode(F.sequence(
-                   F.lit(1), F.lit(1 << pid))).alias("__i"))
-               .select(F.lit(pid).cast("int").alias("pid"),
-                       F.lit("probe-failed").alias("detail")))
-        fails = row if fails is None else fails.unionAll(row)
-    ver = one.select(
-        F.lit(99).cast("int").alias("pid"),
-        F.lit(str(_dd.__version__).lstrip("v")).alias("detail"))
-    return fails.unionAll(ver)
-
-
-def _canary_sql() -> str:
-    return f"""
-WITH probes AS (
-  SELECT * FROM (VALUES
-    (0, (-7) // 2, -3),
-    (1, {V.isqrt_sql('4611686018427387902')}, 2147483647),
-    (2, {V.quantized_cosine_e6_sql('[1000,0]', '[-707,707]')}, -707107),
-    (3, round(319.5::DOUBLE)::BIGINT, 320),
-    (4, round(-2.5::DOUBLE)::BIGINT, -3)
-  ) AS t(pid, got, want)),
-n AS (SELECT unnest(range(32)) AS i)
-SELECT pid, detail FROM (
-  SELECT pid::INT AS pid, 'probe-failed' AS detail
-  FROM probes JOIN n ON n.i < (1::BIGINT << probes.pid)
-  WHERE got <> want
-  UNION ALL
-  SELECT 99::INT AS pid, ltrim(version(), 'v') AS detail)
+SELECT cluster, COUNT(*) AS n_members, SUM(vec_id)::BIGINT AS sum_ids,
+       SUM(cos_e6)::BIGINT AS sum_cos_e6
+FROM a1 GROUP BY cluster
 """
 
 
@@ -4752,19 +4471,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ordering = driver-gate rotation priority (first 50 entries;
         # recomputed each round from CORRECTNESS_r*.json): everything
         # whose Spark code or oracle CHANGED in round 10 first (the
-        # kmeans HUGEINT-cast fix + its probe family, the ANN numpy-
-        # kernel migration, the stream-read parquet sink, the word-gram
-        # hash), then the r9-touched-but-never-driver-verified set the
+        # kmeans HUGEINT-cast fix, the ANN numpy-kernel migration, the
+        # stream-read parquet sink, the word-gram hash), then the r9-touched-but-never-driver-verified set the
         # r9 verdict front-loaded (#2), then the r8-stale backlog
         # (last verified two rounds ago), then the freshly-green r9
         # window.
-        "duckdb_semantics_canary": duckdb_semantics_canary,
-        "numpy_kernel_canary": numpy_kernel_canary,
-        "env_version_canary": env_version_canary,
-        "kmeans_members_profile": kmeans_members_profile,
-        "kmeans_cosine_profile": kmeans_cosine_profile,
-        "kmeans_cosine_checksum": kmeans_cosine_checksum,
-        "kmeans_cosine_checksum2": kmeans_cosine_checksum2,
         "kmeans_topic_clusters": kmeans_topic_clusters,
         "ann_topk_bruteforce": ann_topk_bruteforce,
         "ann_topk_bucketed": ann_topk_bucketed,
@@ -5021,17 +4732,6 @@ def oracle_sql() -> dict[str, str]:
         "ann_topk_bucketed": _ann_sql(True),
         "ann_topk_ivf": _ivf_sql(),
         "kmeans_topic_clusters": _kmeans_sql(),
-        "kmeans_members_profile": _kmeans_sql(final=(
-            "SELECT cluster, COUNT(*) AS n_members, "
-            "SUM(vec_id)::BIGINT AS sum_ids FROM a1 GROUP BY cluster")),
-        "kmeans_cosine_profile": _kmeans_sql(final=(
-            "SELECT cluster, SUM(cos_e6)::BIGINT AS sum_cos_e6 "
-            "FROM a1 GROUP BY cluster")),
-        "kmeans_cosine_checksum": _kmeans_checksum_sql(8191),
-        "kmeans_cosine_checksum2": _kmeans_checksum_sql(7919),
-        "numpy_kernel_canary": _numpy_kernel_canary_sql(),
-        "env_version_canary": _env_version_canary_sql(),
-        "duckdb_semantics_canary": _canary_sql(),
         "embedding_near_dup": _near_dup_sql(),
         "label_centroids": CENTROIDS_SQL,
         "variant_shred": VARIANT_SHRED_SQL,

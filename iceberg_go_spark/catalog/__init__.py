@@ -2,21 +2,15 @@ from .filesystem import (CommitConflictError, FilesystemCatalog,
                          NoSuchTableError, TableAlreadyExistsError)
 from .sql import (MSSQLDialect, MySQLDialect, OracleDialect,
                   PostgresDialect, SqliteDialect, SqlCatalog)
-from .fake_pg import (FakeMySQLConnection, FakePgConnection,
-                      fake_mysql_connect, fake_pg_connect)
 from .rest import RestCatalog, RestCatalogServer
-from .glue import FakeGlueClient, GlueCatalog, NoSuchNamespaceError
-from .hive import (FakeHiveMetastoreClient, HiveCatalog,
-                   LockAcquisitionError)
+from .glue import GlueCatalog, NoSuchNamespaceError
+from .hive import HiveCatalog, LockAcquisitionError
 from .multi_table import MultiTableTransaction, TableCommit
 
 __all__ = ["FilesystemCatalog", "SqlCatalog",
-           "SqliteDialect", "PostgresDialect",
-           "FakePgConnection", "fake_pg_connect", "MySQLDialect",
-           "FakeMySQLConnection", "fake_mysql_connect",
+           "SqliteDialect", "PostgresDialect", "MySQLDialect",
            "MSSQLDialect", "OracleDialect", "RestCatalog",
-           "RestCatalogServer", "GlueCatalog", "FakeGlueClient",
-           "HiveCatalog", "FakeHiveMetastoreClient",
+           "RestCatalogServer", "GlueCatalog", "HiveCatalog",
            "LockAcquisitionError", "CommitConflictError",
            "NoSuchTableError", "TableAlreadyExistsError",
            "NoSuchNamespaceError", "MultiTableTransaction", "TableCommit"]

@@ -10,7 +10,7 @@ before the unconditional delete (glue.go:466-545).
 
 The client is duck-typed to boto3's ``glue`` client surface
 (``glueAPI`` interface, glue.go:138-150): pass ``boto3.client("glue")``
-in production or the in-memory :class:`FakeGlueClient` for offline use.
+(the test suite drives an in-memory double from ``tests/support``).
 Errors are matched by Glue error *code* — both native exception classes
 named after the code and botocore ``ClientError`` responses work.
 """
@@ -593,116 +593,3 @@ class GlueCatalog:
                 pass
         return 1
 
-
-# ---------------------------------------------------------------------------
-# offline double
-
-
-class _GlueError(Exception):
-    pass
-
-
-class EntityNotFoundException(_GlueError):
-    pass
-
-
-class AlreadyExistsException(_GlueError):
-    pass
-
-
-class ConcurrentModificationException(_GlueError):
-    pass
-
-
-class FakeGlueClient:
-    """In-memory boto3-glue-shaped client for offline use and tests.
-
-    Implements exactly the semantics GlueCatalog depends on: per-table
-    monotonically increasing ``VersionId`` strings, conditional
-    ``update_table(VersionId=...)`` raising
-    ConcurrentModificationException on mismatch, and
-    EntityNotFound/AlreadyExists on the lookup/create paths.
-    """
-
-    def __init__(self):
-        self._dbs: Dict[str, Dict[str, Any]] = {}
-        self._tables: Dict[Tuple[str, str], Dict[str, Any]] = {}
-
-    # -- databases --
-    def create_database(self, DatabaseInput: Dict[str, Any], **_kw):
-        name = DatabaseInput["Name"]
-        if name in self._dbs:
-            raise AlreadyExistsException(name)
-        self._dbs[name] = dict(DatabaseInput)
-        return {}
-
-    def get_database(self, Name: str, **_kw):
-        if Name not in self._dbs:
-            raise EntityNotFoundException(Name)
-        return {"Database": dict(self._dbs[Name])}
-
-    def get_databases(self, **_kw):
-        return {"DatabaseList": [dict(d) for d in self._dbs.values()]}
-
-    def update_database(self, Name: str, DatabaseInput: Dict[str, Any],
-                        **_kw):
-        if Name not in self._dbs:
-            raise EntityNotFoundException(Name)
-        self._dbs[Name] = dict(DatabaseInput)
-        return {}
-
-    def delete_database(self, Name: str, **_kw):
-        if Name not in self._dbs:
-            raise EntityNotFoundException(Name)
-        del self._dbs[Name]
-        for key in [k for k in self._tables if k[0] == Name]:
-            del self._tables[key]
-        return {}
-
-    # -- tables --
-    def create_table(self, DatabaseName: str, TableInput: Dict[str, Any],
-                     **_kw):
-        if DatabaseName not in self._dbs:
-            raise EntityNotFoundException(DatabaseName)
-        key = (DatabaseName, TableInput["Name"])
-        if key in self._tables:
-            raise AlreadyExistsException(TableInput["Name"])
-        t = dict(TableInput)
-        t["DatabaseName"] = DatabaseName
-        t["VersionId"] = "1"
-        self._tables[key] = t
-        return {}
-
-    def get_table(self, DatabaseName: str, Name: str, **_kw):
-        t = self._tables.get((DatabaseName, Name))
-        if t is None:
-            raise EntityNotFoundException(f"{DatabaseName}.{Name}")
-        return {"Table": dict(t)}
-
-    def get_tables(self, DatabaseName: str, **_kw):
-        if DatabaseName not in self._dbs:
-            raise EntityNotFoundException(DatabaseName)
-        return {"TableList": [dict(t) for (db, _), t in self._tables.items()
-                              if db == DatabaseName]}
-
-    def update_table(self, DatabaseName: str, TableInput: Dict[str, Any],
-                     VersionId: Optional[str] = None, **_kw):
-        key = (DatabaseName, TableInput["Name"])
-        cur = self._tables.get(key)
-        if cur is None:
-            raise EntityNotFoundException(TableInput["Name"])
-        if VersionId is not None and VersionId != cur["VersionId"]:
-            raise ConcurrentModificationException(
-                f"{key}: version {VersionId} is not current "
-                f"{cur['VersionId']}")
-        t = dict(TableInput)
-        t["DatabaseName"] = DatabaseName
-        t["VersionId"] = str(int(cur["VersionId"]) + 1)
-        self._tables[key] = t
-        return {}
-
-    def delete_table(self, DatabaseName: str, Name: str, **_kw):
-        if (DatabaseName, Name) not in self._tables:
-            raise EntityNotFoundException(f"{DatabaseName}.{Name}")
-        del self._tables[(DatabaseName, Name)]
-        return {}

@@ -9,9 +9,9 @@ Dialects: sqlite (stdlib, default), postgres, mysql, mssql, and oracle
 — the reference's full set.  The non-sqlite
 dialects are driver-duck-typed like the Glue/Hive pattern — pass
 ``connect=`` a zero-arg callable returning a DB-API connection (psycopg /
-pg8000 / pymysql / MySQLdb drop in unchanged; the test suite uses
-fake-wire adapters that speak each backend's parameter style, upsert
-syntax, and exception surface).  All statements are written in
+pg8000 / pymysql / MySQLdb drop in unchanged; the test suite's
+fake-wire adapters in ``tests/support/fake_pg.py`` speak each backend's
+parameter style, upsert syntax, and exception surface).  All statements are written in
 '?'-placeholder form and translated per dialect; transactions are explicit
 BEGIN/COMMIT statements on autocommit connections, so multi-statement ops
 (multi-table commits, namespace property updates) are atomic on every

@@ -156,8 +156,8 @@ def parse_config(text: Optional[str], catalog_name: str = "") -> Optional[Catalo
 def resolve_catalog(cat_cfg: CatalogConfig, client=None):
     """Instantiate the engine catalog described by a config entry
     (main.go:386-440 catalog-type switch).  ``client`` injects the
-    metastore client for glue/hive (a real boto3/thrift client in
-    production, a fake in tests); without one those types raise."""
+    metastore client for glue/hive (a real boto3/thrift client, or a
+    test double from ``tests/support``); without one those types raise."""
     ctype = (cat_cfg.catalog_type or "").lower()
     if ctype in ("", "filesystem", "fs", "hadoop"):
         wh = cat_cfg.warehouse or cat_cfg.uri

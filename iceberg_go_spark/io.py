@@ -155,10 +155,10 @@ class InMemoryFileIO(FileIO):
 # io/config.go property keys.  A BlobFileIO adapts any bucket-shaped client
 # (duck-typed to get/put/delete/exists/size/list) to the FileIO interface;
 # scheme factories build one per (scheme, bucket) from table/catalog
-# properties.  The real cloud SDKs are environment-bound, so the client
-# comes from a pluggable provider — tests install InMemoryBucket, a
-# production deployment installs a thin boto3/gcs adapter with the same
-# five methods and everything above this line is unchanged.
+# properties.  The client comes from a pluggable provider: InMemoryBucket
+# backs mem:// (gocloud memblob), Boto3BucketClient adapts a real
+# ``boto3.client("s3")`` (AWS or any S3-compatible endpoint), and any other
+# adapter with the same methods drops in unchanged.
 
 # property keys (io/config.go:21-63; the offline-meaningful subset)
 S3_REGION = "s3.region"
@@ -202,6 +202,77 @@ class InMemoryBucket:
     def list(self, prefix: str = "") -> List[str]:
         with self._lock:  # concurrent put() would resize mid-iteration
             return sorted(k for k in self.objects if k.startswith(prefix))
+
+
+class Boto3BucketClient:
+    """InMemoryBucket-shaped surface over a real boto3 s3 client
+    (io/gocloud/s3.go opens s3:// buckets through the AWS SDK)."""
+
+    def __init__(self, s3_client, bucket: str):
+        self._c = s3_client
+        self.bucket = bucket
+
+    def _not_found(self, e) -> bool:
+        code = getattr(e, "response", {}).get("Error", {}).get("Code", "")
+        return code in ("NoSuchKey", "404", "NotFound")
+
+    def get(self, key: str) -> bytes:
+        try:
+            return self._c.get_object(Bucket=self.bucket,
+                                      Key=key)["Body"].read()
+        except Exception as e:
+            if self._not_found(e):
+                raise FileNotFoundError(key)
+            raise
+
+    def get_range(self, key: str, offset: int, length: int) -> bytes:
+        end = offset + length - 1
+        try:
+            return self._c.get_object(
+                Bucket=self.bucket, Key=key,
+                Range=f"bytes={offset}-{end}")["Body"].read()
+        except Exception as e:
+            if self._not_found(e):
+                raise FileNotFoundError(key)
+            raise
+
+    def put(self, key: str, data: bytes) -> None:
+        self._c.put_object(Bucket=self.bucket, Key=key,
+                           Body=bytes(data))
+
+    def delete(self, key: str) -> None:
+        self._c.delete_object(Bucket=self.bucket, Key=key)
+
+    def exists(self, key: str) -> bool:
+        try:
+            self._c.head_object(Bucket=self.bucket, Key=key)
+            return True
+        except Exception as e:
+            if self._not_found(e):
+                return False
+            raise
+
+    def size(self, key: str) -> int:
+        try:
+            return int(self._c.head_object(Bucket=self.bucket,
+                                           Key=key)["ContentLength"])
+        except Exception as e:
+            if self._not_found(e):
+                raise FileNotFoundError(key)
+            raise
+
+    def list(self, prefix: str = "") -> List[str]:
+        keys: List[str] = []
+        token = None
+        while True:
+            kw = {"Bucket": self.bucket, "Prefix": prefix}
+            if token:
+                kw["ContinuationToken"] = token
+            out = self._c.list_objects_v2(**kw)
+            keys.extend(o["Key"] for o in out.get("Contents", []))
+            if not out.get("IsTruncated"):
+                return sorted(keys)
+            token = out.get("NextContinuationToken")
 
 
 class BlobFileIO(FileIO):

@@ -730,7 +730,15 @@ def _harvest_one(path: str, name_to_field: Dict[str, Tuple[int, str]],
                     out["null_counts"][fid] = out["null_counts"].get(fid, 0) + \
                         st.null_count
                 if st.has_min_max and fid not in geo_fids:
-                    mn, mx = st.min, st.max
+                    if isinstance(t, _T.DecimalType) and \
+                            st.physical_type in ("INT32", "INT64"):
+                        # pyarrow cannot decode int-backed decimal stats
+                        # (ArrowNotImplementedError); the raw values are
+                        # the unscaled integers
+                        mn = Decimal(st.min_raw).scaleb(-t.scale)
+                        mx = Decimal(st.max_raw).scaleb(-t.scale)
+                    else:
+                        mn, mx = st.min, st.max
                     if fid not in mins or _lt(mn, mins[fid]):
                         mins[fid] = mn
                     if fid not in maxs or _lt(maxs[fid], mx):

@@ -56,8 +56,7 @@ def pg_live_server():
         pytest.skip(_PG_LIVE["error"])
     if _PG_LIVE["server"] is None:
         try:
-            from iceberg_go_spark.catalog.pg_local import \
-                LocalPostgresServer
+            from tests.support.pg_local import LocalPostgresServer
             _PG_LIVE["server"] = LocalPostgresServer().start()
             import atexit
             atexit.register(_PG_LIVE["server"].stop)

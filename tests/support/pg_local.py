@@ -73,7 +73,7 @@ class LocalPostgresServer:
                      f"-c full_page_writes=off' "
                      f"-l {self.datadir}/log start > /dev/null")
             # trust auth + TCP: wait until connectable
-            from .pgwire import pgwire_connect
+            from iceberg_go_spark.catalog.pgwire import pgwire_connect
             deadline = time.time() + 20
             while True:
                 try:
@@ -90,7 +90,7 @@ class LocalPostgresServer:
             raise
 
     def create_database(self, name: str) -> None:
-        from .pgwire import pgwire_connect
+        from iceberg_go_spark.catalog.pgwire import pgwire_connect
         con = pgwire_connect(port=self.port, user=self.user,
                              database="postgres")
         try:

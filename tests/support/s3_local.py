@@ -1,100 +1,20 @@
-"""Local S3 wire endpoint + boto3 bucket-client adapter for FileIO.
+"""Local S3 wire endpoint: a path-style S3 REST subset on 127.0.0.1.
 
-Parity (behavior only): /root/reference/io/gocloud/s3.go — the Go
-reference opens s3:// buckets through the official AWS SDK; this repo's
-BlobFileIO duck-types a bucket client (io.py InMemoryBucket surface).
-This module closes the wire gap in the offline container:
-
-- :class:`Boto3BucketClient` adapts a REAL ``boto3.client("s3")`` to
-  the bucket surface (get/put/delete/exists/size/list), so the
-  metadata plane's s3:// FileIO runs the genuine botocore
-  request-signing/marshalling/error-mapping stack;
-- :class:`LocalS3WireServer` serves the path-style S3 REST subset those
-  calls need (PutObject, GetObject incl. Range, HeadObject,
-  DeleteObject, ListObjectsV2, CreateBucket) on 127.0.0.1, signature
-  headers accepted and ignored (trust-style, test-only).
-
-Production points the same adapter at AWS/any S3-compatible endpoint;
-only the endpoint_url differs.
+:class:`LocalS3WireServer` serves PutObject, GetObject (incl. Range),
+HeadObject, DeleteObject, ListObjectsV2 and CreateBucket over in-memory
+buckets; signature headers are accepted and ignored.  Tests point a REAL
+``boto3.client("s3")`` at it through ``iceberg_go_spark.io.
+Boto3BucketClient``, so the metadata plane's s3:// FileIO runs the
+genuine botocore request-signing/marshalling/error-mapping stack.
 """
 
 from __future__ import annotations
 
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Dict, List, Optional
+from typing import Dict, Optional
 from urllib.parse import parse_qs, unquote, urlparse
 from xml.sax.saxutils import escape
-
-
-class Boto3BucketClient:
-    """InMemoryBucket-shaped surface over a real boto3 s3 client."""
-
-    def __init__(self, s3_client, bucket: str):
-        self._c = s3_client
-        self.bucket = bucket
-
-    def _not_found(self, e) -> bool:
-        code = getattr(e, "response", {}).get("Error", {}).get("Code", "")
-        return code in ("NoSuchKey", "404", "NotFound")
-
-    def get(self, key: str) -> bytes:
-        try:
-            return self._c.get_object(Bucket=self.bucket,
-                                      Key=key)["Body"].read()
-        except Exception as e:
-            if self._not_found(e):
-                raise FileNotFoundError(key)
-            raise
-
-    def get_range(self, key: str, offset: int, length: int) -> bytes:
-        end = offset + length - 1
-        try:
-            return self._c.get_object(
-                Bucket=self.bucket, Key=key,
-                Range=f"bytes={offset}-{end}")["Body"].read()
-        except Exception as e:
-            if self._not_found(e):
-                raise FileNotFoundError(key)
-            raise
-
-    def put(self, key: str, data: bytes) -> None:
-        self._c.put_object(Bucket=self.bucket, Key=key,
-                           Body=bytes(data))
-
-    def delete(self, key: str) -> None:
-        self._c.delete_object(Bucket=self.bucket, Key=key)
-
-    def exists(self, key: str) -> bool:
-        try:
-            self._c.head_object(Bucket=self.bucket, Key=key)
-            return True
-        except Exception as e:
-            if self._not_found(e):
-                return False
-            raise
-
-    def size(self, key: str) -> int:
-        try:
-            return int(self._c.head_object(Bucket=self.bucket,
-                                           Key=key)["ContentLength"])
-        except Exception as e:
-            if self._not_found(e):
-                raise FileNotFoundError(key)
-            raise
-
-    def list(self, prefix: str = "") -> List[str]:
-        keys: List[str] = []
-        token = None
-        while True:
-            kw = {"Bucket": self.bucket, "Prefix": prefix}
-            if token:
-                kw["ContinuationToken"] = token
-            out = self._c.list_objects_v2(**kw)
-            keys.extend(o["Key"] for o in out.get("Contents", []))
-            if not out.get("IsTruncated"):
-                return sorted(keys)
-            token = out.get("NextContinuationToken")
 
 
 class _Handler(BaseHTTPRequestHandler):

@@ -340,8 +340,8 @@ def test_sql_catalog_postgres_dialect_wire(tmp_path):
     placeholders, INSERT OR REPLACE, BEGIN IMMEDIATE), so these ops
     passing proves the dialect translation is complete."""
     import functools
-    from iceberg_go_spark.catalog import SqlCatalog, fake_pg_connect
-    from iceberg_go_spark.catalog.fake_pg import FakePgCursor
+    from iceberg_go_spark.catalog import SqlCatalog
+    from tests.support.fake_pg import FakePgCursor, fake_pg_connect
 
     root = str(tmp_path / "pgwh")
     import os as _os

@@ -236,7 +236,7 @@ def test_resolve_glue_from_aws_properties(tmp_path):
     wire endpoint; incomplete static creds are a ConfigError."""
     import pytest as _pytest
     _pytest.importorskip("boto3")
-    from iceberg_go_spark.catalog.glue_local import LocalGlueWireServer
+    from tests.support.glue_local import LocalGlueWireServer
     import iceberg_go_spark.config as C
 
     server = LocalGlueWireServer().start()
@@ -263,7 +263,7 @@ def test_resolve_glue_catalog_id_both_spellings(tmp_path):
     the injected-client branch accepts) — round-8 review finding."""
     import pytest as _pytest
     _pytest.importorskip("boto3")
-    from iceberg_go_spark.catalog.glue_local import LocalGlueWireServer
+    from tests.support.glue_local import LocalGlueWireServer
     import iceberg_go_spark.config as C
     server = LocalGlueWireServer().start()
     try:

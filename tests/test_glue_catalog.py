@@ -4,15 +4,15 @@ Parity (behavior only): /root/reference/catalog/glue/glue.go —
 pyiceberg table parameters (glue.go:47-66), VersionId optimistic locking
 on commit (glue.go:345-414), the rename claim protocol (glue.go:466-545),
 and ICEBERG-only table listing (glue.go:960-970). Runs offline against
-FakeGlueClient; a real boto3 client drops in unchanged.
+tests/support's FakeGlueClient; a real boto3 client drops in unchanged.
 """
 
 import pytest
 
 from iceberg_go_spark import expressions as E
 from iceberg_go_spark import types as T
-from iceberg_go_spark.catalog import (CommitConflictError, FakeGlueClient,
-                                      GlueCatalog, NoSuchNamespaceError,
+from iceberg_go_spark.catalog import (CommitConflictError, GlueCatalog,
+                                      NoSuchNamespaceError,
                                       NoSuchTableError,
                                       TableAlreadyExistsError)
 from iceberg_go_spark.catalog.glue import (GLUE_TYPE_ICEBERG,
@@ -20,6 +20,7 @@ from iceberg_go_spark.catalog.glue import (GLUE_TYPE_ICEBERG,
                                            PARAM_PREV_METADATA_LOCATION,
                                            PARAM_TABLE_TYPE)
 from iceberg_go_spark.schema import Schema
+from tests.support.glue_local import FakeGlueClient, LocalGlueWireServer
 
 SCHEMA = Schema([
     T.NestedField(1, "id", T.LongType(), required=True),
@@ -40,16 +41,15 @@ def _has_boto3():
 def cat(request, tmp_path):
     """Every Glue test runs twice: against the in-process fake AND —
     when boto3 is importable — against a REAL boto3 client speaking
-    AWS JSON 1.1 to a local wire endpoint (glue_local.py), proving the
-    'a real boto3 client drops in unchanged' claim at the botocore
-    marshalling layer, not just the duck-type layer."""
+    AWS JSON 1.1 to a local wire endpoint (tests/support/glue_local.py),
+    proving the 'a real boto3 client drops in unchanged' claim at the
+    botocore marshalling layer, not just the duck-type layer."""
     if request.param == "fake":
         client = FakeGlueClient()
         request.addfinalizer(lambda: None)
     else:
         if not _has_boto3():
             pytest.skip("boto3 not installed")
-        from iceberg_go_spark.catalog.glue_local import LocalGlueWireServer
         server = LocalGlueWireServer().start()
         request.addfinalizer(server.stop)
         client = server.boto3_client()
@@ -220,7 +220,6 @@ def test_from_properties_builds_real_boto3_client(tmp_path):
     from iceberg_go_spark.catalog.glue import (
         GlueCatalog as GC, IncompleteStaticCredentialsError,
         validate_static_credentials)
-    from iceberg_go_spark.catalog.glue_local import LocalGlueWireServer
 
     server = LocalGlueWireServer().start()
     try:

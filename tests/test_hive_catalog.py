@@ -3,7 +3,8 @@
 Parity (behavior only): /root/reference/catalog/hive/hive.go, lock.go,
 schema.go — HMS EXCLUSIVE table locks around commit/drop/rename, the
 pointer check under the lock, and ICEBERG-parameter table construction.
-Runs offline against FakeHiveMetastoreClient (real FIFO lock queue).
+Runs offline against tests/support's FakeHiveMetastoreClient (real FIFO
+lock queue).
 """
 
 import threading
@@ -12,8 +13,7 @@ import pytest
 
 from iceberg_go_spark import expressions as E
 from iceberg_go_spark import types as T
-from iceberg_go_spark.catalog import (CommitConflictError,
-                                      FakeHiveMetastoreClient, HiveCatalog,
+from iceberg_go_spark.catalog import (CommitConflictError, HiveCatalog,
                                       NoSuchNamespaceError, NoSuchTableError,
                                       TableAlreadyExistsError)
 from iceberg_go_spark.catalog.hive import (ICEBERG_STORAGE_HANDLER,
@@ -22,6 +22,7 @@ from iceberg_go_spark.catalog.hive import (ICEBERG_STORAGE_HANDLER,
                                            PARAM_STORAGE_HANDLER,
                                            PARAM_TABLE_TYPE)
 from iceberg_go_spark.schema import Schema
+from tests.support.fake_hive import FakeHiveMetastoreClient
 
 SCHEMA = Schema([
     T.NestedField(1, "id", T.LongType(), required=True),

@@ -69,9 +69,9 @@ def test_puffin_through_mem_io(mem):
 def s3(request):
     """Every blob-IO test runs twice: over the in-memory bucket AND —
     when boto3 is importable — over a REAL boto3 s3 client against a
-    local path-style S3 wire endpoint (s3_local.py), so the metadata
-    plane's s3:// paths exercise genuine botocore signing/marshalling/
-    error mapping, not just the duck-typed surface."""
+    local path-style S3 wire endpoint (tests/support/s3_local.py), so the
+    metadata plane's s3:// paths exercise genuine botocore signing/
+    marshalling/error mapping, not just the duck-typed surface."""
     from iceberg_go_spark import io as IO
     buckets = {}
 
@@ -85,8 +85,7 @@ def s3(request):
         return
 
     pytest.importorskip("boto3")
-    from iceberg_go_spark.s3_local import (Boto3BucketClient,
-                                           LocalS3WireServer)
+    from tests.support.s3_local import LocalS3WireServer
     server = LocalS3WireServer().start()
     client = server.boto3_client()
 
@@ -97,7 +96,7 @@ def s3(request):
             # stay isolated, matching the mem variant's semantics
             wire_bucket = f"{scheme}-{bucket}"
             client.create_bucket(Bucket=wire_bucket)
-            buckets[key] = Boto3BucketClient(client, wire_bucket)
+            buckets[key] = IO.Boto3BucketClient(client, wire_bucket)
         return buckets[key]
 
     IO.set_blob_client_provider(provider)

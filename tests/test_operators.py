@@ -501,15 +501,51 @@ def test_sum_vector_shapes_identical(spark, sf_dir, monkeypatch):
     assert a1 == a2
 
 
+# Fixed probe set for the numpy cosine-argmax kernel
+# (operators/similarity._map_side_cosine_argmax, the production kmeans/PQ
+# cosine path): 4 centroids x 7 vectors chosen to hit every corner of the
+# integer micro-cosine at REAL kmeans magnitudes:
+#   v0 perfect square at the isqrt domain edge (na*nb = 46340^4, cos
+#      exactly 1e6), v1 negative unit-dot + a +21 micro-positive, v2
+#      small mixed signs, v3 exact antipode of c1, v4 EXACT argmax tie
+#      between c0 and c3 at na*nb = 4.4e18 (first-max rule), v5 zero
+#      dots with ties at 0, v6 exact tie again at tiny magnitude.
+# Expected values are HARDCODED literals computed with pure-Python
+# math.isqrt + trunc division (the spec); the test below re-derives
+# them so a typo cannot silently pass.
+_KERNEL_PROBE_CENTS = [
+    [46340, 0, 0, 0],
+    [-30000, 30000, 12345, -6789],
+    [1000, 2000, -3000, 500],
+    [0, 46340, 0, 0],
+]
+_KERNEL_PROBE_VECS = [
+    [46340, 0, 0, 0],
+    [-46340, 1, 0, 0],
+    [100, -100, 100, -100],
+    [30000, -30000, -12345, 6789],
+    [32000, 32000, 1, -1],
+    [0, 0, 0, 1],
+    [1, 1, 0, 0],
+]
+_KERNEL_PROBE_WANT = [
+    (0, 0, 1000000),
+    (1, 1, 671088),
+    (2, 0, 500000),
+    (3, 0, 671073),
+    (4, 0, 707106),
+    (5, 2, 132485),
+    (6, 0, 707113),
+]
+
+
 def test_kernel_probe_literals_match_spec(spark):
-    """The hardcoded expected values in __spark_entry__'s
-    numpy_kernel_canary must equal the pure-Python exact spec
-    (math.isqrt + trunc division + first-max argmax) — a typo in the
-    literals would otherwise make the canary fail on a CORRECT kernel
-    (or pass on a broken one, if the typo mirrored the bug).  Then the
-    REAL kernel is run through Spark and must match them too."""
+    """The hardcoded kernel-probe expectations must equal the pure-Python
+    exact spec (math.isqrt + trunc division + first-max argmax) — a typo
+    in the literals would otherwise fail a CORRECT kernel (or pass a
+    broken one, if the typo mirrored the bug).  Then the REAL kernel is
+    run through Spark and must match them too."""
     import math
-    import __spark_entry__ as ENTRY
     from iceberg_go_spark.operators.similarity import (
         _map_side_cosine_argmax)
 
@@ -523,21 +559,21 @@ def test_kernel_probe_literals_match_spec(spark):
         num = d * 1_000_000
         return num // s if num >= 0 else -((-num) // s)
 
-    cents = ENTRY._KERNEL_PROBE_CENTS
+    cents = _KERNEL_PROBE_CENTS
     for pid, (v, (wp, wc, wcos)) in enumerate(
-            zip(ENTRY._KERNEL_PROBE_VECS, ENTRY._KERNEL_PROBE_WANT)):
+            zip(_KERNEL_PROBE_VECS, _KERNEL_PROBE_WANT)):
         assert wp == pid
         coss = [cos_exact(v, c) for c in cents]
         best = max(range(len(cents)), key=lambda j: (coss[j], -j))
         assert (best, coss[best]) == (wc, wcos), f"probe {pid}"
 
     df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(ENTRY._KERNEL_PROBE_VECS)],
+        [(i, v) for i, v in enumerate(_KERNEL_PROBE_VECS)],
         "pid int, __q array<long>")
     got = {r.pid: (r.cluster, r.cosine_e6) for r in
            _map_side_cosine_argmax(df, "pid", "__q", cents,
                                    keep_vec=False).collect()}
-    for pid, wc, wcos in ENTRY._KERNEL_PROBE_WANT:
+    for pid, wc, wcos in _KERNEL_PROBE_WANT:
         assert got[pid] == (wc, wcos), f"kernel probe {pid}"
 
 

@@ -247,10 +247,9 @@ def test_bpe_shared_tokenize_single_corpus_scan(spark, plans):
 
 def test_oracle_outputs_no_hugeint():
     """Every oracle's OUTPUT columns must be plain portable types.
-    DuckDB SUM(BIGINT) silently yields HUGEINT, and a dtype audit of all
-    132 oracles showed the only two HUGEINT output columns were exactly
-    the two queries red in the driver gate for five rounds
-    (kmeans_topic_clusters / kmeans_members_profile sum_ids) — the
+    DuckDB SUM(BIGINT) silently yields HUGEINT, and a dtype audit of the
+    oracles showed the only HUGEINT output columns were exactly the
+    kmeans sum_ids rows that mismatched for five rounds — the
     driver's hasher serializes HUGEINT differently than BIGINT, while
     every ::BIGINT-cast aggregate is green.  Lock the invariant so no
     future oracle re-introduces an un-cast aggregate output."""
@@ -273,6 +272,48 @@ def test_oracle_outputs_no_hugeint():
             if any(typ.startswith(b) for b in banned):
                 offenders.append((name, col, typ))
     assert offenders == [], offenders
+
+
+def test_query_registry_parity():
+    """queries() and oracle_sql() name the same 125 query paths, and every
+    query bench.py measures is one of them."""
+    import bench
+    q, o = entry.queries(), entry.oracle_sql()
+    assert set(q) == set(o)
+    assert len(q) == 125
+    assert [n for n in bench.HEADLINE + bench.EXTRA if n not in q] == []
+
+
+def test_package_ships_no_test_doubles():
+    """Test doubles (fake catalog clients, local wire servers) live under
+    tests/support; the package holds only engine code."""
+    import importlib
+    import inspect
+    import os
+    import pkgutil
+    import subprocess
+    import sys
+    import iceberg_go_spark as pkg
+
+    offenders = []
+    for mod in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        m = importlib.import_module(mod.name)
+        offenders += [f"{m.__name__}.{name}" for name, obj in vars(m).items()
+                      if inspect.isclass(obj) and obj.__module__ == m.__name__
+                      and (name.startswith("Fake")
+                           or name.endswith("WireServer"))]
+    assert offenders == []
+    # a fresh interpreter: this one may already hold tests.support
+    probe = ("import sys, iceberg_go_spark.catalog\n"
+             "print(sorted(m for m in sys.modules\n"
+             "             if m.split('.')[0] in ('iceberg_go_spark', 'tests')\n"
+             "             and ('fake' in m.split('.')[-1]\n"
+             "                  or m.endswith('_local'))))")
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120, check=True)
+    assert out.stdout.strip() == "[]", out.stdout
 
 
 def test_zorder_write_prunes_on_both_dimensions(spark):

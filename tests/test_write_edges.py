@@ -120,3 +120,55 @@ def test_plain_write_clears_leftover_pme_confs(spark, sf_dir, tmp_path):
                   "parquet.encryption.kms.client.class",
                   "parquet.encryption.footer.key"):
             hconf.unset(k)
+
+
+@pytest.mark.parametrize("n_files", [4, 20])
+def test_decimal_bounds_harvest_and_prune(spark, tmp_path, n_files):
+    """Spark writes decimal(p <= 18) as INT32/INT64, whose footer stats
+    pyarrow cannot decode as decimals: append used to crash in the stats
+    harvest.  Manifest bounds must equal the true min/max for INT32-,
+    INT64- and FIXED_LEN_BYTE_ARRAY-backed decimals (negatives, NULLs),
+    on the driver-side harvest (<= 16 files) and the executor-side one
+    (> 16), and a pruning scan must return the plain filter's rows."""
+    from decimal import Decimal
+    from iceberg_go_spark import expressions as E
+
+    df = spark.range(400).select(
+        F.col("id"),
+        F.expr("CASE WHEN id % 7 = 0 THEN NULL ELSE "
+               "CAST((id - 200) * 1.37 AS DECIMAL(9,2)) END").alias("d9"),
+        F.expr("CASE WHEN id % 11 = 0 THEN NULL ELSE "
+               "CAST((id - 250) * 12345678.9012 AS DECIMAL(18,4)) END")
+        .alias("d18"),
+        F.expr("CASE WHEN id % 13 = 0 THEN NULL ELSE "
+               "CAST((id - 150) * 98765432109876.543210 "
+               "AS DECIMAL(38,6)) END").alias("d38"))
+    assert [f.dataType.simpleString() for f in df.schema.fields[1:]] == \
+        ["decimal(9,2)", "decimal(18,4)", "decimal(38,6)"]
+    cat = FilesystemCatalog(str(tmp_path))
+    t = cat.create_table("db.dec", Schema.from_spark(df.schema))
+    t.append(df.repartitionByRange(n_files, "id"))
+    t = cat.load_table("db.dec")
+
+    files = [task.data_file for task in t.scan().plan_files()]
+    assert len(files) == n_files
+    truth = df.agg(*[F.min(c).alias(f"mn_{c}") for c in ("d9", "d18", "d38")],
+                   *[F.max(c).alias(f"mx_{c}") for c in ("d9", "d18", "d38")]
+                   ).first()
+    for f in t.schema().fields[1:]:
+        lo = min(d.lower_bound(f.field_id, f.field_type) for d in files)
+        hi = max(d.upper_bound(f.field_id, f.field_type) for d in files)
+        assert (lo, hi) == (truth[f"mn_{f.name}"], truth[f"mx_{f.name}"]), \
+            f.name
+
+    for expr, sql in [
+            (E.gt("d9", Decimal("150.00")), "d9 > 150.00"),
+            (E.lt("d18", Decimal("-1234567890.1234")),
+             "d18 < -1234567890.1234"),
+            (E.gt_eq("d38", Decimal("9876543210987654.321000")),
+             "d38 >= 9876543210987654.321000")]:
+        scan = t.scan(expr)
+        got = sorted(r.id for r in scan.to_df(spark).collect())
+        want = sorted(r.id for r in df.filter(sql).collect())
+        assert got == want and want, sql
+        assert scan.report.skipped_data_files > 0, sql
