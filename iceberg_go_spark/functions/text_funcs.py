@@ -238,24 +238,6 @@ def minhash_signature_sql(c: str, num_hashes: int = 16, ngram: int = 3
         for seed in range(num_hashes)]
 
 
-def lsh_band_keys(col: Column, num_hashes: int = 16, bands: int = 4,
-                  ngram: int = 3) -> List[Column]:
-    """Band the minhash signature: equal band-key => candidate duplicates.
-    bands divides num_hashes; rows per band r = num_hashes // bands."""
-    sig = minhash_signature(col, num_hashes, ngram)
-    r = num_hashes // bands
-    return [F.md5(F.concat_ws("|", *sig[b * r:(b + 1) * r]))
-            for b in range(bands)]
-
-
-def lsh_band_keys_sql(c: str, num_hashes: int = 16, bands: int = 4,
-                      ngram: int = 3) -> List[str]:
-    sig = minhash_signature_sql(c, num_hashes, ngram)
-    r = num_hashes // bands
-    return ["md5(" + " || '|' || ".join(sig[b * r:(b + 1) * r]) + ")"
-            for b in range(bands)]
-
-
 def simhash16(col: Column, hex_offset: int = 12) -> Column:
     """16-bit SimHash over whitespace tokens.
 

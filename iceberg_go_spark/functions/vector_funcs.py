@@ -22,15 +22,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_sql(a: str, b: str) -> str:
-    """DuckDB rendering of the same cosine (manual, version-portable)."""
-    d = (f"list_sum(list_transform(range(1, len({a}) + 1), "
-         f"i -> {a}[i] * {b}[i]))")
-    na = f"sqrt(list_sum(list_transform({a}, x -> x * x)))"
-    nb = f"sqrt(list_sum(list_transform({b}, x -> x * x)))"
-    return f"({d} / ({na} * {nb}))"
-
-
 def quantize(a: Column, scale: int = 1000) -> Column:
     """Integer-quantized copy of a float vector (round(x*scale) as long).
 
@@ -56,14 +47,6 @@ def quantized_cosine(qa: Column, qb: Column) -> Column:
     na = F.aggregate(qa, F.lit(0).cast("long"), lambda acc, v: acc + v * v)
     nb = F.aggregate(qb, F.lit(0).cast("long"), lambda acc, v: acc + v * v)
     return d / (F.sqrt(na) * F.sqrt(nb))
-
-
-def quantized_cosine_sql(qa: str, qb: str) -> str:
-    d = (f"list_sum(list_transform(range(1, len({qa}) + 1), "
-         f"i -> {qa}[i] * {qb}[i]))")
-    na = f"sqrt(list_sum(list_transform({qa}, x -> x * x)))"
-    nb = f"sqrt(list_sum(list_transform({qb}, x -> x * x)))"
-    return f"({d} / ({na} * {nb}))"
 
 
 def _isqrt_core(p: Column) -> Column:

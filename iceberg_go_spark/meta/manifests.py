@@ -62,10 +62,10 @@ class DataFile:
     referenced_data_file: Optional[str] = None
     content_offset: Optional[int] = None
     content_size_in_bytes: Optional[int] = None
-    # in-memory only (never serialized to spec manifests): set at scan
-    # time from a parquet-footer check when the table carries a
-    # schema.name-mapping.default property — files without field IDs
-    # resolve columns through the name mapping
+    # in-memory only (never serialized to spec manifests): set by
+    # add_files from its footer harvest, to decide whether the table
+    # needs a schema.name-mapping.default property.  Readers probe
+    # footers themselves (scan.read_data_files)
     name_based: bool = False
 
     def lower_bound(self, fid: int, t: T.IcebergType) -> Any:

@@ -316,21 +316,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard_e6"))
 
 
-def simhash_dedup(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Dedup on identical 16-bit SimHash (cheap fuzzy-bucket variant).
-
-    At 100 TB this is one map + one shuffle on a 2-byte key with map-side
-    combine; hamming-distance widening belongs in a follow-up bucket-join.
-    (An explode+groupBy variant was measured: the extra keyed shuffle
-    costs more than the inline column at every scale tried.)"""
-    w = Window.partitionBy("__sh").orderBy(F.col(id_col))
-    return (df.withColumn("__sh", TX.simhash16(F.col(text_col)))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__sh", "__rn"))
-
-
 def _simhash64_sig_frame(df: DataFrame, text_col: str,
                          id_col: str) -> DataFrame:
     """(id, __p0..__p3) — the 64-bit SimHash signature as 4 x 16-bit

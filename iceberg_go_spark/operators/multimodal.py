@@ -123,17 +123,6 @@ def synthesize_media(spark, docs: DataFrame, id_col: str = "doc_id",
         F.lit(None).cast("long").alias("duration_ms"))
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: rows (media_id, frame_ts_ms) — the
-    decode itself is the stubbed kernel; the plan is real DataFrame work."""
-    return (df.filter(F.col("media_type") == "video")
-            .select("media_id",
-                    F.explode(F.sequence(
-                        F.lit(0),
-                        F.coalesce(F.col("duration_ms"), F.lit(0)),
-                        F.lit(every_ms))).alias("frame_ts_ms")))
-
-
 def audio_chunk_plan(df: DataFrame, chunk_ms: int = 10_000,
                      overlap_ms: int = 0) -> DataFrame:
     """Audio chunking *plan*: one row per (media_id, chunk_start_ms,

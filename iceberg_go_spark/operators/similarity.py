@@ -104,24 +104,6 @@ def _sum_vectors(df: DataFrame, group_cols, vec_col: str,
                     F.transform("__ss", lambda s: s["__s"]).alias("csum")))
 
 
-def pairwise_label_centroids(emb: DataFrame, label_col: str = "label",
-                             vec_col: str = "embedding") -> DataFrame:
-    """Per-label centroid vectors (IVF coarse-quantizer training step,
-    expressed as one aggregation)."""
-    dim = F.size(F.col(vec_col))
-    exploded = emb.select(
-        F.col(label_col),
-        F.posexplode(F.col(vec_col)).alias("pos", "val"))
-    return (exploded.groupBy(label_col, "pos")
-            .agg(F.avg("val").alias("avg_val"))
-            .groupBy(label_col)
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "avg_val")))
-                 .alias("__s"))
-            .select(F.col(label_col),
-                    F.transform("__s", lambda s: s["avg_val"])
-                    .alias("centroid")))
-
-
 def _np_cosine_e6(dots, p):
     """Exact integer micro-cosine from int64 dot products and norm
     products: trunc(dots * 1e6 / isqrt(p)), 0 where p == 0 — the numpy

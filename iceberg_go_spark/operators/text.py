@@ -31,12 +31,6 @@ def language_histogram(df: DataFrame, text_col: str = "text") -> DataFrame:
             .groupBy("lang_guess").agg(F.count(F.lit(1)).alias("n_docs")))
 
 
-def quality_filter(df: DataFrame, text_col: str = "text",
-                   min_quality: float = 0.5) -> DataFrame:
-    thr_e6 = int(round(min_quality * 1_000_000))
-    return df.filter(TX.quality_score_e6(F.col(text_col)) >= thr_e6)
-
-
 def token_count_summary(df: DataFrame, text_col: str = "text",
                         group_col: str = "lang") -> DataFrame:
     c = F.col(text_col)

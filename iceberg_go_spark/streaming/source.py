@@ -23,6 +23,7 @@ import pyspark.sql.types as ST
 
 from ..meta import manifests as M
 from ..session import local_frame
+from ..table.scan import read_data_files
 
 
 def added_files_between(table, from_snapshot_id: Optional[int],
@@ -75,12 +76,15 @@ def added_files_between(table, from_snapshot_id: Optional[int],
 def incremental_append_df(spark: SparkSession, table,
                           from_snapshot_id: Optional[int],
                           to_snapshot_id: Optional[int] = None) -> DataFrame:
-    """Batch DataFrame of rows appended after ``from_snapshot_id``."""
+    """Batch DataFrame of the rows that append and overwrite commits in
+    (``from_snapshot_id``, ``to_snapshot_id``] wrote, in the current
+    schema.  The files are read as written, through the scan's reader
+    (``scan.read_data_files``: field ids, else the name mapping, and
+    initial defaults); deletes committed since are not applied."""
     files = added_files_between(table, from_snapshot_id, to_snapshot_id)
-    schema = table.schema().to_spark()
     if not files:
-        return local_frame(spark, [], schema)
-    return spark.read.schema(schema).parquet(*files)
+        return local_frame(spark, [], table.schema().to_spark())
+    return read_data_files(spark, table, files, identity=False)
 
 
 def read_stream(spark: SparkSession, table,

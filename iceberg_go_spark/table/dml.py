@@ -6,10 +6,11 @@ file :1967), MoR delete :1560 (pos-delete fanout writer), overwrite :1447,
 row delta table/row_delta.go:65-281.
 
 Spark-first lowering:
-- CoW rewrite = ``spark.read.parquet(partial_files).filter(~pred)`` written
+- CoW rewrite = the scan of the partial files ``.filter(~pred)``, written
   back through the normal fanout writer (vectorized, distributed);
-- MoR delete = ``_metadata.file_path/row_index`` projection of matching rows
-  into a pos-delete parquet file; scans anti-join it out;
+- MoR delete = the ``(__file, __pos)`` identity of matching rows, read by
+  ``scan.read_data_files``, into a pos-delete parquet file; scans
+  anti-join it out;
 - upsert = one snapshot carrying an equality-delete file (keys) + new data
   files — readers drop old rows via a broadcast anti-join, sequence-number
   gated so the new rows survive.
@@ -30,7 +31,7 @@ from ..meta.metadata import OP_DELETE, OP_OVERWRITE
 from ..plans.evaluators import (InclusiveMetricsEvaluator,
                                 StrictMetricsEvaluator)
 from ..session import local_frame
-from .scan import Scan, raw_file_path
+from .scan import Scan, read_data_files
 from .write import (PART_COL_PREFIX, discover_partitioned_files,
                     write_dataframe)
 
@@ -73,26 +74,22 @@ def _lineage_rewrite_prep(schema, keep_df):
     return keep_df, write_schema
 
 
-def _matches_df(spark: SparkSession, schema, bound_col, partial) -> DataFrame:
+def _matches_df(table, spark: SparkSession, bound_col, partial) -> DataFrame:
     """(file_path, pos) of predicate-matching rows in partially-matching
     files.  Rows already MoR-deleted may reappear here — harmless, pos
     deletes are idempotent under the read-side anti-join."""
-    src = spark.read.schema(schema.to_spark()).parquet(
-        *[t.data_file.file_path for t in partial])
-    # raw (percent-decoded) paths: every downstream join/lookup keys on
-    # the manifest-recorded path — the partitioned fanout mapping, DV
-    # referenced_data_file, absorb broadcasts — and the spec requires
-    # pos-delete file_path values to EQUAL the manifest path.
-    # Metadata rides in __-prefixed temporaries and the predicate runs
-    # BEFORE the final rename: naming them file_path/pos up front
-    # CLOBBERED same-named user data columns, so a predicate on a data
-    # column called `pos` filtered on the row index instead
-    return (src
-            .withColumn("__fp", raw_file_path(F.col("_metadata.file_path")))
-            .withColumn("__pos", F.col("_metadata.row_index"))
-            .filter(bound_col)
-            .select(F.col("__fp").alias("file_path"),
-                    F.col("__pos").alias("pos")))
+    src = read_data_files(spark, table,
+                          [t.data_file.file_path for t in partial])
+    # __file is the raw (percent-decoded) path: every downstream
+    # join/lookup keys on the manifest-recorded path — the partitioned
+    # fanout mapping, DV referenced_data_file, absorb broadcasts — and
+    # the spec requires pos-delete file_path values to EQUAL the
+    # manifest path.  The identity stays in __-prefixed columns until
+    # after the predicate: naming them file_path/pos up front CLOBBERED
+    # same-named user data columns, so a predicate on a data column
+    # called `pos` filtered on the row index instead
+    return src.filter(bound_col).select(F.col("__file").alias("file_path"),
+                                        F.col("__pos").alias("pos"))
 
 
 def _dead_delete_paths(table, dropped: List[str]) -> List[str]:
@@ -380,7 +377,7 @@ def delete_where(table, spark: SparkSession, expr: E.Expression,
             keep_manifests = txn._rewrite_manifests_without(dropped + dead)
         delete_files: List[M.DataFile] = []
         if partial:
-            matches = _matches_df(spark, schema, bound_col, partial)
+            matches = _matches_df(table, spark, bound_col, partial)
             delete_files = _pos_delete_fanout(spark, md, matches, partial)
         txn.append_files(delete_files, operation=OP_DELETE,
                          manifests_to_keep=keep_manifests,
@@ -397,7 +394,7 @@ def delete_where(table, spark: SparkSession, expr: E.Expression,
         delete_files: List[M.DataFile] = []
         dropped_dv_refs: set = set()
         if partial:
-            matches = _matches_df(spark, schema, bound_col, partial)
+            matches = _matches_df(table, spark, bound_col, partial)
             delete_files, dropped_dv_refs = _dv_delete_fanout(
                 spark, md, matches, partial)
         keep_manifests = None
@@ -464,7 +461,7 @@ def update_where(table, spark: SparkSession, expr: E.Expression,
     delete_files: List[M.DataFile] = []
     dropped_dv_refs: set = set()
     if partial:
-        matches = _matches_df(spark, schema, bound_col, partial)
+        matches = _matches_df(table, spark, bound_col, partial)
         if _tasks_have_dvs(partial) or md.format_version >= 3:
             # DV-covered targets: readers IGNORE new position-delete
             # files (supersede), so the old row versions would stay
@@ -617,25 +614,20 @@ def merge_into(table, spark: SparkSession, source: DataFrame,
     txn = table.new_transaction()
     src_keys = source.select(*key_columns)
 
-    # 1. pos-deletes for matched target rows (raw read is fine: rows
+    # 1. pos-deletes for matched target rows (no deletes applied: rows
     #    already MoR-deleted reappearing here is idempotent)
     delete_files: List[M.DataFile] = []
     merge_dropped_dv_refs: set = set()
     if when_matched is not None and tasks:
-        raw = spark.read.schema(schema.to_spark()).parquet(
-            *[t.data_file.file_path for t in tasks])
-        # __-prefixed temporaries: matched_condition / key columns may
+        # __-prefixed identity: matched_condition / key columns may
         # legitimately be named file_path or pos (see _matches_df note)
-        matches = (raw
-                   .withColumn("__fp",
-                               raw_file_path(
-                                   F.col("_metadata.file_path")))
-                   .withColumn("__pos", F.col("_metadata.row_index")))
+        matches = read_data_files(spark, table,
+                                  [t.data_file.file_path for t in tasks])
         if cond is not None:
             matches = matches.filter(cond)
         matches = (matches
                    .join(src_keys, key_columns, "leftsemi")
-                   .select(F.col("__fp").alias("file_path"),
+                   .select(F.col("__file").alias("file_path"),
                            F.col("__pos").alias("pos")))
         if _tasks_have_dvs(tasks):
             # DV-covered targets: new position-delete files would be

@@ -274,6 +274,7 @@ class InspectTable:
         own blob) or legacy container (its footer), as the scan does."""
         from pyspark.sql import functions as F
         from ..meta.dv import DV_ITEM_SCHEMA, DV_SCHEMA, expand_dv_items
+        from .scan import read_delete_files
         dels = [d for t in self.table.scan().plan_files()
                 for d in t.pos_deletes]
         parquet = sorted({d.file_path for d in dels
@@ -283,8 +284,7 @@ class InspectTable:
                            for d in dels if d.file_format == "PUFFIN"})
         dfs = []
         if parquet:
-            dfs.append(self.spark.read.parquet(*parquet)
-                       .select("file_path", F.col("pos").cast("long")))
+            dfs.append(read_delete_files(self.spark, parquet))
         if dv_items:
             dfs.append(local_frame(self.spark, dv_items, DV_ITEM_SCHEMA)
                        .mapInArrow(expand_dv_items, DV_SCHEMA)

@@ -98,6 +98,198 @@ def read_delete_files(spark: SparkSession, paths: List[str],
         .select(*keys)
 
 
+def read_data_files(spark: SparkSession, table, paths: List[str],
+                    schema: Optional[Schema] = None,
+                    row_lineage: bool = False,
+                    identity: bool = True) -> DataFrame:
+    """The rows of the data files at ``paths``, under ``schema`` (default:
+    the table's current schema), plus ``__file`` (the path as manifests
+    record it) and ``__pos`` (the row's position in its file) unless
+    ``identity`` is off: a plan that reads the file metadata keeps
+    reading it even where the columns are dropped.  Applies no
+    deletes.  Every path that reads table rows reads them here, so a
+    column resolves the same way for all of them:
+
+    - by parquet field id where the file carries ids;
+    - through the table's name mapping where it carries none (files
+      registered with ``add_files``);
+    - as the field's initial default where the file predates the field.
+
+    ``row_lineage`` adds ``_row_id`` and ``_last_updated_sequence_number``
+    as far as files materialize them (null elsewhere)."""
+    md = table.metadata
+    schema = schema or md.schema()
+    # encrypted tables: arm the session's PME confs so the parquet
+    # reader can unwrap footers (no-op without a JVM KmsClient)
+    from ..encryption import (apply_parquet_encryption,
+                              table_encryption_enabled)
+    if table_encryption_enabled(md.properties):
+        apply_parquet_encryption(spark, md.properties)
+    layouts = _file_layouts(spark, md, paths, schema)
+    groups: Dict[Tuple[bool, FrozenSet[int]], List[str]] = {}
+    for p in paths:
+        groups.setdefault(layouts[p], []).append(p)
+    return functools.reduce(DataFrame.unionByName, [
+        _read_layout(spark, md, schema, group, name_based, missing_ids,
+                     row_lineage, identity)
+        for (name_based, missing_ids), group in groups.items()])
+
+
+def _file_layouts(spark: SparkSession, md, paths: List[str], schema: Schema
+                  ) -> Dict[str, Tuple[bool, FrozenSet[int]]]:
+    """Per data file: (resolves by name, initial-default field ids it
+    lacks).  Probe jobs run only for tables that need them: the field-id
+    probe where the table has a name mapping, the defaults probe where
+    the schema has initial defaults."""
+    # name mapping (spec: schema.name-mapping.default property,
+    # name_mapping.go:85): when present, probe footers on executors
+    # for files lacking parquet field IDs — those resolve columns
+    # through the mapping instead of by ID
+    from ..meta.name_mapping import PROP_NAME_MAPPING
+    nm_json = md.properties.get(PROP_NAME_MAPPING)
+    if nm_json:
+        # data files are immutable, so the has-field-ids footer probe
+        # is cached per path for the process lifetime — one executor
+        # probe job per file ever, not one per scan
+        unknown = sorted(set(paths) - _FIELD_ID_PROBE_CACHE.keys())
+        if unknown:
+            flags = spark.sparkContext.parallelize(
+                unknown, max(1, min(len(unknown), 64))) \
+                .map(_file_has_field_ids).collect()
+            _FIELD_ID_PROBE_CACHE.update(zip(unknown, flags))
+
+    # v3 default values: files written before a defaulted column was
+    # added must read that column as its initial-default, not null —
+    # a per-FILE decision (a newer file's explicit nulls stay null),
+    # so footer-probe which default fields each file lacks
+    # nested fields included: a default inside a struct fills via
+    # withField on rows whose parent struct exists (a file missing
+    # the whole struct reads the struct as null, not as a struct of
+    # defaults — reference ToRequestedSchema semantics)
+    default_fields = [f for f in schema._by_id.values()
+                      if f.initial_default is not None]
+    missing_defaults: Dict[str, frozenset] = {}
+    if default_fields:
+        missing_defaults = _probe_missing_defaults(
+            spark, paths, default_fields, nm_json)
+    return {p: (bool(nm_json) and not _FIELD_ID_PROBE_CACHE[p],
+                missing_defaults.get(p, frozenset()))
+            for p in paths}
+
+
+def _read_layout(spark: SparkSession, md, schema: Schema, paths: List[str],
+                 name_based: bool, missing_ids: FrozenSet[int],
+                 row_lineage: bool, identity: bool) -> DataFrame:
+    """``read_data_files`` for files of one layout."""
+    spark_schema = schema.to_spark()
+    ident = ([raw_file_path(F.col("_metadata.file_path")).alias("__file"),
+              F.col("_metadata.row_index").alias("__pos")]
+             if identity else [])
+    if name_based:
+        # ID-less files: infer the file schema, then resolve each
+        # current-schema field through the name mapping (file name
+        # -> field ID -> current name), casting promoted types and
+        # null-filling columns added after import
+        from ..meta.name_mapping import NameMapping, PROP_NAME_MAPPING
+        nm = NameMapping.from_json(md.properties[PROP_NAME_MAPPING])
+        try:
+            df = (spark.read.option("mergeSchema", "true")
+                  .parquet(*paths))
+        except Exception:
+            # schema inference rejects GEOMETRY/unshredded
+            # VARIANT annotations on externally-written files;
+            # list the footer's top-level columns through the
+            # JVM reader and read with an explicit schema (geo
+            # lowers to binary, which the reader accepts)
+            import pyspark.sql.types as ST
+            fcols = _jvm_top_level_columns(spark, paths)
+            by_name = {sf.name: sf.dataType
+                       for sf in spark_schema.fields}
+            read_fields = []
+            for c in fcols:
+                fid = nm.id_for(c)
+                tgt = None
+                if fid is not None:
+                    # map through current name -> spark type
+                    cur = schema.find_column_name(fid)
+                    tgt = by_name.get(cur)
+                if tgt is None:
+                    tgt = by_name.get(c)
+                if tgt is not None:
+                    read_fields.append(ST.StructField(c, tgt, True))
+            df = spark.read.schema(
+                ST.StructType(read_fields)).parquet(*paths)
+        by_id: Dict[int, List[str]] = {}
+        for c in sorted(df.columns):
+            fid = nm.id_for(c)
+            if fid is not None:
+                by_id.setdefault(fid, []).append(c)
+        sel = []
+        resolved: Dict[int, Optional[List[str]]] = {}
+        for f0, sf in zip(schema.fields, spark_schema.fields):
+            srcs = by_id.get(f0.field_id)
+            resolved[f0.field_id] = srcs
+            if not srcs:
+                sel.append(F.lit(None).cast(sf.dataType)
+                           .alias(f0.name))
+            else:
+                # several file columns can map to one field id
+                # after a rename (the mapping keeps the old name
+                # as an alias): per ROW exactly one is non-null,
+                # since each file carries one of the aliases
+                src = (F.col(srcs[0]) if len(srcs) == 1
+                       else F.coalesce(*[F.col(c) for c in srcs]))
+                sel.append(src.cast(sf.dataType).alias(f0.name))
+        if row_lineage:
+            sel += [F.lit(None).cast("long").alias("_row_id"),
+                    F.lit(None).cast("long")
+                    .alias("_last_updated_sequence_number")]
+        df = df.select(*sel, *ident)
+        # ID-less files have no PARQUET:field_id, so the footer
+        # probe marks every defaulted field "missing" — but a
+        # name-resolved column IS present; filling it would
+        # clobber real data.  Fill only TOP-LEVEL fields the
+        # name resolution could not find; nested defaults are
+        # skipped entirely for name-based groups (presence of a
+        # nested field cannot be probed through the top-level
+        # mapping, and a wrong fill overwrites real values)
+        missing_ids = frozenset(
+            fid for fid in missing_ids
+            if fid in resolved and resolved.get(fid) is None)
+    else:
+        read_schema = spark_schema
+        if row_lineage:
+            # position-delta reinsert files materialize _row_id
+            # (position_delta_writer.go), and lineage-preserving
+            # compaction materializes BOTH lineage columns
+            # (rewrite_data_files.go:339-390 WithPreserveRowLineage);
+            # files without the columns read null here and the scan
+            # synthesizes them
+            import pyspark.sql.types as ST
+            read_schema = ST.StructType(
+                list(spark_schema.fields) +
+                [ST.StructField("_row_id", ST.LongType(), True),
+                 ST.StructField("_last_updated_sequence_number",
+                                ST.LongType(), True)])
+        df = spark.read.schema(read_schema).parquet(*paths)
+        if identity:
+            df = df.select("*", *ident)
+    # v3 initial-defaults: these files all lack these fields — every
+    # row reads the default (constant column, filled before delete
+    # joins and residual filters so both see the defaulted values)
+    # defaults fill at ANY depth (struct via withField, list
+    # interiors via transform, map values via a keys+values
+    # rebuild); null parents stay null (table/defaults.py)
+    from .defaults import fill_default
+    defaults_by_id = {f.field_id: f for f in schema._by_id.values()
+                      if f.initial_default is not None}
+    for fid in sorted(missing_ids):
+        f0 = defaults_by_id[fid]
+        path = schema.find_column_name(fid) or f0.name
+        df = fill_default(df, schema, path, f0, f0.initial_default)
+    return df
+
+
 @dataclass
 class FileScanTask:
     data_file: M.DataFile
@@ -500,7 +692,6 @@ class Scan:
         schema = self.effective_schema()
         projection = self.projection()
         tasks = self.plan_files()
-        spark_schema = schema.to_spark()
         if not tasks:
             empty_schema = projection.to_spark()
             if self.row_lineage:
@@ -514,54 +705,9 @@ class Scan:
                                        ST.LongType())])
             return local_frame(spark, [], empty_schema)
 
-        # encrypted tables: arm the session's PME confs so the parquet
-        # reader can unwrap footers (no-op without a JVM KmsClient)
-        from ..encryption import (apply_parquet_encryption,
-                                  table_encryption_enabled)
-        if table_encryption_enabled(md.properties):
-            apply_parquet_encryption(spark, md.properties)
-
-        # name mapping (spec: schema.name-mapping.default property,
-        # name_mapping.go:85): when present, probe footers on executors
-        # for files lacking parquet field IDs — those resolve columns
-        # through the mapping instead of by ID
-        from ..meta.name_mapping import PROP_NAME_MAPPING
-        nm_json = md.properties.get(PROP_NAME_MAPPING)
-        if nm_json:
-            # data files are immutable, so the has-field-ids footer probe
-            # is cached per path for the process lifetime — one executor
-            # probe job per file ever, not one per scan
-            unknown = sorted({t.data_file.file_path for t in tasks}
-                             - _FIELD_ID_PROBE_CACHE.keys())
-            if unknown:
-                flags = spark.sparkContext.parallelize(
-                    unknown, max(1, min(len(unknown), 64))) \
-                    .map(_file_has_field_ids).collect()
-                _FIELD_ID_PROBE_CACHE.update(zip(unknown, flags))
-            for t in tasks:
-                t.data_file.name_based = \
-                    not _FIELD_ID_PROBE_CACHE[t.data_file.file_path]
-
-        # v3 default values: files written before a defaulted column was
-        # added must read that column as its initial-default, not null —
-        # a per-FILE decision (a newer file's explicit nulls stay null),
-        # so footer-probe which default fields each file lacks and group
-        # by the missing set (defaults_by_id/fill below)
-        # nested fields included: a default inside a struct fills via
-        # withField on rows whose parent struct exists (a file missing
-        # the whole struct reads the struct as null, not as a struct of
-        # defaults — reference ToRequestedSchema semantics)
-        default_fields = [f for f in schema._by_id.values()
-                          if f.initial_default is not None]
-        missing_defaults: Dict[str, frozenset] = {}
-        if default_fields:
-            missing_defaults = _probe_missing_defaults(
-                spark, tasks, default_fields, nm_json)
-        defaults_by_id = {f.field_id: f for f in default_fields}
-
-        # group tasks by (applicable eq-delete set, name-based flag) so
-        # each group is one clean scan + anti-join pipeline; usually one
-        # group.  POSITION deletes (parquet pos files, legacy puffin
+        # group tasks by (applicable eq-delete set, residual need, file
+        # layout) so each group is one read + anti-join pipeline; usually
+        # one group.  POSITION deletes (parquet pos files, legacy puffin
         # containers and v3 per-DV entries alike) are deliberately NOT
         # part of the key: every positional delete names its target data
         # file by path and the apply joins are keyed on that path, so
@@ -573,16 +719,18 @@ class Scan:
         # EQUALITY deletes stay in the key: they are sequence-gated (a
         # delete applies only to data files with a lower sequence
         # number), so the applicable set genuinely differs per file.
+        layouts = _file_layouts(spark, md,
+                                [t.data_file.file_path for t in tasks],
+                                schema)
+
         def key(t: FileScanTask) -> Tuple:
             return (frozenset((tuple(d.equality_ids or []), d.file_path,
                                d.record_count)
                               for d in t.eq_deletes),
-                    t.data_file.name_based,
                     # strict-match files (residual TRUE) skip the filter
                     not isinstance(t.residual, E.AlwaysTrue)
                     if t.residual is not None else False,
-                    missing_defaults.get(t.data_file.file_path,
-                                         frozenset()))
+                    layouts[t.data_file.file_path])
 
         groups: Dict[Tuple, List[FileScanTask]] = {}
         for t in tasks:
@@ -590,117 +738,21 @@ class Scan:
 
         bound = E.bind(self.row_filter, schema, self.case_sensitive)
         dfs = []
-        for (eq_set, name_based, needs_filter, missing_ids), \
-                group in groups.items():
-            paths = [t.data_file.file_path for t in group]
+        for (eq_set, needs_filter, _layout), group in groups.items():
             pos_set = frozenset(
                 (d.file_path, d.file_format, d.record_count)
                 for t in group for d in t.pos_deletes
                 if d.referenced_data_file is None)
-            if name_based:
-                # ID-less files: infer the file schema, then resolve each
-                # current-schema field through the name mapping (file name
-                # -> field ID -> current name), casting promoted types and
-                # null-filling columns added after import.  _metadata is
-                # materialized so the delete/lineage joins below still work.
-                from ..meta.name_mapping import NameMapping
-                nm = NameMapping.from_json(nm_json) if nm_json else None
-                try:
-                    df = (spark.read.option("mergeSchema", "true")
-                          .parquet(*paths))
-                except Exception:
-                    # schema inference rejects GEOMETRY/unshredded
-                    # VARIANT annotations on externally-written files;
-                    # list the footer's top-level columns through the
-                    # JVM reader and read with an explicit schema (geo
-                    # lowers to binary, which the reader accepts)
-                    import pyspark.sql.types as ST
-                    fcols = _jvm_top_level_columns(spark, paths)
-                    by_name = {sf.name: sf.dataType
-                               for sf in spark_schema.fields}
-                    read_fields = []
-                    for c in fcols:
-                        fid = nm.id_for(c) if nm is not None else None
-                        tgt = None
-                        if fid is not None:
-                            # map through current name -> spark type
-                            cur = schema.find_column_name(fid)
-                            tgt = by_name.get(cur)
-                        if tgt is None:
-                            tgt = by_name.get(c)
-                        if tgt is not None:
-                            read_fields.append(ST.StructField(c, tgt, True))
-                    df = spark.read.schema(
-                        ST.StructType(read_fields)).parquet(*paths)
-                file_cols = set(df.columns)
-                by_id: Dict[int, List[str]] = {}
-                if nm is not None:
-                    for c in sorted(file_cols):
-                        fid = nm.id_for(c)
-                        if fid is not None:
-                            by_id.setdefault(fid, []).append(c)
-                sel = []
-                resolved: Dict[int, Optional[List[str]]] = {}
-                for f0, sf in zip(schema.fields, spark_schema.fields):
-                    srcs = by_id.get(f0.field_id) if nm is not None else \
-                        ([f0.name] if f0.name in file_cols else None)
-                    resolved[f0.field_id] = srcs
-                    if not srcs:
-                        sel.append(F.lit(None).cast(sf.dataType)
-                                   .alias(f0.name))
-                    else:
-                        # several file columns can map to one field id
-                        # after a rename (the mapping keeps the old name
-                        # as an alias): per ROW exactly one is non-null,
-                        # since each file carries one of the aliases
-                        src = (F.col(srcs[0]) if len(srcs) == 1
-                               else F.coalesce(*[F.col(c) for c in srcs]))
-                        sel.append(src.cast(sf.dataType).alias(f0.name))
-                df = df.select(*sel, F.col("_metadata"))
-                # ID-less files have no PARQUET:field_id, so the footer
-                # probe marks every defaulted field "missing" — but a
-                # name-resolved column IS present; filling it would
-                # clobber real data.  Fill only TOP-LEVEL fields the
-                # name resolution could not find; nested defaults are
-                # skipped entirely for name-based groups (presence of a
-                # nested field cannot be probed through the top-level
-                # mapping, and a wrong fill overwrites real values)
-                missing_ids = frozenset(
-                    fid for fid in missing_ids
-                    if fid in resolved and resolved.get(fid) is None)
-            else:
-                read_schema = spark_schema
-                if self.row_lineage:
-                    # position-delta reinsert files materialize _row_id
-                    # (position_delta_writer.go), and lineage-preserving
-                    # compaction materializes BOTH lineage columns
-                    # (rewrite_data_files.go:339-390 WithPreserveRowLineage);
-                    # files without the columns read null here and fall
-                    # back to synthesis below
-                    import pyspark.sql.types as ST
-                    read_schema = ST.StructType(
-                        list(spark_schema.fields) +
-                        [ST.StructField("_row_id", ST.LongType(), True),
-                         ST.StructField("_last_updated_sequence_number",
-                                        ST.LongType(), True)])
-                df = spark.read.schema(read_schema).parquet(*paths)
-            # v3 initial-defaults: this group's files all lack these
-            # fields — every row reads the default (constant column,
-            # filled before delete joins and residual filters so both
-            # see the defaulted values)
-            # defaults fill at ANY depth (struct via withField, list
-            # interiors via transform, map values via a keys+values
-            # rebuild); null parents stay null (table/defaults.py)
-            from .defaults import fill_default
-            for fid in sorted(missing_ids):
-                f0 = defaults_by_id[fid]
-                path = schema.find_column_name(fid) or f0.name
-                df = fill_default(df, schema, path, f0,
-                                  f0.initial_default)
-            if self.row_lineage and name_based:
-                df = (df.withColumn("_row_id", F.lit(None).cast("long"))
-                      .withColumn("_last_updated_sequence_number",
-                                  F.lit(None).cast("long")))
+            # v3 DV entries, located by their manifest offset and size
+            dv_slices = {
+                (d.file_path, d.content_offset, d.content_size_in_bytes,
+                 d.referenced_data_file): d.record_count
+                for t in group for d in t.pos_deletes
+                if d.referenced_data_file is not None}
+            df = read_data_files(
+                spark, self.table, [t.data_file.file_path for t in group],
+                schema, self.row_lineage,
+                identity=bool(self.row_lineage or pos_set or dv_slices))
             if self.row_lineage:
                 # materialized lineage (compaction-preserved) wins;
                 # otherwise synthesize from the manifest: _row_id =
@@ -720,33 +772,19 @@ class Scan:
                 # LEFT join: a path-normalization miss must degrade
                 # to null lineage for that file, never silently drop
                 # its rows (delete anti-joins fail open; so does this)
-                df = (df.withColumn("__lf", raw_file_path(
-                          F.col("_metadata.file_path")))
-                      .withColumn("__ri", F.col("_metadata.row_index"))
-                      .join(F.broadcast(lineage),
-                            F.col("__lf") == F.col("__lfile"), "left")
+                df = (df.join(F.broadcast(lineage),
+                              F.col("__file") == F.col("__lfile"), "left")
                       .withColumn("_row_id",
                                   F.coalesce(F.col("_row_id"),
                                              F.col("__first") +
-                                             F.col("__ri")))
+                                             F.col("__pos")))
                       .withColumn(
                           "_last_updated_sequence_number",
                           F.coalesce(
                               F.col("_last_updated_sequence_number"),
                               F.col("__lseq")))
-                      .drop("__lf", "__ri", "__lfile", "__first",
-                            "__lseq"))
-            # v3 DV entries, located by their manifest offset and size
-            dv_slices = {
-                (d.file_path, d.content_offset, d.content_size_in_bytes,
-                 d.referenced_data_file): d.record_count
-                for t in group for d in t.pos_deletes
-                if d.referenced_data_file is not None}
+                      .drop("__lfile", "__first", "__lseq"))
             if pos_set or dv_slices:
-                # normalize URI scheme differences (file:// vs plain path)
-                df = df.withColumns({
-                    "__file": raw_file_path(F.col("_metadata.file_path")),
-                    "__pos": F.col("_metadata.row_index")})
                 # DVs as read_dv_blobs work items (DV_ITEM_SCHEMA)
                 dv_items = [(p, None, None, None) for p, fmt, _n
                             in sorted(pos_set) if fmt == "PUFFIN"]
@@ -760,7 +798,6 @@ class Scan:
                     spark, df,
                     sorted(p for p, fmt, _n in pos_set if fmt != "PUFFIN"),
                     dv_items, rows <= _broadcast_row_limit())
-                df = df.drop("__file", "__pos")
             # one anti-join per key set, not per delete file
             eq_groups: Dict[Tuple, List[Tuple[str, int]]] = {}
             for eq_ids, dpath, n_rows in sorted(eq_set):
@@ -807,8 +844,7 @@ class Scan:
                     piece = df[c].eqNullSafe(ddf[f"__eq_{c}"])
                     cond = piece if cond is None else (cond & piece)
                 df = df.join(ddf, cond, "left_anti")
-            if name_based:
-                df = df.drop("_metadata")
+            df = df.drop("__file", "__pos")
             # residual filter: strict-match groups skip this entirely
             if needs_filter and not isinstance(bound, E.AlwaysTrue):
                 df = df.filter(E.to_spark_column(bound))
@@ -958,13 +994,13 @@ def _file_field_ids(path_nm: Tuple[str, Optional[str]]) -> frozenset:
     return frozenset(ids)
 
 
-def _probe_missing_defaults(spark: SparkSession, tasks, default_fields,
-                            nm_json: Optional[str] = None
+def _probe_missing_defaults(spark: SparkSession, paths: List[str],
+                            default_fields, nm_json: Optional[str] = None
                             ) -> Dict[str, frozenset]:
     """Per data file: which initial-default fields are absent from its
     footer.  Probes run once per file per process (executor-parallel),
     cached like the name-mapping probe."""
-    keys = sorted({(t.data_file.file_path, nm_json) for t in tasks}
+    keys = sorted({(p, nm_json) for p in paths}
                   - _FILE_FIELD_IDS_CACHE.keys())
     if keys:
         sets = spark.sparkContext.parallelize(
@@ -973,11 +1009,10 @@ def _probe_missing_defaults(spark: SparkSession, tasks, default_fields,
         _FILE_FIELD_IDS_CACHE.update(zip(keys, sets))
     dids = {f.field_id for f in default_fields}
     out = {}
-    for t in tasks:
-        ids = _FILE_FIELD_IDS_CACHE[(t.data_file.file_path, nm_json)]
-        out[t.data_file.file_path] = (
-            frozenset() if ids == FOOTER_UNREADABLE
-            else frozenset(dids - ids))
+    for p in paths:
+        ids = _FILE_FIELD_IDS_CACHE[(p, nm_json)]
+        out[p] = (frozenset() if ids == FOOTER_UNREADABLE
+                  else frozenset(dids - ids))
     return out
 
 
@@ -1112,14 +1147,6 @@ class _DeleteIndex:
             elif dseq > data_seq:
                 eq.append(df)
         return pos, eq
-
-
-def _match_deletes(entry: M.ManifestEntry, spec_id: int,
-                   delete_entries: List[Tuple[M.ManifestEntry, int]],
-                   md: TableMetadata) -> Tuple[List[M.DataFile], List[M.DataFile]]:
-    """One-shot form of _DeleteIndex.match (kept for external callers;
-    plan_files builds the index once and reuses it)."""
-    return _DeleteIndex(delete_entries).match(entry, spec_id)
 
 
 def _jvm_top_level_columns(spark, paths: List[str]) -> List[str]:

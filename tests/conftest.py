@@ -24,6 +24,23 @@ def read_table(spark, name, sf=SF_DIR):
     return spark.read.parquet(os.path.join(sf, f"{name}.parquet"))
 
 
+def id_less_table(spark, cat, ident, df, path, properties=None):
+    """A table holding ``df``'s rows as one parquet file WITHOUT field ids
+    (pyarrow writes none), registered with ``add_files``: every read of
+    it has to resolve columns through the table's name mapping."""
+    import pyarrow.parquet as pq
+    from iceberg_go_spark.schema import Schema
+    pq.write_table(df.toArrow(), path)
+    assert not any((f.metadata or {}).get(b"PARQUET:field_id")
+                   for f in pq.read_schema(path))
+    t = cat.create_table(ident, Schema.from_spark(df.schema),
+                         properties=properties or {})
+    txn = t.new_transaction()
+    txn.add_files(spark, [path])
+    txn.commit()
+    return cat.load_table(ident)
+
+
 def components_on_both_paths(pairs, monkeypatch, **kw):
     """connected_components under an open broadcast gate (driver finish)
     and a closed one (distributed rounds).  Both must give the same

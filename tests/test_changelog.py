@@ -7,11 +7,17 @@ replace commits must emit NO change rows.
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from iceberg_go_spark import expressions as E
 from iceberg_go_spark.catalog import FilesystemCatalog
 from iceberg_go_spark.schema import Schema
-from tests.conftest import read_table
+from tests.conftest import id_less_table, read_table
+
+
+def _changes(ch):
+    return sorted((r._change_ordinal, r._change_type, r.id, r.v)
+                  for r in ch.collect())
 
 
 def test_changelog_across_commit_kinds(spark, tmp_path, sf_dir):
@@ -122,14 +128,52 @@ def test_changelog_excludes_other_branches(spark, sf_dir, tmp_path):
     assert ids == [2], ids  # dev's 100 must not leak into main's CDC
 
 
-def test_is_puffin_prefers_file_format():
-    """DV classification keys on file_format=='PUFFIN'; the extension
-    is only a fallback for entries missing the format field."""
-    from types import SimpleNamespace as NS
-    from iceberg_go_spark.table.changelog import _is_puffin
-    assert _is_puffin(NS(file_format="PUFFIN", file_path="dv.bin"))
-    assert not _is_puffin(NS(file_format="PARQUET",
-                             file_path="odd.puffin"))
-    assert _is_puffin(NS(file_format="", file_path="a.puffin"))
-    assert _is_puffin(NS(file_format=None, file_path="a.puffin"))
-    assert not _is_puffin(NS(file_format=None, file_path="a.parquet"))
+@pytest.mark.parametrize("mode", ["merge-on-read", "copy-on-write",
+                                  "merge-on-read-dv"])
+def test_changelog_upsert_then_delete(spark, tmp_path, mode):
+    """The upsert's equality delete hides (1,'a') from the later delete,
+    which removes the upserted (1,'A'): each row is reported deleted
+    exactly once, in the snapshot that deleted it."""
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    t = cat.create_table("db.ud", Schema.from_spark(df.schema))
+    t.append(df)
+    t.upsert(spark, spark.createDataFrame([(1, "A"), (3, "c")], df.schema),
+             ["id"])
+    t = cat.load_table("db.ud")
+    t.delete_where(spark, E.eq("id", 1), mode=mode)
+    t = cat.load_table("db.ud")
+    assert _changes(t.changelog(spark)) == [
+        (0, "insert", 1, "a"), (0, "insert", 2, "b"),
+        (1, "delete", 1, "a"), (1, "insert", 1, "A"),
+        (1, "insert", 3, "c"),
+        (2, "delete", 1, "A")]
+    assert sorted(map(tuple, t.to_df(spark).collect())) == \
+        [(2, "b"), (3, "c")]
+
+
+def _id_less_rows(spark, tmp_path):
+    rows = [(i, f"v{i}") for i in range(5)]
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    t = id_less_table(spark, cat, "db.idless",
+                      spark.createDataFrame(rows, "id long, v string"),
+                      str(tmp_path / "idless.parquet"))
+    return cat, t, rows
+
+
+def test_changelog_on_add_files_table(spark, tmp_path):
+    """Files registered with add_files carry no field ids: the changelog
+    resolves them through the name mapping, as the scan does, so the
+    inserts carry values, not NULLs, and a delete finds its row."""
+    cat, t, rows = _id_less_rows(spark, tmp_path)
+    t.delete_where(spark, E.eq("id", 1), mode="merge-on-read")
+    t = cat.load_table("db.idless")
+    assert _changes(t.changelog(spark)) == sorted(
+        [(0, "insert", i, v) for i, v in rows] + [(1, "delete", 1, "v1")])
+
+
+def test_incremental_append_on_add_files_table(spark, tmp_path):
+    from iceberg_go_spark.streaming.source import incremental_append_df
+    cat, t, rows = _id_less_rows(spark, tmp_path)
+    assert sorted(map(tuple, incremental_append_df(
+        spark, t, None).collect())) == rows

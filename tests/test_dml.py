@@ -10,7 +10,7 @@ from iceberg_go_spark.catalog import FilesystemCatalog
 from iceberg_go_spark.meta.partitioning import spec_from_names
 from iceberg_go_spark.schema import Schema
 
-from conftest import read_table
+from conftest import id_less_table, read_table
 
 
 @pytest.fixture()
@@ -640,3 +640,30 @@ def test_dv_supersede_survives_occ_rebase(spark, sf_dir, catalog):
             f"two live DVs for {fp}: {sorted(containers)}"
     got = t.scan().to_df(spark)
     assert got.filter(F.col("n_nationkey").isin(1, 2)).count() == 0
+
+
+@pytest.mark.parametrize("op", ["merge-on-read", "merge-on-read-dv",
+                                "update", "merge"])
+def test_row_level_ops_on_add_files_table(spark, tmp_path, catalog, op):
+    """Row-level operations on files registered with add_files (no field
+    ids) match rows through the name mapping, as the scan reads them:
+    read by id, every column of such a file would be NULL and nothing
+    would match."""
+    rows = [(i, f"v{i}") for i in range(5)]
+    t = id_less_table(spark, catalog, "db.idless",
+                      spark.createDataFrame(rows, "id long, v string"),
+                      str(tmp_path / "idless.parquet"))
+    expected = dict(rows)
+    if op == "update":
+        t.update_where(spark, E.eq("id", 1), {"v": F.lit("U")})
+        expected[1] = "U"
+    elif op == "merge":
+        t.merge_into(spark, spark.createDataFrame(
+            [(0, "X"), (9, "n")], "id long, v string"), ["id"])
+        expected.update({0: "X", 9: "n"})
+    else:
+        t.delete_where(spark, E.eq("id", 1), mode=op)
+        del expected[1]
+    got = catalog.load_table("db.idless").to_df(spark).collect()
+    assert sorted(map(tuple, got)) == sorted(expected.items())
+

@@ -6,7 +6,10 @@ table contents must match the shadow exactly.
 This is the property the whole DML plane must hold: any interleaving of
 copy-on-write rewrites, merge-on-read deletes, row-delta upserts, and
 position-delta merges yields the same rows a plain in-memory model
-produces."""
+produces.  It holds for both kinds of initial load: the engine's own
+append (files with field ids) and ``add_files`` of a parquet copy without
+field ids (read through the name mapping).  At the end, folding the
+changelog reproduces the table."""
 
 import random
 
@@ -18,7 +21,7 @@ from iceberg_go_spark import expressions as E
 from iceberg_go_spark.catalog import FilesystemCatalog
 from iceberg_go_spark.schema import Schema
 
-from conftest import read_table
+from conftest import id_less_table, read_table
 
 N_OPS = 10
 
@@ -38,14 +41,38 @@ def _assert_same(spark, t, shadow: pd.DataFrame, step: str) -> None:
         step
 
 
-@pytest.mark.parametrize("seed", [11, 23])
-def test_random_dml_sequence(spark, sf_dir, tmp_path, seed):
+def _assert_changelog_folds(spark, t) -> None:
+    """Every row's net change count (+1 per insert, -1 per delete) is 0
+    or 1, and the rows at +1 are the table, as a multiset."""
+    cols = t.to_df(spark).columns
+    net = (t.changelog(spark)
+           .groupBy(*cols)
+           .agg(F.sum(F.when(F.col("_change_type") == "insert", 1)
+                      .otherwise(-1)).alias("n")))
+    assert net.filter(~F.col("n").isin(0, 1)).count() == 0
+    folded = net.filter(F.col("n") == 1).select(*cols)
+    live = t.to_df(spark)
+    assert folded.exceptAll(live).count() == 0
+    assert live.exceptAll(folded).count() == 0
+
+
+@pytest.mark.parametrize("seed,load", [
+    pytest.param(11, "append", id="11"),
+    pytest.param(23, "append", id="23"),
+    pytest.param(11, "add_files", id="add_files-11"),
+    pytest.param(23, "add_files", id="add_files-23")])
+def test_random_dml_sequence(spark, sf_dir, tmp_path, seed, load):
     rng = random.Random(seed)
     base = (read_table(spark, "orders", sf_dir)
             .filter(F.col("o_orderkey") % 5 == 0).limit(400).cache())
     cat = FilesystemCatalog(str(tmp_path / "wh"))
-    t = cat.create_table(f"db.rand{seed}", Schema.from_spark(base.schema))
-    t.append(base)
+    if load == "append":
+        t = cat.create_table(f"db.rand{seed}",
+                             Schema.from_spark(base.schema))
+        t.append(base)
+    else:
+        t = id_less_table(spark, cat, f"db.rand{seed}", base,
+                          str(tmp_path / "base.parquet"))
     shadow = base.toPandas()
     next_key = int(shadow["o_orderkey"].max()) + 1
 
@@ -125,3 +152,4 @@ def test_random_dml_sequence(spark, sf_dir, tmp_path, seed):
                             .isin(victims["o_orderkey"])]
             shadow = shadow.reset_index(drop=True)
         _assert_same(spark, t, shadow, f"step {step}: {op}")
+    _assert_changelog_folds(spark, t)

@@ -372,13 +372,16 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     onto JVM-only plans: the `_metadata.file_path` decode is a native
     expression and the driver-built side tables (partition mapping,
     lineage map, deletion-vector positions) are LocalTableScans, not
-    PythonRDDs."""
+    PythonRDDs.  Files registered with add_files (no field ids) resolve
+    through the name mapping on the same JVM-only plans, and DML on an
+    engine-written table runs no field-id footer probe."""
     from pyspark.sql.readwriter import DataFrameWriter
-    from conftest import read_table
+    from conftest import id_less_table, read_table
     from iceberg_go_spark import expressions as E
     from iceberg_go_spark.catalog import FilesystemCatalog
     from iceberg_go_spark.meta.partitioning import spec_from_names
     from iceberg_go_spark.schema import Schema
+    from iceberg_go_spark.table import scan as SC
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -396,12 +399,31 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     t = cat.create_table("db.mor", sch,
                          spec_from_names(sch, ("o_orderdate", "year")))
     t.append(orders)
+    probed = set(SC._FIELD_ID_PROBE_CACHE)
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     t.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
     monkeypatch.undo()
     assert len(written) == 1  # the partition-fanout pos-delete write
     plans = {"MoR delete match + partition mapping": written[0],
              "MoR scan": plan(cat.load_table("db.mor").to_df(spark))}
+    t = cat.load_table("db.mor")
+    t.update_where(spark, E.eq("o_orderstatus", "O"),
+                   {"o_totalprice": "o_totalprice + 1"})
+    t.merge_into(spark, orders.limit(5), ["o_orderkey"])
+    assert set(SC._FIELD_ID_PROBE_CACHE) == probed
+
+    idless = id_less_table(spark, cat, "db.idless", orders,
+                           str(tmp_path / "idless.parquet"))
+    written.clear()
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    idless.delete_where(spark, E.eq("o_orderstatus", "F"),
+                        mode="merge-on-read")
+    monkeypatch.undo()
+    assert len(written) == 1
+    plans["add_files MoR delete match"] = written[0]
+    idless = cat.load_table("db.idless")
+    assert idless.to_df(spark).filter("o_orderstatus = 'F'").count() == 0
+    plans["add_files MoR scan"] = plan(idless.to_df(spark))
 
     v3 = cat.create_table("db.v3", sch, properties={"format-version": "3"})
     v3.append(orders)
