@@ -23,15 +23,17 @@ at S, as multisets:
 
 Spark-first shape: every piece is a DataFrame op — two delete-applying
 scans and an ``exceptAll`` per side — so the changelog distributes and
-spills like any other scan; nothing is materialized on the driver.  Set
-operations need comparable columns, so Spark rejects the diff for a table
-with a map column.
+spills like any other scan; nothing is materialized on the driver.  Spark
+has no set operations on maps, so a top-level map column takes part in
+the diff as its entry array (the same row read twice lists its entries in
+the same order); a map nested inside a struct or array is not supported.
 """
 
 from __future__ import annotations
 
 from typing import Dict, List, Optional
 
+import pyspark.sql.types as ST
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..meta.metadata import OP_DELETE, OP_REPLACE
@@ -92,8 +94,14 @@ def changelog(table, spark: SparkSession,
                 Scan(table, snapshot_id=snap.snapshot_id).plan_files()}
         return planned[snap.snapshot_id]
 
+    maps = [f.name for f in schema.fields
+            if isinstance(f.dataType, ST.MapType)]
+
     def rows(tasks: List[FileScanTask]) -> Optional[DataFrame]:
-        return _tasks_scan_df(table, spark, tasks) if tasks else None
+        if not tasks:
+            return None
+        return _tasks_scan_df(table, spark, tasks).withColumns(
+            {m: F.map_entries(m) for m in maps})
 
     def stamp(df: DataFrame, kind: str, ordinal: int, snap_id: int
               ) -> DataFrame:
@@ -124,4 +132,4 @@ def changelog(table, spark: SparkSession,
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr)
-    return out
+    return out.withColumns({m: F.map_from_entries(m) for m in maps})

@@ -177,3 +177,28 @@ def test_incremental_append_on_add_files_table(spark, tmp_path):
     cat, t, rows = _id_less_rows(spark, tmp_path)
     assert sorted(map(tuple, incremental_append_df(
         spark, t, None).collect())) == rows
+
+
+def test_changelog_diffs_tables_with_a_map_column(spark, tmp_path):
+    """Spark has no set operations on maps: a map column takes part in
+    the diff as its entry array and comes back as a map."""
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(1, {"a": 1}), (2, {"b": 2, "c": 3}), (3, None)],
+        "id long, m map<string, int>")
+    t = cat.create_table("db.maps", Schema.from_spark(df.schema))
+    t.append(df.coalesce(1))
+    t.delete_where(spark, E.eq("id", 2), mode="merge-on-read")
+    t = cat.load_table("db.maps")
+    t.delete_where(spark, E.eq("id", 1))
+    t = cat.load_table("db.maps")
+    ch = t.changelog(spark)
+    assert ch.schema["m"].dataType == df.schema["m"].dataType
+    got = sorted((r._change_ordinal, r._change_type, r.id,
+                  sorted((r.m or {}).items())) for r in ch.collect())
+    assert got == [(0, "insert", 1, [("a", 1)]),
+                   (0, "insert", 2, [("b", 2), ("c", 3)]),
+                   (0, "insert", 3, []),
+                   (1, "delete", 2, [("b", 2), ("c", 3)]),
+                   (2, "delete", 1, [("a", 1)])]
+
