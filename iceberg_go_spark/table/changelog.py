@@ -7,30 +7,37 @@ Iceberg Java's ChangelogScanTask model.  The changes of a snapshot S in
 (from, to] are the difference between the table's rows at S's parent and
 at S, as multisets:
 
-- ``delete`` rows are ``parent.exceptAll(S)``, ``insert`` rows are
-  ``S.exceptAll(parent)``;
 - both sides are read through the scan, so position deletes, equality
   deletes and deletion vectors apply with the scan's sequence gating, and
   files without field ids resolve through the name mapping;
 - only the files S touched are read: data files it added or removed, and
   data files whose planned delete set it changed.  A side with no such
   files is not read, so an append reads its new files once;
-- a ``delete`` snapshot reports no inserts;
-- a row that S rewrote unchanged (a copy-on-write survivor, a no-op
-  update) is on both sides and emits nothing;
+- a file on both sides keeps its rows in place, so its rows are diffed
+  by (file, position) with no value comparison: a merge-on-read delete
+  reads the file's identities at S and anti-joins the parent's rows;
+- the rows that leave and the rows that arrive are then diffed by value
+  (``exceptAll``) where S both removes and adds rows: a row S rewrote
+  unchanged (a copy-on-write survivor, a no-op update) is on both sides
+  and emits nothing;
+- where the value diff runs, a ``delete`` snapshot reports no inserts;
 - ``replace`` snapshots (compaction, rewrites) are physical, not logical,
   changes and emit nothing.
 
-Spark-first shape: every piece is a DataFrame op — two delete-applying
-scans and an ``exceptAll`` per side — so the changelog distributes and
-spills like any other scan; nothing is materialized on the driver.  Spark
-has no set operations on maps, so a top-level map column takes part in
-the diff as its entry array (the same row read twice lists its entries in
-the same order); a map nested inside a struct or array is not supported.
+Spark-first shape: every piece is a DataFrame op — delete-applying scans,
+(file, position) anti-joins and an ``exceptAll`` per side — so the
+changelog distributes and spills like any other scan; nothing is
+materialized on the driver.  Spark has no set operations on maps or
+VARIANT values: a top-level map takes part in the value diff as its
+entry array (the same row read twice lists its entries in the same
+order), and a table with a VARIANT column or a map inside a struct or
+array skips the value diff, so there a row rewritten unchanged is
+reported as a delete and an insert.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Dict, List, Optional
 
 import pyspark.sql.types as ST
@@ -44,6 +51,7 @@ from .scan import FileScanTask, Scan
 CHANGE_TYPE = "_change_type"
 CHANGE_ORDINAL = "_change_ordinal"
 COMMIT_SNAPSHOT_ID = "_commit_snapshot_id"
+_IDENT = ["__file", "__pos"]
 
 
 def _task_state(t: Optional[FileScanTask]):
@@ -55,6 +63,29 @@ def _task_state(t: Optional[FileScanTask]):
     return (t.sequence_number,
             frozenset((d.file_path, d.content_offset)
                       for d in t.pos_deletes + t.eq_deletes))
+
+
+def _comparable(dt) -> bool:
+    """Whether Spark's set operations accept values of ``dt``: no map
+    and no VARIANT at any depth."""
+    if isinstance(dt, ST.ArrayType):
+        return _comparable(dt.elementType)
+    if isinstance(dt, ST.StructType):
+        return all(_comparable(f.dataType) for f in dt.fields)
+    return not isinstance(dt, (ST.MapType, ST.VariantType))
+
+
+def _union(a: Optional[DataFrame], b: Optional[DataFrame]
+           ) -> Optional[DataFrame]:
+    return b if a is None else a if b is None else a.unionByName(b)
+
+
+def _minus_rows(a: DataFrame, b: DataFrame) -> DataFrame:
+    """The rows of ``a`` whose (file, position) ``b`` lacks.  ``b``'s
+    identities can be as many as the files' rows: shuffled, not
+    collected to the driver and broadcast."""
+    return a.join(b.select(*_IDENT).hint("shuffle_hash"), _IDENT,
+                  "left_anti")
 
 
 def changelog(table, spark: SparkSession,
@@ -94,18 +125,21 @@ def changelog(table, spark: SparkSession,
                 Scan(table, snapshot_id=snap.snapshot_id).plan_files()}
         return planned[snap.snapshot_id]
 
-    maps = [f.name for f in schema.fields
-            if isinstance(f.dataType, ST.MapType)]
-
     def rows(tasks: List[FileScanTask]) -> Optional[DataFrame]:
         if not tasks:
             return None
-        return _tasks_scan_df(table, spark, tasks).withColumns(
-            {m: F.map_entries(m) for m in maps})
+        return _tasks_scan_df(table, spark, tasks, identity=True)
+
+    maps = [f.name for f in schema.fields
+            if isinstance(f.dataType, ST.MapType)]
+    value_diff = all(
+        _comparable(f.dataType.keyType) and _comparable(f.dataType.valueType)
+        if f.name in maps else _comparable(f.dataType)
+        for f in schema.fields)
 
     def stamp(df: DataFrame, kind: str, ordinal: int, snap_id: int
               ) -> DataFrame:
-        return df.withColumns({
+        return df.select(*schema.names).withColumns({
             CHANGE_TYPE: F.lit(kind),
             CHANGE_ORDINAL: F.lit(ordinal),
             COMMIT_SNAPSHOT_ID: F.lit(snap_id).cast("long")})
@@ -118,18 +152,29 @@ def changelog(table, spark: SparkSession,
         new = tasks_of(snap)
         touched = sorted(p for p in old.keys() | new.keys()
                          if _task_state(old.get(p)) != _task_state(new.get(p)))
-        before = rows([old[p] for p in touched if p in old])
-        after = rows([new[p] for p in touched if p in new])
-        if before is not None:
-            gone = before if after is None else before.exceptAll(after)
+        kept = [p for p in touched if p in old and p in new]
+        # every row of a removed file leaves, every row of an added one
+        # arrives; a kept file's rows are matched by position
+        gone = rows([old[p] for p in touched if p not in new])
+        came = rows([new[p] for p in touched if p not in old])
+        if kept:
+            before = rows([old[p] for p in kept])
+            after = rows([new[p] for p in kept])
+            gone = _union(gone, _minus_rows(before, after))
+            if snap.operation != OP_DELETE:
+                came = _union(came, _minus_rows(after, before))
+        if gone is not None and came is not None and value_diff:
+            g, c = (df.drop(*_IDENT).withColumns(
+                {m: F.map_entries(m) for m in maps}) for df in (gone, came))
+            back = {m: F.map_from_entries(m) for m in maps}
+            gone = g.exceptAll(c).withColumns(back)
+            came = (None if snap.operation == OP_DELETE
+                    else c.exceptAll(g).withColumns(back))
+        if gone is not None:
             frames.append(stamp(gone, "delete", ordinal, snap.snapshot_id))
-        if after is not None and snap.operation != OP_DELETE:
-            came = after if before is None else after.exceptAll(before)
+        if came is not None:
             frames.append(stamp(came, "insert", ordinal, snap.snapshot_id))
 
     if not frames:
         return stamp(local_frame(spark, [], schema), "", 0, 0)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out.withColumns({m: F.map_from_entries(m) for m in maps})
+    return functools.reduce(DataFrame.unionByName, frames)

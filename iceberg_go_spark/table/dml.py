@@ -53,13 +53,15 @@ def _classify(table, expr: E.Expression):
 
 
 def _tasks_scan_df(table, spark: SparkSession, tasks,
-                   row_lineage: bool = False) -> DataFrame:
+                   row_lineage: bool = False,
+                   identity: bool = False) -> DataFrame:
     """Read a task subset through the scan lowering so existing pos/eq
     deletes are applied (a CoW rewrite that reads raw parquet would
-    resurrect rows removed by earlier MoR deletes/upserts)."""
+    resurrect rows removed by earlier MoR deletes/upserts); ``identity``
+    keeps each row's ``__file``/``__pos``."""
     sub = Scan(table, row_lineage=row_lineage)
     sub.plan_files = lambda: tasks  # type: ignore[assignment]
-    return sub.to_df(spark)
+    return sub._read(spark, identity)
 
 
 def _lineage_rewrite_prep(schema, keep_df):

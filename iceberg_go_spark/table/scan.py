@@ -688,25 +688,35 @@ class Scan:
         return self.to_df(spark).toPandas()
 
     def to_df(self, spark: SparkSession) -> DataFrame:
+        return self._read(spark, identity=False)
+
+    def _read(self, spark: SparkSession, identity: bool) -> DataFrame:
+        """``to_df``, keeping each surviving row's ``__file``/``__pos``
+        where ``identity`` is on."""
         md = self.table.metadata
         schema = self.effective_schema()
         projection = self.projection()
         tasks = self.plan_files()
         if not tasks:
+            import pyspark.sql.types as ST
             empty_schema = projection.to_spark()
             if self.row_lineage:
                 # the empty-scan schema must match the non-empty one:
                 # lineage columns are part of the contract
-                import pyspark.sql.types as ST
                 empty_schema = ST.StructType(
                     list(empty_schema.fields) + [
                         ST.StructField("_row_id", ST.LongType()),
                         ST.StructField("_last_updated_sequence_number",
                                        ST.LongType())])
+            if identity:
+                empty_schema = ST.StructType(
+                    list(empty_schema.fields) + [
+                        ST.StructField("__file", ST.StringType()),
+                        ST.StructField("__pos", ST.LongType())])
             return local_frame(spark, [], empty_schema)
 
-        # group tasks by (applicable eq-delete set, residual need, file
-        # layout) so each group is one read + anti-join pipeline; usually
+        # group tasks by (applicable eq-delete set, residual need) so
+        # each group is one read + anti-join pipeline; usually
         # one group.  POSITION deletes (parquet pos files, legacy puffin
         # containers and v3 per-DV entries alike) are deliberately NOT
         # part of the key: every positional delete names its target data
@@ -719,18 +729,15 @@ class Scan:
         # EQUALITY deletes stay in the key: they are sequence-gated (a
         # delete applies only to data files with a lower sequence
         # number), so the applicable set genuinely differs per file.
-        layouts = _file_layouts(spark, md,
-                                [t.data_file.file_path for t in tasks],
-                                schema)
-
+        # Files of different layouts (resolved by name, lacking defaulted
+        # fields) share a group: read_data_files unions their reads.
         def key(t: FileScanTask) -> Tuple:
             return (frozenset((tuple(d.equality_ids or []), d.file_path,
                                d.record_count)
                               for d in t.eq_deletes),
                     # strict-match files (residual TRUE) skip the filter
                     not isinstance(t.residual, E.AlwaysTrue)
-                    if t.residual is not None else False,
-                    layouts[t.data_file.file_path])
+                    if t.residual is not None else False)
 
         groups: Dict[Tuple, List[FileScanTask]] = {}
         for t in tasks:
@@ -738,7 +745,7 @@ class Scan:
 
         bound = E.bind(self.row_filter, schema, self.case_sensitive)
         dfs = []
-        for (eq_set, needs_filter, _layout), group in groups.items():
+        for (eq_set, needs_filter), group in groups.items():
             pos_set = frozenset(
                 (d.file_path, d.file_format, d.record_count)
                 for t in group for d in t.pos_deletes
@@ -752,7 +759,8 @@ class Scan:
             df = read_data_files(
                 spark, self.table, [t.data_file.file_path for t in group],
                 schema, self.row_lineage,
-                identity=bool(self.row_lineage or pos_set or dv_slices))
+                identity=bool(identity or self.row_lineage or pos_set
+                              or dv_slices))
             if self.row_lineage:
                 # materialized lineage (compaction-preserved) wins;
                 # otherwise synthesize from the manifest: _row_id =
@@ -844,7 +852,8 @@ class Scan:
                     piece = df[c].eqNullSafe(ddf[f"__eq_{c}"])
                     cond = piece if cond is None else (cond & piece)
                 df = df.join(ddf, cond, "left_anti")
-            df = df.drop("__file", "__pos")
+            if not identity:
+                df = df.drop("__file", "__pos")
             # residual filter: strict-match groups skip this entirely
             if needs_filter and not isinstance(bound, E.AlwaysTrue):
                 df = df.filter(E.to_spark_column(bound))
@@ -857,6 +866,8 @@ class Scan:
             cols = [f.name for f in projection.fields]
             if self.row_lineage:
                 cols += ["_row_id", "_last_updated_sequence_number"]
+            if identity:
+                cols += ["__file", "__pos"]
             out = out.select(*cols)
         if self.limit is not None:
             out = out.limit(self.limit)

@@ -11,6 +11,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     from iceberg_go_spark.session import get_spark
+    # the suite's inputs are small: a capped heap makes the JVM collect
+    # garbage instead of growing toward the session's 48g default
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark("tests", cpus=8, shuffle_partitions=8)
     yield s
 

@@ -202,3 +202,75 @@ def test_changelog_diffs_tables_with_a_map_column(spark, tmp_path):
                    (1, "delete", 2, [("b", 2), ("c", 3)]),
                    (2, "delete", 1, [("a", 1)])]
 
+
+
+def _variant_table(spark, tmp_path, name):
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(i, f'{{"a": {i}}}') for i in range(4)], "id long, j string"
+    ).select("id", F.parse_json("j").alias("v"))
+    t = cat.create_table(name, Schema.from_spark(df.schema),
+                         properties={"format-version": "3"})
+    t.append(df.coalesce(1))
+    return cat, cat.load_table(name)
+
+
+def _variant_changes(ch):
+    return sorted((r._change_ordinal, r._change_type, r.id, r.a)
+                  for r in ch.select(
+                      "*", F.try_variant_get("v", "$.a", "long").alias("a"))
+                  .collect())
+
+
+@pytest.mark.parametrize("mode", ["merge-on-read", "merge-on-read-dv"])
+def test_changelog_on_variant_table_after_mor_delete(spark, tmp_path, mode):
+    """Spark has no set operations on VARIANT: a delete that leaves its
+    data file in place is diffed by (file, position), so it needs none."""
+    cat, t = _variant_table(spark, tmp_path, "db.vmor")
+    t.delete_where(spark, E.eq("id", 1), mode=mode)
+    t = cat.load_table("db.vmor")
+    t.delete_where(spark, E.eq("id", 2), mode=mode)
+    t = cat.load_table("db.vmor")
+    assert _variant_changes(t.changelog(spark)) == sorted(
+        [(0, "insert", i, i) for i in range(4)]
+        + [(1, "delete", 1, 1), (2, "delete", 2, 2)])
+
+
+def test_changelog_on_variant_table_after_cow_delete(spark, tmp_path):
+    """A copy-on-write rewrite of a VARIANT table cannot be diffed by
+    value: its survivors are reported deleted and inserted again, so the
+    changelog still folds to the table."""
+    cat, t = _variant_table(spark, tmp_path, "db.vcow")
+    t.delete_where(spark, E.eq("id", 1), mode="copy-on-write")
+    t = cat.load_table("db.vcow")
+    assert _variant_changes(t.changelog(spark)) == sorted(
+        [(0, "insert", i, i) for i in range(4)]
+        + [(1, "delete", i, i) for i in range(4)]
+        + [(1, "insert", i, i) for i in (0, 2, 3)])
+
+
+@pytest.mark.parametrize("mode", ["merge-on-read", "copy-on-write"])
+def test_changelog_on_table_with_a_map_in_a_struct(spark, tmp_path, mode):
+    """A map inside a struct cannot be set-compared either; a delete's
+    changes are still exact, and a copy-on-write survivor is reported as
+    a delete and an insert."""
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    df = spark.createDataFrame(
+        [(1, ({"a": 1},)), (2, ({"b": 2},)), (3, None)],
+        "id long, s struct<m: map<string, int>>")
+    t = cat.create_table("db.smap", Schema.from_spark(df.schema))
+    t.append(df.coalesce(1))
+    t.delete_where(spark, E.eq("id", 2), mode=mode)
+    t = cat.load_table("db.smap")
+    got = sorted((r._change_ordinal, r._change_type, r.id,
+                  sorted((r.s.m or {}).items()) if r.s else None)
+                 for r in t.changelog(spark).collect())
+    inserted = [(0, "insert", 1, [("a", 1)]), (0, "insert", 2, [("b", 2)]),
+                (0, "insert", 3, None)]
+    if mode == "merge-on-read":
+        changed = [(1, "delete", 2, [("b", 2)])]
+    else:
+        changed = [(1, "delete", 1, [("a", 1)]), (1, "delete", 2, [("b", 2)]),
+                   (1, "delete", 3, None), (1, "insert", 1, [("a", 1)]),
+                   (1, "insert", 3, None)]
+    assert got == sorted(inserted + changed)
