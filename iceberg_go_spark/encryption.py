@@ -498,26 +498,23 @@ def append_encrypted(table, spark, df) -> None:
     rows funnel through the driver here — this is the container-bound
     demonstration path, not the 100 TB path (which configures
     spark_parquet_encryption_confs on a cluster whose classpath has a
-    KmsClient and keeps writes distributed).  The file enters the table
-    through a normal transaction with footer-true stats unavailable
-    (encrypted footer): record_count from the arrow table, no bounds."""
+    KmsClient and keeps writes distributed).  The file carries the
+    table's field ids and enters the table through a normal transaction,
+    its stats harvested from the decrypted footer."""
     import os as _os
     import uuid as _uuid
 
-    from .meta import manifests as M
+    from .table.write import harvest_data_files, stamp_field_ids
 
     props = table.metadata.properties
+    schema = table.metadata.schema()
     atable = df.toArrow()
+    atable = atable.cast(stamp_field_ids(atable.schema, schema))
     data_dir = _os.path.join(table.metadata.location, "data")
     _os.makedirs(data_dir, exist_ok=True)
     path = _os.path.join(data_dir, f"enc-{_uuid.uuid4().hex}.parquet")
     write_encrypted_parquet(atable, path, props)
-    key_id = props.get(TABLE_KEY_ID_KEY)
-    kms = load_key_management_client(props)
-    _dek, key_meta = generate_file_key(kms, key_id)
-    dfile = M.DataFile(
-        content=M.CONTENT_DATA, file_path=path, file_format="PARQUET",
-        partition={}, record_count=atable.num_rows,
-        file_size_in_bytes=_os.path.getsize(path),
-        key_metadata=key_meta)
-    table.new_transaction().append_files([dfile]).commit()
+    files = harvest_data_files(spark, [(path, {})], schema, props,
+                               encrypted=True)
+    attach_file_keys(files, props)
+    table.new_transaction().append_files(files).commit()

@@ -163,38 +163,94 @@ class IcebergGoSparkDataSourceNoPushdown(IcebergGoSparkDataSource):
     _push_enabled = False
 
 
-class _ReaderBase(DataSourceReader):
+class _TableRows:
+    """Executor-side reads of a table's data files, shared by the batch
+    and the stream reader.  Columns resolve by parquet field id, through
+    the table's name mapping for ID-less files (by current names where
+    the table has none), and read as the v3 initial-default where a file
+    predates the field — the resolution ``scan.read_data_files`` applies
+    on the relational path.  Everything is captured on the driver and
+    pickled to executors."""
+
+    def __init__(self, options, schema: ST.StructType):
+        from ..encryption import table_encryption_enabled
+        from ..meta.name_mapping import NameMapping, PROP_NAME_MAPPING
+        self.options = dict(options)
+        self.spark_schema = schema
+        self.columns = [f.name for f in schema.fields]
+        t = _load_table(options)
+        sch = t.schema()
+        props = t.metadata.properties
+        self._defaults = {f.name: f.initial_default for f in sch.fields
+                          if f.initial_default is not None}
+        # field-id -> current column name
+        self._col_by_id = {f.field_id: f.name for f in sch.fields}
+        self._nm_json = (props.get(PROP_NAME_MAPPING)
+                         or NameMapping.from_schema(sch).to_json())
+        # encrypted tables: executors rebuild the KMS client from these
+        # properties and decrypt parquet via pyarrow PME — the JVM
+        # reader can't without a classpath KmsClient (encryption.py,
+        # parity table/encryption.go:76)
+        self._enc_props = (dict(props) if table_encryption_enabled(props)
+                           else None)
+        self._crypto = None  # built on the executor, by _open
+
+    def _open(self, path: str):
+        import pyarrow.parquet as pq
+        if not self._enc_props:
+            return pq.ParquetFile(path)
+        if self._crypto is None:
+            from ..encryption import pyarrow_decryption_properties
+            # (factory, properties): the factory must stay referenced
+            # while its properties are in use
+            self._crypto = pyarrow_decryption_properties(self._enc_props)
+        return pq.ParquetFile(path, decryption_properties=self._crypto[1])
+
+    def _read_row_groups(self, pf, path: str, groups):
+        """Row groups ``groups`` of the open file ``pf`` as an Arrow
+        table of the current columns, under their current names."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from ..meta.name_mapping import NameMapping
+        from ..table.scan import _footer_field_ids
+
+        top, _ids = _footer_field_ids(path, pf)
+        if any(fid is not None for _n, fid in top):
+            by_id = {fid: name for name, fid in top if fid is not None}
+        else:
+            nm = NameMapping.from_json(self._nm_json)
+            by_id = {}
+            for name, _fid in top:
+                by_id.setdefault(nm.id_for(name), name)
+        src = {name: by_id.get(fid)
+               for fid, name in self._col_by_id.items()}
+        table = pf.read_row_groups(
+            groups, columns=[src[c] for c in self.columns if src.get(c)])
+        aschema = to_arrow_schema(self.spark_schema)
+        cols = []
+        for c in self.columns:
+            if src.get(c):
+                cols.append(table.column(src[c]))
+                continue
+            # absent from this file (added after it was written): the
+            # v3 initial-default where declared, else nulls
+            fld, val = aschema.field(c), self._defaults.get(c)
+            cols.append(pa.nulls(table.num_rows, fld.type) if val is None
+                        else pa.array([val] * table.num_rows)
+                        .cast(fld.type))
+        return pa.Table.from_arrays(cols, names=self.columns)
+
+
+class _ReaderBase(_TableRows, DataSourceReader):
     """File-pruning batch reader WITHOUT `pushFilters` — served when
     `spark.sql.python.filterPushdown.enabled` is false (a session we did
     not build), where Spark refuses any reader that implements the hook
     (DATA_SOURCE_PUSHDOWN_DISABLED).  `_Reader` layers the hook on top."""
 
     def __init__(self, options, schema: ST.StructType):
-        self.options = dict(options)
-        self.spark_schema = schema
-        self.columns = [f.name for f in schema.fields]
+        super().__init__(options, schema)
         self.pushed = []  # [(col, op, value)] — picklable, not Column
-        # v3 initial-defaults, captured at construction (driver-side) so
-        # the pickled-to-executor reader can fill columns absent from
-        # old files in read()
-        _t = _load_table(options)
-        _schema = _t.schema()
-        self._defaults = {
-            f.name: f.initial_default
-            for f in _schema.fields
-            if f.initial_default is not None}
-        # field-id -> column name, so executors can resolve the
-        # equality_ids of attached eq-delete files without the table
-        self._col_by_id = {f.field_id: f.name for f in _schema.fields}
-        # encrypted tables: ship the encryption properties (a plain
-        # dict, picklable) so each executor can rebuild its KMS client
-        # and decrypt parquet via pyarrow PME — the JVM reader can't
-        # without a classpath KmsClient (encryption.py, parity
-        # table/encryption.go:76)
-        from ..encryption import table_encryption_enabled
-        self._enc_props = (dict(_t.metadata.properties)
-                           if table_encryption_enabled(
-                               _t.metadata.properties) else None)
 
     def _row_filter(self):
         from .. import expressions as E
@@ -224,19 +280,12 @@ class _ReaderBase(DataSourceReader):
     def read(self, partition) -> Iterator:
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from .task_codec import decode_tasks
 
         (task,) = decode_tasks(partition.value)
         df_meta = task.data_file
-        if getattr(self, "_enc_props", None):
-            from ..encryption import pyarrow_decryption_properties
-            _factory, dec = pyarrow_decryption_properties(self._enc_props)
-            pf = pq.ParquetFile(df_meta.file_path,
-                                decryption_properties=dec)
-        else:
-            pf = pq.ParquetFile(df_meta.file_path)
+        pf = self._open(df_meta.file_path)
 
         # row groups whose byte range starts inside [start, start+length)
         # (split_tasks carves on row-group boundaries, same rule here)
@@ -254,25 +303,7 @@ class _ReaderBase(DataSourceReader):
 
         if not groups:
             return
-        present = set(pf.schema_arrow.names)
-        cols = [c for c in self.columns if c in present]
-        table = pf.read_row_groups(groups, columns=cols)
-
-        # columns absent from this file (added after it was written):
-        # fill the v3 initial-default where declared, else nulls
-        missing = [c for c in self.columns if c not in present]
-        if missing:
-            from pyspark.sql.pandas.types import to_arrow_schema
-            aschema = to_arrow_schema(self.spark_schema)
-            defaults = getattr(self, "_defaults", {})
-            n = table.num_rows
-            for c in missing:
-                fld = aschema.field(c)
-                val = defaults.get(c)
-                arr = (pa.nulls(n, fld.type) if val is None
-                       else pa.array([val] * n).cast(fld.type))
-                table = table.append_column(fld, arr)
-            table = table.select(self.columns)
+        table = self._read_row_groups(pf, df_meta.file_path, groups)
 
         deleted = self._deleted_positions(task)
         if deleted.size:
@@ -380,7 +411,7 @@ class _Reader(_ReaderBase):
             yield f
 
 
-class _StreamReader(DataSourceStreamReader):
+class _StreamReader(_TableRows, DataSourceStreamReader):
     """Incremental snapshot streaming: spark.readStream over an engine
     table.  Offsets are snapshot ids (the engine's natural changelog
     cursor, parity table/snapshot_ancestry.go AncestorsBetween); each
@@ -389,11 +420,6 @@ class _StreamReader(DataSourceStreamReader):
     parallel on executors.  With option starting_snapshot_id=0 the first
     batch replays the whole table (earliest); by default streaming
     starts at the CURRENT snapshot (latest, new appends only)."""
-
-    def __init__(self, options, schema: ST.StructType):
-        self.options = dict(options)
-        self.spark_schema = schema
-        self.columns = [f.name for f in schema.fields]
 
     def initialOffset(self) -> dict:
         start = self.options.get("starting_snapshot_id")
@@ -416,27 +442,27 @@ class _StreamReader(DataSourceStreamReader):
         return [InputPartition(p) for p in files]
 
     def read(self, partition) -> Iterator:
-        import pyarrow.parquet as pq
-        pf = pq.ParquetFile(partition.value)
-        cols = [c for c in self.columns if c in set(pf.schema_arrow.names)]
-        for batch in pf.iter_batches(columns=cols):
-            yield batch
+        pf = self._open(partition.value)
+        groups = range(pf.metadata.num_row_groups)
+        if groups:
+            yield from self._read_row_groups(
+                pf, partition.value, groups).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in Spark's checkpoint, not the table
 
 
 class _CommitMsg(WriterCommitMessage):
-    def __init__(self, stats):
-        self.stats = stats  # None for empty partitions
+    def __init__(self, data_file):
+        self.data_file = data_file  # None for empty partitions
 
 
 class _Writer(DataSourceWriter):
     """Distributed append through the engine transaction: each executor
     writes its partition as one parquet file (arrow, spec field-ids in
     the schema metadata) directly into the table's data directory and
-    harvests the footer stats locally; the driver turns the collected
-    stats into DataFile entries and commits ONE append snapshot via
+    harvests its footer in-process (``harvest_data_files``); the driver
+    commits the collected DataFiles as ONE append snapshot via
     Transaction.append_files — no second stats job, no data movement.
     A failed job aborts by unlinking the written files (the commit never
     happened, so the table never saw them)."""
@@ -449,11 +475,9 @@ class _Writer(DataSourceWriter):
             raise ValueError(
                 "DataSource writes currently target unpartitioned "
                 "tables; use Table.append for partitioned fan-out")
-        sch = t.schema()
+        self.schema = t.schema()
+        self.properties = dict(t.metadata.properties)
         self.data_dir = os.path.join(t.metadata.location, "data")
-        self.name_to_field = {f.name: (f.field_id, str(f.field_type))
-                              for f in sch.fields
-                              if f.field_type.is_primitive}
 
     def write(self, iterator) -> _CommitMsg:
         import uuid
@@ -463,46 +487,27 @@ class _Writer(DataSourceWriter):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from ..table.write import _harvest_one
+        from ..table.write import harvest_data_files, stamp_field_ids
 
         rows = list(iterator)
         if not rows:
             return _CommitMsg(None)
         cols = [f.name for f in self.spark_schema.fields]
         pdf = pd.DataFrame.from_records(rows, columns=cols)
-        arrow_schema = to_arrow_schema(self.spark_schema)
-        # stamp spec field ids so readers resolve columns by id
-        fields = []
-        for f in arrow_schema:
-            fid = self.name_to_field.get(f.name, (None,))[0]
-            meta = {b"PARQUET:field_id": str(fid).encode()} if fid else None
-            fields.append(f.with_metadata(meta) if meta else f)
-        arrow_schema = pa.schema(fields)
+        arrow_schema = stamp_field_ids(to_arrow_schema(self.spark_schema),
+                                       self.schema)
         table = pa.Table.from_pandas(pdf, schema=arrow_schema,
                                      preserve_index=False)
         os.makedirs(self.data_dir, exist_ok=True)
         path = os.path.join(self.data_dir, f"ds-{uuid.uuid4().hex}.parquet")
         pq.write_table(table, path)
-        return _CommitMsg(_harvest_one(path, self.name_to_field, 16))
+        (data_file,) = harvest_data_files(None, [(path, {})], self.schema,
+                                          self.properties)
+        return _CommitMsg(data_file)
 
     def commit(self, messages) -> None:
-        from ..meta import manifests as M
-
-        files = []
-        for m in messages:
-            s = getattr(m, "stats", None)
-            if not s:
-                continue
-            files.append(M.DataFile(
-                content=M.CONTENT_DATA, file_path=s["path"],
-                file_format="PARQUET", partition={},
-                record_count=s["record_count"],
-                file_size_in_bytes=s["file_size"],
-                column_sizes=s["column_sizes"],
-                value_counts=s["value_counts"],
-                null_value_counts=s["null_counts"],
-                lower_bounds=s["lower"], upper_bounds=s["upper"],
-                split_offsets=sorted(s["split_offsets"]) or None))
+        files = [m.data_file for m in messages
+                 if getattr(m, "data_file", None) is not None]
         if not files:
             return
         t = _load_table(self.options)
@@ -512,9 +517,9 @@ class _Writer(DataSourceWriter):
 
     def abort(self, messages) -> None:
         for m in messages:
-            s = getattr(m, "stats", None)
-            if s:
+            d = getattr(m, "data_file", None)
+            if d is not None:
                 try:
-                    os.remove(s["path"])
+                    os.remove(d.file_path)
                 except OSError:
                     pass

@@ -128,7 +128,7 @@ def _pos_delete_fanout(spark: SparkSession, md, matches: DataFrame,
         (matches.repartition("file_path")
          .sortWithinPartitions("file_path", "pos")
          .write.parquet(out_dir))
-        return _pos_delete_datafiles(out_dir, ptype)
+        return _delete_datafiles(out_dir, ptype)
 
     import pyspark.sql.types as ST
     from ..types import to_spark_type
@@ -147,24 +147,30 @@ def _pos_delete_fanout(spark: SparkSession, md, matches: DataFrame,
           .repartition(*[F.col(c) for c in pcols])
           .sortWithinPartitions("file_path", "pos"))
     df.write.partitionBy(*pcols).parquet(out_dir)
-    return _pos_delete_datafiles(out_dir, ptype)
+    return _delete_datafiles(out_dir, ptype)
 
 
-def _pos_delete_datafiles(out_dir: str, ptype) -> List[M.DataFile]:
+def _delete_datafiles(out_dir: str, ptype,
+                      content: int = M.CONTENT_POS_DELETES,
+                      equality_ids: Optional[List[int]] = None
+                      ) -> List[M.DataFile]:
+    """Delete-file entries for the parquet files Spark wrote under
+    ``out_dir`` (position deletes, or equality deletes on
+    ``equality_ids``)."""
     import pyarrow.parquet as pq
     out = []
     for path, part in discover_partitioned_files(out_dir, ptype):
         meta = pq.ParquetFile(path).metadata
         if meta.num_rows == 0:
-            # Spark writers can emit empty parts (same guard as
-            # upsert's discovery loop): a 0-row delete entry is a
-            # useless file every future scan loads and anti-joins
+            # Spark writers can emit empty parts: a 0-row delete entry
+            # is a useless file every future scan loads and anti-joins
             continue
         out.append(M.DataFile(
-            content=M.CONTENT_POS_DELETES, file_path=path,
+            content=content, file_path=path,
             file_format="PARQUET", partition=part,
             record_count=meta.num_rows,
-            file_size_in_bytes=os.path.getsize(path)))
+            file_size_in_bytes=os.path.getsize(path),
+            equality_ids=equality_ids))
     return out
 
 
@@ -762,22 +768,9 @@ def upsert(table, spark: SparkSession, df: DataFrame,
     out_dir = os.path.join(md.location, "deletes",
                            f"eq-{uuid.uuid4().hex[:12]}")
     keys.write.parquet(out_dir)
-    import pyarrow.parquet as pq
     from ..types import StructType as _ST
-    delete_files = []
-    # same discovery walk as _pos_delete_datafiles (unpartitioned), with
-    # eq-delete content + key ids; 0-row part files are skipped (Spark
-    # writers can emit empty parts)
-    for path, part in discover_partitioned_files(out_dir, _ST()):
-        meta = pq.ParquetFile(path).metadata
-        if meta.num_rows == 0:
-            continue
-        delete_files.append(M.DataFile(
-            content=M.CONTENT_EQ_DELETES, file_path=path,
-            file_format="PARQUET", partition=part,
-            record_count=meta.num_rows,
-            file_size_in_bytes=os.path.getsize(path),
-            equality_ids=key_ids))
+    delete_files = _delete_datafiles(out_dir, _ST(), M.CONTENT_EQ_DELETES,
+                                     key_ids)
     # 2. new data files
     data_files = write_dataframe(df, schema, md.spec(),
                                  os.path.join(md.location, "data"),

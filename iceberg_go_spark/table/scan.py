@@ -138,43 +138,50 @@ def read_data_files(spark: SparkSession, table, paths: List[str],
 def _file_layouts(spark: SparkSession, md, paths: List[str], schema: Schema
                   ) -> Dict[str, Tuple[bool, FrozenSet[int]]]:
     """Per data file: (resolves by name, initial-default field ids it
-    lacks).  Probe jobs run only for tables that need them: the field-id
-    probe where the table has a name mapping, the defaults probe where
-    the schema has initial defaults."""
+    lacks).  One footer probe job at most, and only for tables that
+    need it: those with a name mapping or with initial defaults."""
     # name mapping (spec: schema.name-mapping.default property,
-    # name_mapping.go:85): when present, probe footers on executors
-    # for files lacking parquet field IDs — those resolve columns
-    # through the mapping instead of by ID
-    from ..meta.name_mapping import PROP_NAME_MAPPING
+    # name_mapping.go:85): files lacking parquet field IDs resolve
+    # columns through the mapping instead of by ID
+    from ..meta.name_mapping import NameMapping, PROP_NAME_MAPPING
     nm_json = md.properties.get(PROP_NAME_MAPPING)
-    if nm_json:
-        # data files are immutable, so the has-field-ids footer probe
-        # is cached per path for the process lifetime — one executor
-        # probe job per file ever, not one per scan
-        unknown = sorted(set(paths) - _FIELD_ID_PROBE_CACHE.keys())
-        if unknown:
-            flags = spark.sparkContext.parallelize(
-                unknown, max(1, min(len(unknown), 64))) \
-                .map(_file_has_field_ids).collect()
-            _FIELD_ID_PROBE_CACHE.update(zip(unknown, flags))
-
     # v3 default values: files written before a defaulted column was
     # added must read that column as its initial-default, not null —
-    # a per-FILE decision (a newer file's explicit nulls stay null),
-    # so footer-probe which default fields each file lacks
+    # a per-FILE decision (a newer file's explicit nulls stay null)
     # nested fields included: a default inside a struct fills via
     # withField on rows whose parent struct exists (a file missing
     # the whole struct reads the struct as null, not as a struct of
     # defaults — reference ToRequestedSchema semantics)
-    default_fields = [f for f in schema._by_id.values()
-                      if f.initial_default is not None]
-    missing_defaults: Dict[str, frozenset] = {}
-    if default_fields:
-        missing_defaults = _probe_missing_defaults(
-            spark, paths, default_fields, nm_json)
-    return {p: (bool(nm_json) and not _FIELD_ID_PROBE_CACHE[p],
-                missing_defaults.get(p, frozenset()))
-            for p in paths}
+    dids = {f.field_id for f in schema._by_id.values()
+            if f.initial_default is not None}
+    if nm_json or dids:
+        # data files are immutable, so the footer probe is cached per
+        # path for the process lifetime — one executor probe job per
+        # file ever, not one per scan
+        unknown = sorted(set(paths) - _FOOTER_PROBE_CACHE.keys())
+        if unknown:
+            probes = spark.sparkContext.parallelize(
+                unknown, max(1, min(len(unknown), 64))) \
+                .map(_footer_field_ids).collect()
+            _FOOTER_PROBE_CACHE.update(zip(unknown, probes))
+    nm = NameMapping.from_json(nm_json) if nm_json else None
+    out = {}
+    for p in paths:
+        probe = _FOOTER_PROBE_CACHE.get(p)
+        # a footer pyarrow cannot open resolves by name (the mapping
+        # handles both cases) and fills NO defaults: clobbering real
+        # values with defaults is the harmful direction
+        name_based = nm is not None and (
+            probe is None or all(fid is None for _n, fid in probe[0]))
+        missing = frozenset()
+        if dids and probe is not None:
+            top, ids = probe
+            # an ID-less column's id comes through the name mapping
+            present = ids | {nm.id_for(n) for n, fid in top
+                             if fid is None and nm is not None} - {None}
+            missing = frozenset(dids - present)
+        out[p] = (name_based, missing)
+    return out
 
 
 def _read_layout(spark: SparkSession, md, schema: Schema, paths: List[str],
@@ -908,9 +915,9 @@ class Scan:
         return self.to_df(spark).count()
 
 
-# data files are immutable once committed, so a path's probe result never
-# changes; keyed by absolute path, process-lifetime
-_FIELD_ID_PROBE_CACHE: Dict[str, bool] = {}
+# data files are immutable once committed, so a path's footer probe never
+# changes; keyed by absolute path, process-lifetime (_footer_field_ids)
+_FOOTER_PROBE_CACHE: Dict[str, Optional[tuple]] = {}
 
 # rows of delete keys/positions below which the delete side of the
 # anti-join is broadcast; above it AQE picks a shuffled strategy.  Env
@@ -924,107 +931,42 @@ def _broadcast_row_limit() -> int:
                               DEFAULT_BROADCAST_ROW_LIMIT))
 
 
-def _file_has_field_ids(path: str) -> bool:
-    """Executor-side footer probe: does this parquet file carry field IDs?
-
-    pyarrow cannot open footers with VARIANT/GEOMETRY logical types —
-    such files are always externally written here (our writer stamps
-    ids through Spark), so an unreadable footer resolves name-based
-    (the conservative answer: name mapping handles both cases)."""
+def _footer_field_ids(path: str, pf=None):
+    """Footer probe (executor-side in a scan): the file's top-level
+    columns as ``(name, field id or None)`` pairs, and every field id
+    it carries at any depth.  ``pf`` is the already-open
+    ``pq.ParquetFile`` where the caller has one (an encrypted footer
+    needs the caller's decryption properties).  None when pyarrow
+    cannot open the footer (VARIANT/GEOMETRY logical types)."""
     import pyarrow as _pa
     import pyarrow.parquet as pq
     try:
-        sch = pq.ParquetFile(path).schema_arrow
+        sch = (pf or pq.ParquetFile(path)).schema_arrow
     except (OSError, _pa.lib.ArrowException):
-        # pyarrow raises ArrowNotImplementedError/ArrowInvalid (not
-        # OSError) on VARIANT/GEOMETRY footers — same conservative
-        # name-based answer
-        return False
-    return any((f.metadata or {}).get(b"PARQUET:field_id") for f in sch)
+        return None
 
+    def fid(f):
+        v = (f.metadata or {}).get(b"PARQUET:field_id")
+        return None if v is None else int(v)
 
-# data files are immutable: top-level field-id sets cached per
-# (path, name-mapping) for the process lifetime (same policy as
-# _FIELD_ID_PROBE_CACHE; nm in the key because a mapping change alters
-# what an ID-less footer resolves to)
-_FILE_FIELD_IDS_CACHE: Dict[Tuple[str, Optional[str]], frozenset] = {}
-
-
-FOOTER_UNREADABLE = frozenset({-1})
-
-
-def _file_field_ids(path_nm: Tuple[str, Optional[str]]) -> frozenset:
-    """Executor-side footer probe: the top-level field IDs present in
-    this parquet file (for v3 default values: a field absent from the
-    file reads as its initial-default, not null).  ID-less files
-    (imported via add_files) carry no PARQUET:field_id, so their column
-    NAMES are resolved through the table name mapping — without this, a
-    present-by-name column would be wrongly reported missing and its
-    real values clobbered by the default constant."""
-    import pyarrow.parquet as pq
-    import pyarrow as _pa
-    path, nm_json = path_nm
-    try:
-        sch = pq.ParquetFile(path).schema_arrow
-    except (OSError, _pa.lib.ArrowException):
-        # VARIANT/GEOMETRY footers are unreadable to pyarrow: report
-        # "footer unreadable" so the caller fills NO defaults for this
-        # file (clobbering real values with defaults is the harmful
-        # direction; such files read through the JVM fallback path)
-        return FOOTER_UNREADABLE
     ids = set()
-    unmapped_names = []
 
-    def walk(f, top_level: bool) -> None:
-        fid = (f.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            ids.add(int(fid))
-        elif top_level:
-            # name-mapping resolution is top-level (nested ID-less
-            # files are out of mapping scope)
-            unmapped_names.append(f.name)
+    def walk(f) -> None:
+        if fid(f) is not None:
+            ids.add(fid(f))
         t = f.type
         if _pa.types.is_struct(t):
             for i in range(t.num_fields):
-                walk(t.field(i), False)
+                walk(t.field(i))
         elif _pa.types.is_list(t) or _pa.types.is_large_list(t):
-            walk(t.value_field, False)
+            walk(t.value_field)
         elif _pa.types.is_map(t):
-            walk(t.key_field, False)
-            walk(t.item_field, False)
+            walk(t.key_field)
+            walk(t.item_field)
 
     for f in sch:
-        walk(f, True)
-    if unmapped_names and nm_json:
-        from iceberg_go_spark.meta.name_mapping import NameMapping
-        nm = NameMapping.from_json(nm_json)
-        for name in unmapped_names:
-            mapped = nm.id_for(name)
-            if mapped is not None:
-                ids.add(int(mapped))
-    return frozenset(ids)
-
-
-def _probe_missing_defaults(spark: SparkSession, paths: List[str],
-                            default_fields, nm_json: Optional[str] = None
-                            ) -> Dict[str, frozenset]:
-    """Per data file: which initial-default fields are absent from its
-    footer.  Probes run once per file per process (executor-parallel),
-    cached like the name-mapping probe."""
-    keys = sorted({(p, nm_json) for p in paths}
-                  - _FILE_FIELD_IDS_CACHE.keys())
-    if keys:
-        sets = spark.sparkContext.parallelize(
-            keys, max(1, min(len(keys), 64))) \
-            .map(_file_field_ids).collect()
-        _FILE_FIELD_IDS_CACHE.update(zip(keys, sets))
-    dids = {f.field_id for f in default_fields}
-    out = {}
-    for p in paths:
-        ids = _FILE_FIELD_IDS_CACHE[(p, nm_json)]
-        out[p] = (frozenset() if ids == FOOTER_UNREADABLE
-                  else frozenset(dids - ids))
-    return out
+        walk(f)
+    return tuple((f.name, fid(f)) for f in sch), frozenset(ids)
 
 
 def _apply_position_deletes(spark: SparkSession, df, parquet_paths,

@@ -486,47 +486,11 @@ class Transaction:
     def _adopt_parquet_files(self, spark, paths: List[str]
                              ) -> List[M.DataFile]:
         """Footer-harvest existing parquet files into DataFile entries
-        (shared by add_files and replace_data_files): executor-side
-        pyarrow harvest with a JVM footer-reader fallback for
-        VARIANT/GEOMETRY logical types pyarrow cannot open."""
+        (shared by add_files and replace_data_files)."""
         schema = self.metadata.schema()
-        from .. import types as _T
-        from .write import _harvest_one, _harvest_via_jvm_footers
-        name_to_field = {f.name: (f.field_id, str(f.field_type))
-                         for f in schema.fields if f.field_type.is_primitive}
-        try:
-            stats = spark.sparkContext.parallelize(
-                paths, min(len(paths), 64)) \
-                .map(lambda p: _harvest_one(p, name_to_field, 16)).collect()
-        except Exception as _harvest_err:
-            # pyarrow cannot open footers carrying VARIANT/GEOMETRY
-            # logical types — adopt such files through the JVM footer
-            # reader instead (driver-side, metadata-only I/O).  Log the
-            # swallowed error: if the JVM path then also fails, or the
-            # fallback quietly degrades stats, this line is the signal
-            import logging
-            logging.getLogger(__name__).warning(
-                "pyarrow footer harvest failed (%s); retrying through "
-                "the JVM footer reader",
-                str(_harvest_err).splitlines()[0][:200])
-            variant_fids = {f.name: f.field_id for f in schema.fields
-                            if isinstance(f.field_type, _T.VariantType)}
-            plain = {n: v for n, v in name_to_field.items()
-                     if n not in variant_fids
-                     and not v[1].startswith(("geometry", "geography"))}
-            stats = _harvest_via_jvm_footers(spark, paths, plain, {},
-                                             16, variant_fids)
-        files = [M.DataFile(
-            content=M.CONTENT_DATA, file_path=s["path"],
-            file_format="PARQUET", partition={},
-            record_count=s["record_count"],
-            file_size_in_bytes=s["file_size"],
-            column_sizes=s["column_sizes"], value_counts=s["value_counts"],
-            null_value_counts=s["null_counts"], lower_bounds=s["lower"],
-            upper_bounds=s["upper"],
-            split_offsets=sorted(s["split_offsets"]) or None,
-            name_based=not s.get("has_field_ids", True))
-            for s in stats]
+        from .write import harvest_data_files
+        files = harvest_data_files(spark, [(p, {}) for p in paths], schema,
+                                   self.metadata.properties)
         # files without parquet field IDs resolve by name mapping (spec:
         # schema.name-mapping.default property, name_mapping.go:85) —
         # record the mapping from the CURRENT schema so later renames

@@ -9,20 +9,23 @@ table/internal/parquet_files.go:168 (footer stats harvest).
 Spark-first design: the fanout trie + worker pool of the reference collapses
 into ``df.repartition(partition_cols).sortWithinPartitions(...).write
 .partitionBy(partition_cols)`` — shuffle, fanout, rolling and parquet
-encoding are Spark's native, already-vectorized paths.  Stats are harvested
-from parquet footers on *executors* (sc.parallelize over files), so the
-driver never becomes the bottleneck at 100 TB file counts.
+encoding are Spark's native, already-vectorized paths.  Stats come from
+parquet footers through one harvest (``harvest_data_files``): two footer
+readers (pyarrow, and parquet-java for footers pyarrow cannot open) feed
+one fold over column-chunk stats.  Past a handful of files the pyarrow
+reads run on *executors*, so the driver never becomes the bottleneck at
+100 TB file counts.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import urllib.parse
 from datetime import date, datetime
 from decimal import Decimal
 from typing import Any, Dict, List, Optional, Tuple
 
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, functions as F
 
 from .. import types as T
@@ -275,10 +278,207 @@ def discover_partitioned_files(out_dir: str, ptype: T.StructType,
     return files
 
 
+# the footer harvest reads footers on the driver up to this many files
+# and in one executor job above it: dispatching a Python-worker job
+# costs more than opening a handful of footers (~0.2 s of job overhead
+# per small append; commits of 1-8 files are the common case for tests,
+# maintenance and micro-batches)
+FOOTER_DRIVER_FILES = 16
+
+_GEO = ("geometry", "geography")
+
+
+def _fold_footer(path: str, has_field_ids: bool, row_groups,
+                 fields: Dict[str, Tuple[int, str]],
+                 shred_map: Dict[str, Tuple[int, str, str]],
+                 variant_fids: Dict[str, int],
+                 truncate_len: int) -> Dict[str, Any]:
+    """The one fold over a parquet footer's column-chunk stats (StatsAgg,
+    utils.go:187-425): both footer readers feed it, so both yield the
+    same stats dict.
+
+    ``row_groups`` yields ``(split offset, row count, chunks)``; a chunk
+    is ``(dotted path, compressed size, value count, null count or None,
+    bounds)``, where ``bounds(type_str)`` decodes the chunk's min/max for
+    that Iceberg type, or returns None when the footer holds none.
+    ``fields`` maps a top-level column name -> (field id, type str);
+    ``shred_map`` maps a shredded-variant companion leaf's path
+    (``_shred_v.a_b``) -> (variant field id, normalized JSON path, type
+    str), whose per-path min/max land in ``variant_lower``/
+    ``variant_upper`` as plain values; ``variant_fids`` maps a VARIANT
+    column's name -> field id (its leaves add to the column's size
+    only)."""
+    sizes: Dict[int, int] = {}
+    vcounts: Dict[int, int] = {}
+    ncounts: Dict[int, int] = {}
+    out: Dict[str, Any] = {
+        "path": path, "has_field_ids": has_field_ids, "record_count": 0,
+        "file_size": os.path.getsize(path), "column_sizes": sizes,
+        "value_counts": vcounts, "null_counts": ncounts,
+        "lower": {}, "upper": {}, "split_offsets": [],
+    }
+    # keys: a field id, or (variant field id, JSON path) for a shredded
+    # leaf
+    mins: Dict[Any, Any] = {}
+    maxs: Dict[Any, Any] = {}
+    types: Dict[Any, str] = {}
+    # a column holding values but no usable min/max in ANY row group
+    # (stats absent, undecodable, or omitted: parquet writes none for a
+    # group containing NaN) loses bounds for the WHOLE file — bounds
+    # folded from the other groups would not cover its rows, and an
+    # understated max silently prunes live rows
+    bad: set = set()
+    for offset, rows, chunks in row_groups:
+        out["record_count"] += rows
+        out["split_offsets"].append(offset)
+        for dotted, size, n_values, n_nulls, bounds in chunks:
+            top = dotted.split(".", 1)[0]
+            sm = shred_map.get(dotted)
+            if sm is not None:
+                key, tstr = (sm[0], sm[1]), sm[2]
+            elif top in variant_fids:
+                fid = variant_fids[top]
+                sizes[fid] = sizes.get(fid, 0) + size
+                continue
+            else:
+                info = fields.get(dotted) or fields.get(top)
+                if info is None:
+                    continue
+                key, tstr = info
+                sizes[key] = sizes.get(key, 0) + size
+                if "." in dotted:
+                    continue
+                # parquet counts values including nulls
+                vcounts[key] = vcounts.get(key, 0) + n_values
+                if n_nulls is not None:
+                    ncounts[key] = ncounts.get(key, 0) + n_nulls
+                if tstr.startswith(_GEO):
+                    continue  # byte-wise WKB min/max is no bbox
+            types[key] = tstr
+            try:
+                mm = bounds(tstr)
+            except (ValueError, TypeError):
+                mm = None
+            if mm is None:
+                if n_values > 0 and (n_nulls is None or n_nulls < n_values):
+                    bad.add(key)
+                continue
+            mn, mx = mm
+            if key not in mins or _lt(mn, mins[key]):
+                mins[key] = mn
+            if key not in maxs or _lt(maxs[key], mx):
+                maxs[key] = mx
+    vl: Dict[int, Dict[str, Any]] = {}
+    vu: Dict[int, Dict[str, Any]] = {}
+
+    def put(dst, vdst, key, v):
+        if v is None:
+            return  # no valid truncated upper bound
+        if isinstance(key, tuple):
+            vdst.setdefault(key[0], {})[key[1]] = v
+            return
+        try:
+            dst[key] = to_bytes(T.type_from_str(types[key]), v)
+        except (TypeError, ValueError):
+            pass
+
+    for key, v in mins.items():
+        if key not in bad:
+            put(out["lower"], vl, key, _truncate_lower(v, truncate_len))
+    for key, v in maxs.items():
+        if key not in bad:
+            put(out["upper"], vu, key, _truncate_upper(v, truncate_len))
+    if vl or vu:
+        out["variant_lower"], out["variant_upper"] = vl, vu
+    return out
+
+
+def _arrow_bounds(col, tstr: str):
+    if not col.is_stats_set or not col.statistics.has_min_max:
+        return None
+    st = col.statistics
+    if tstr.startswith("decimal") and st.physical_type in ("INT32", "INT64"):
+        # pyarrow cannot decode int-backed decimal stats
+        # (ArrowNotImplementedError); the raw values are the unscaled
+        # integers
+        scale = T.type_from_str(tstr).scale
+        return (Decimal(st.min_raw).scaleb(-scale),
+                Decimal(st.max_raw).scaleb(-scale))
+    return st.min, st.max
+
+
+def _harvest_one(path: str, fields: Dict[str, Tuple[int, str]],
+                 truncate_len: int,
+                 shred_map: Optional[Dict[str, Tuple[int, str, str]]] = None,
+                 enc_props: Optional[Dict[str, str]] = None,
+                 variant_fids: Optional[Dict[str, int]] = None
+                 ) -> Optional[Dict[str, Any]]:
+    """pyarrow footer reader: one file's stats dict (``_fold_footer``),
+    on the driver or on an executor; None when pyarrow cannot open the
+    footer (pyarrow 16.1 rejects VARIANT/GEOMETRY logical types), which
+    leaves the file to the JVM reader.  ``enc_props`` decrypts a PME
+    footer through the engine KMS.  Geometry columns take their bounds
+    from the WKB values, since parquet's byte-array min/max over WKB is
+    meaningless (geo_codec.go:53)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dec = None
+    if enc_props:
+        from ..encryption import pyarrow_decryption_properties
+        _factory, dec = pyarrow_decryption_properties(enc_props)
+    try:
+        pf = pq.ParquetFile(path, decryption_properties=dec)
+    except (OSError, pa.lib.ArrowException):
+        return None
+    md = pf.metadata
+
+    def row_groups():
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            first = rg.column(0)
+            # parquet deprecated ColumnChunk.file_offset (writers emit
+            # 0); the row group's true start is its first page offset
+            off = first.dictionary_page_offset
+            if off is None or off <= 0:
+                off = first.data_page_offset
+            chunks = []
+            for ci in range(rg.num_columns):
+                col = rg.column(ci)
+                chunks.append((
+                    col.path_in_schema, col.total_compressed_size,
+                    col.num_values,
+                    col.statistics.null_count if col.is_stats_set else None,
+                    functools.partial(_arrow_bounds, col)))
+            yield off, rg.num_rows, chunks
+
+    has_ids = any((f.metadata or {}).get(b"PARQUET:field_id")
+                  for f in pf.schema_arrow)
+    out = _fold_footer(path, bool(has_ids), row_groups(), fields,
+                       shred_map or {}, variant_fids or {}, truncate_len)
+    for name, (fid, tstr) in fields.items():
+        if not tstr.startswith("geometry"):
+            continue  # geography: geodesic edges make vertex bounds unsafe
+        from ..geo import GeoBoundsAccumulator
+        acc = GeoBoundsAccumulator()
+        try:
+            for chunk in pf.read(columns=[name]).column(0).chunks:
+                for v in chunk:
+                    if v.is_valid:
+                        acc.add_wkb(v.as_py())
+        except (ValueError, KeyError):
+            continue  # unparsable WKB: omit bounds (disables pruning, safe)
+        lower, upper = acc.bounds()
+        if lower is not None:
+            out["lower"][fid] = lower
+            out["upper"][fid] = upper
+    return out
+
+
 def _jvm_stat_value(st, tstr: str, is_min: bool):
     """Convert a JVM parquet Statistics min/max into the python value
     the bounds pipeline expects for iceberg type ``tstr``; raises for
-    types without a safe conversion (decimal/uuid -> no bounds)."""
+    types without a safe conversion (uuid -> no bounds)."""
     import datetime as dt
     if tstr == "string":
         b = bytes(st.getMinBytes() if is_min else st.getMaxBytes())
@@ -296,6 +496,14 @@ def _jvm_stat_value(st, tstr: str, is_min: bool):
     if tstr == "binary" or tstr.startswith("fixed"):
         return bytes(st.getMinBytes() if is_min else st.getMaxBytes())
     v = st.genericGetMin() if is_min else st.genericGetMax()
+    if tstr.startswith("decimal"):
+        # INT32/INT64-backed: the unscaled integer; byte-array-backed:
+        # its big-endian two's complement
+        if not isinstance(v, int):
+            v = int.from_bytes(
+                bytes(st.getMinBytes() if is_min else st.getMaxBytes()),
+                "big", signed=True)
+        return Decimal(v).scaleb(-T.type_from_str(tstr).scale)
     if tstr in ("int", "long"):
         return int(v)
     if tstr in ("float", "double"):
@@ -312,490 +520,154 @@ def _jvm_stat_value(st, tstr: str, is_min: bool):
     raise ValueError(f"no footer-bound conversion for {tstr}")
 
 
+def _jvm_bounds(st, tstr: str):
+    if st is None or st.isEmpty() or not st.hasNonNullValue():
+        return None
+    return _jvm_stat_value(st, tstr, True), _jvm_stat_value(st, tstr, False)
+
+
 def _harvest_via_jvm_footers(spark, paths: List[str],
-                             name_to_field: Dict[str, Tuple[int, str]],
+                             fields: Dict[str, Tuple[int, str]],
                              shred_map: Dict[str, Tuple[int, str, str]],
                              truncate_len: int,
                              variant_fids: Dict[str, int]
                              ) -> List[Dict[str, Any]]:
-    """Footer harvest for variant-bearing files through Spark's JVM
-    parquet reader (parquet-java reads VARIANT-typed footers fine; this
-    container's pyarrow cannot).  Produces the full footer parity the
-    reference gets natively (parquet_files.go:168): record counts,
-    per-column compressed sizes, value/null counts, min/max bounds
-    (including shredded-variant leaf paths), and row-group
-    split_offsets — all of which the Spark-aggregation fallback cannot
-    provide.
-
-    Driver-side by necessity (the py4j gateway lives on the driver); at
-    very large per-commit file counts prefer splitting commits or
-    accept O(files) ~ms-each footer reads — still metadata-only I/O,
-    never data pages."""
-    from ..meta.conversions import to_bytes as _to_bytes
-    from ..types import type_from_str as _tfs
-
+    """parquet-java footer reader over py4j, for the footers pyarrow
+    cannot open: the same column-chunk records, through the same fold.
+    Footers open with read options built from the session's Hadoop
+    conf, so a session armed for JVM Parquet Modular Encryption
+    decrypts them.  Driver-side (the py4j gateway lives there);
+    metadata-only I/O, never data pages."""
     jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    out_list: List[Dict[str, Any]] = []
+    out: List[Dict[str, Any]] = []
     for p in paths:
         jpath = jvm.org.apache.hadoop.fs.Path(p)
-        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile \
-            .fromPath(jpath, conf)
-        rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+        opts = jvm.org.apache.parquet.HadoopReadOptions \
+            .builder(conf, jpath).build()
+        rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(jpath, conf), opts)
         try:
             footer = rdr.getFooter()
-            blocks = footer.getBlocks()
             pschema = footer.getFileMetaData().getSchema()
             has_ids = any(
                 pschema.getFields().get(i).getId() is not None
                 for i in range(pschema.getFieldCount()))
-            out: Dict[str, Any] = {
-                "path": p, "has_field_ids": bool(has_ids),
-                "record_count": 0, "file_size": os.path.getsize(p),
-                "column_sizes": {}, "value_counts": {},
-                "null_counts": {},
-                "lower": {}, "upper": {}, "split_offsets": [],
-            }
-            mins: Dict[int, Any] = {}
-            maxs: Dict[int, Any] = {}
-            types: Dict[int, Any] = {}
-            vmins: Dict[Tuple[int, str], Any] = {}
-            vmaxs: Dict[Tuple[int, str], Any] = {}
-            # a column whose stats fail conversion in ANY row group must
-            # lose bounds for the WHOLE file — bounds folded from the
-            # remaining row groups would not cover all rows (an
-            # understated max silently prunes live rows)
-            bad_fids: set = set()
-            bad_vkeys: set = set()
+            blocks = footer.getBlocks()
+            groups = []
             for bi in range(blocks.size()):
                 b = blocks.get(bi)
-                out["record_count"] += b.getRowCount()
-                out["split_offsets"].append(int(b.getStartingPos()))
                 cols = b.getColumns()
+                chunks = []
                 for ci in range(cols.size()):
                     c = cols.get(ci)
-                    dotted = c.getPath().toDotString()
-                    top = dotted.split(".", 1)[0]
                     st = c.getStatistics()
-                    st_ok = (st is not None and not st.isEmpty()
-                             and st.hasNonNullValue())
-                    # stats genuinely ABSENT for a row group that holds
-                    # values: bounds folded from the other groups would
-                    # not cover these rows — poison the column's bounds
-                    # (all-null groups keep non-empty stats and are
-                    # correctly skipped by st_ok instead)
-                    stats_absent = ((st is None or st.isEmpty())
-                                    and int(c.getValueCount()) > 0)
-                    sm = shred_map.get(dotted)
-                    if sm is not None:
-                        vfid, norm, tstr = sm
-                        if stats_absent:
-                            bad_vkeys.add((vfid, norm))
-                        if st_ok:
-                            k = (vfid, norm)
-                            try:
-                                mn = _jvm_stat_value(st, tstr, True)
-                                mx = _jvm_stat_value(st, tstr, False)
-                            except (ValueError, TypeError):
-                                bad_vkeys.add(k)
-                                continue
-                            if k not in vmins or _lt(mn, vmins[k]):
-                                vmins[k] = mn
-                            if k not in vmaxs or _lt(vmaxs[k], mx):
-                                vmaxs[k] = mx
-                        continue
-                    if top in variant_fids:
-                        # variant interior leaves (metadata/value/...)
-                        # contribute to the variant column's size only
-                        vfid = variant_fids[top]
-                        out["column_sizes"][vfid] = \
-                            out["column_sizes"].get(vfid, 0) + \
-                            int(c.getTotalSize())
-                        continue
-                    info = name_to_field.get(dotted) \
-                        or name_to_field.get(top)
-                    if info is None:
-                        continue
-                    fid, tstr = info
-                    out["column_sizes"][fid] = \
-                        out["column_sizes"].get(fid, 0) + \
-                        int(c.getTotalSize())
-                    if "." in dotted:
-                        continue
-                    if fid not in types:
-                        types[fid] = _tfs(tstr)
-                    if stats_absent:
-                        bad_fids.add(fid)
-                    out["value_counts"][fid] = \
-                        out["value_counts"].get(fid, 0) + \
-                        int(c.getValueCount())
-                    if st is not None and st.isNumNullsSet():
-                        out["null_counts"][fid] = \
-                            out["null_counts"].get(fid, 0) + \
-                            int(st.getNumNulls())
-                    if st_ok:
-                        try:
-                            mn = _jvm_stat_value(st, tstr, True)
-                            mx = _jvm_stat_value(st, tstr, False)
-                        except (ValueError, TypeError):
-                            bad_fids.add(fid)
-                            continue
-                        if fid not in mins or _lt(mn, mins[fid]):
-                            mins[fid] = mn
-                        if fid not in maxs or _lt(maxs[fid], mx):
-                            maxs[fid] = mx
-            for fid in bad_fids:
-                mins.pop(fid, None)
-                maxs.pop(fid, None)
-            for k in bad_vkeys:
-                vmins.pop(k, None)
-                vmaxs.pop(k, None)
-            for fid, mn in mins.items():
-                try:
-                    out["lower"][fid] = _to_bytes(
-                        types[fid], _truncate_lower(mn, truncate_len))
-                except (TypeError, ValueError):
-                    pass
-            for fid, mx in maxs.items():
-                mx2 = _truncate_upper(mx, truncate_len)
-                if mx2 is None:
-                    continue
-                try:
-                    out["upper"][fid] = _to_bytes(types[fid], mx2)
-                except (TypeError, ValueError):
-                    pass
-            if vmins or vmaxs:
-                vl: Dict[int, Dict[str, Any]] = {}
-                vu: Dict[int, Dict[str, Any]] = {}
-                for (vfid, norm), v in vmins.items():
-                    vl.setdefault(vfid, {})[norm] = \
-                        _truncate_lower(v, truncate_len)
-                for (vfid, norm), v in vmaxs.items():
-                    v2 = _truncate_upper(v, truncate_len)
-                    if v2 is not None:
-                        vu.setdefault(vfid, {})[norm] = v2
-                out["variant_lower"] = vl
-                out["variant_upper"] = vu
-            out_list.append(out)
+                    chunks.append((
+                        c.getPath().toDotString(), int(c.getTotalSize()),
+                        int(c.getValueCount()),
+                        int(st.getNumNulls())
+                        if st is not None and st.isNumNullsSet() else None,
+                        functools.partial(_jvm_bounds, st)))
+                groups.append((int(b.getStartingPos()),
+                               int(b.getRowCount()), chunks))
+            out.append(_fold_footer(p, has_ids, groups, fields, shred_map,
+                                    variant_fids, truncate_len))
         finally:
             rdr.close()
-    return out_list
-
-
-def _harvest_via_spark(spark, paths: List[str],
-                       name_to_field: Dict[str, Tuple[int, str]],
-                       shred_map: Dict[str, Tuple[int, str, str]],
-                       truncate_len: int) -> List[Dict[str, Any]]:
-    """Footer-free stats harvest for variant-bearing files: one Spark
-    aggregation grouped by file computes per-column count/nulls/min/max
-    and the shredded-variant per-path bounds.  split_offsets are
-    unavailable without a footer (None -> whole-file splits)."""
-    import pyspark.sql.functions as F
-
-    from .. import types as _T
-    from ..meta.conversions import to_bytes as _to_bytes
-    from ..types import type_from_str as _tfs
-
-    df = spark.read.parquet(*paths)
-    cols = set(df.columns)
-    session_tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    # geometry/geography: byte-wise min/max over WKB decodes into a
-    # garbage-but-valid bbox that WRONGLY prunes (the footer harvester
-    # excludes them for the same reason; geography is never boundable)
-    geo_fids = {fid for _n, (fid, tstr) in name_to_field.items()
-                if tstr.startswith(("geometry", "geography"))}
-    for name, (fid, tstr) in sorted(name_to_field.items()):
-        if name not in cols:
-            continue
-        aggs += [F.count(F.lit(1)).alias(f"vc_{fid}"),
-                 F.sum(F.col(name).isNull().cast("long"))
-                 .alias(f"nc_{fid}")]
-        if fid not in geo_fids:
-            aggs += [F.min(name).alias(f"mn_{fid}"),
-                     F.max(name).alias(f"mx_{fid}")]
-    # deterministic per-path tags: abs(hash(norm)) % 1e8 could COLLIDE
-    # across two normalized paths, silently crossing their bounds
-    shred_items = sorted(shred_map.items())
-    shred_tags = {ppath: f"{vfid}_{i}"
-                  for i, (ppath, (vfid, _n, _t)) in enumerate(shred_items)}
-    for ppath, (vfid, norm, _tstr) in shred_items:
-        top = ppath.split(".", 1)[0]
-        if top not in cols:
-            continue
-        tag = shred_tags[ppath]
-        aggs += [F.min(F.col(ppath)).alias(f"vmn_{tag}"),
-                 F.max(F.col(ppath)).alias(f"vmx_{tag}")]
-    rows = (df.groupBy(F.input_file_name().alias("__p"))
-            .agg(*aggs).collect())
-    # input_file_name() is a percent-encoded URI; the lookup below is by
-    # raw filesystem path, so unquote AFTER stripping the scheme — a
-    # space/'#'/non-ASCII character in the path would otherwise miss the
-    # lookup and silently write record_count=0 (which the metrics
-    # evaluator reads as ROWS_CANNOT_MATCH, dropping the file's rows
-    # from every filtered scan)
-    import re as _re
-    from urllib.parse import unquote as _unquote
-    by_path = {_unquote(_re.sub("^file:/+", "/", r["__p"])): r
-               for r in rows}
-    out = []
-    for p in paths:
-        r = by_path.get(p)
-        if r is None:
-            # a written file absent from the aggregation is only valid
-            # if it genuinely holds zero rows — verify per-file rather
-            # than defaulting to 0 (fail loudly on a lookup bug)
-            n_direct = spark.read.parquet(p).count()
-            if n_direct != 0:
-                raise ValueError(
-                    f"stats harvest missed written file {p} "
-                    f"({n_direct} rows); path-normalization bug")
-        s: Dict[str, Any] = {
-            "path": p, "has_field_ids": True,
-            "record_count": int(r["__n"]) if r is not None else 0,
-            "file_size": os.path.getsize(p),
-            "column_sizes": {}, "value_counts": {}, "null_counts": {},
-            "lower": {}, "upper": {}, "split_offsets": [],
-        }
-        if r is not None:
-            for name, (fid, tstr) in name_to_field.items():
-                if f"vc_{fid}" not in r.__fields__:
-                    continue
-                s["value_counts"][fid] = int(r[f"vc_{fid}"])
-                s["null_counts"][fid] = int(r[f"nc_{fid}"] or 0)
-                if fid in geo_fids:
-                    continue  # no byte-wise WKB bounds (see above)
-                t = _tfs(tstr)
-                mn, mx = r[f"mn_{fid}"], r[f"mx_{fid}"]
-                # timestamptz collect()s as SESSION-timezone-naive
-                # datetimes; downstream serialization reads naive as
-                # UTC — normalize or bounds shift by the UTC offset
-                if tstr.startswith("timestamptz") \
-                        and session_tz != "UTC":
-                    from zoneinfo import ZoneInfo
-                    def _to_utc(v):
-                        if v is None or v.tzinfo is not None:
-                            return v
-                        return (v.replace(tzinfo=ZoneInfo(session_tz))
-                                .astimezone(ZoneInfo("UTC"))
-                                .replace(tzinfo=None))
-                    mn, mx = _to_utc(mn), _to_utc(mx)
-                if mn is not None:
-                    try:
-                        s["lower"][fid] = _to_bytes(
-                            t, _truncate_lower(mn, truncate_len))
-                    except (TypeError, ValueError):
-                        pass
-                if mx is not None:
-                    mx2 = _truncate_upper(mx, truncate_len)
-                    if mx2 is not None:
-                        try:
-                            s["upper"][fid] = _to_bytes(t, mx2)
-                        except (TypeError, ValueError):
-                            pass
-            vl: Dict[int, Dict[str, Any]] = {}
-            vu: Dict[int, Dict[str, Any]] = {}
-            for ppath, (vfid, norm, _tstr) in shred_items:
-                tag = shred_tags[ppath]
-                if f"vmn_{tag}" not in r.__fields__:
-                    continue
-                mn, mx = r[f"vmn_{tag}"], r[f"vmx_{tag}"]
-                if mn is not None:
-                    vl.setdefault(vfid, {})[norm] = _truncate_lower(
-                        mn, truncate_len)
-                if mx is not None:
-                    mx2 = _truncate_upper(mx, truncate_len)
-                    if mx2 is not None:
-                        vu.setdefault(vfid, {})[norm] = mx2
-            if vl:
-                s["variant_lower"] = vl
-            if vu:
-                s["variant_upper"] = vu
-        out.append(s)
     return out
 
 
-def _harvest_one(path: str, name_to_field: Dict[str, Tuple[int, str]],
-                 truncate_len: int,
-                 shred_map: Optional[Dict[str, Tuple[int, str, str]]] = None,
-                 enc_props: Optional[Dict[str, str]] = None
-                 ) -> Dict[str, Any]:
-    """Executor-side: read one parquet footer -> stats dict.
+def harvest_data_files(spark, files: List[Tuple[str, Dict[str, Any]]],
+                       schema: Schema, properties: Dict[str, str],
+                       shred_map: Optional[Dict[str, Tuple[int, str, str]]]
+                       = None, encrypted: bool = False,
+                       sort_order_id: Optional[int] = None
+                       ) -> List[DataFile]:
+    """The footer-stats harvest every writer and adopter goes through
+    (parquet_files.go:168): one DataFile per ``(path, partition)``.
 
-    ``name_to_field`` maps top-level column name -> (field_id, type_str).
-    ``shred_map`` maps a shredded-variant companion leaf's parquet path
-    (``_shred_v.a_b``) -> (variant field id, normalized JSON path,
-    type str); per-path min/max land in ``variant_lower``/``variant_upper``
-    as plain python values, encoded to variant bounds blobs on the driver.
-    """
-    import pyarrow.parquet as pq
-    from ..schema import Schema as _S  # noqa: F401  (import side effects none)
-    from .. import types as _T
-    from ..meta.conversions import to_bytes as _to_bytes
-    from ..types import type_from_str as _tfs
-
-    if enc_props:  # PME-encrypted footer: decrypt via the engine KMS
-        from ..encryption import pyarrow_decryption_properties
-        _fac, dec = pyarrow_decryption_properties(enc_props)
-        pf = pq.ParquetFile(path, decryption_properties=dec)
-    else:
-        pf = pq.ParquetFile(path)
-    md = pf.metadata
-    arrow_schema = pf.schema_arrow
-    # geo columns: parquet byte-array min/max over WKB is meaningless, so
-    # bounds are computed from the raw WKB values below (geo_codec.go:53)
-    geo_cols = {name: (fid, tstr) for name, (fid, tstr) in
-                name_to_field.items()
-                if tstr.startswith(("geometry", "geography"))}
-    geo_fids = {fid for fid, _ in geo_cols.values()}
-    has_ids = any((f.metadata or {}).get(b"PARQUET:field_id")
-                  for f in arrow_schema)
-    out: Dict[str, Any] = {
-        "path": path,
-        "has_field_ids": bool(has_ids),
-        "record_count": md.num_rows,
-        "file_size": os.path.getsize(path),
-        "column_sizes": {}, "value_counts": {}, "null_counts": {},
-        "lower": {}, "upper": {}, "split_offsets": [],
-    }
-    mins: Dict[int, Any] = {}
-    maxs: Dict[int, Any] = {}
-    types: Dict[int, Any] = {}
-    vmins: Dict[Tuple[int, str], Any] = {}
-    vmaxs: Dict[Tuple[int, str], Any] = {}
-    # same poisoning rule as the JVM harvester: a row group holding
-    # NON-NULL values but no usable min/max (stats absent, or written
-    # without min/max — parquet omits them when a group contains NaN)
-    # must void the column's bounds for the WHOLE file; folding the
-    # remaining groups yields under-covering bounds that silently
-    # prune live rows
-    bad_fids: set = set()
-    bad_vkeys: set = set()
-
-    def _no_bounds_but_values(col) -> bool:
-        if col.num_values <= 0:
-            return False
-        if not col.is_stats_set:
-            return True
-        st = col.statistics
-        if st.has_min_max:
-            return False
-        nulls = st.null_count
-        return nulls is None or nulls < col.num_values
-
+    pyarrow reads every footer it can open, on the driver up to
+    ``FOOTER_DRIVER_FILES`` files and in one executor job above that;
+    the JVM reader takes the footers pyarrow cannot open.  Bounds
+    truncate at the table's ``write.metadata.metrics.truncate-length``.
+    ``encrypted``: the caller wrote these files under Parquet Modular
+    Encryption, so pyarrow decrypts their footers through the table's
+    KMS.  ``spark`` is None where no session exists (a DataSource write
+    task): pyarrow then reads every footer in-process."""
+    truncate_len = int(properties.get(PROP_METRICS_TRUNCATE,
+                                      DEFAULT_METRICS_TRUNCATE))
+    # VARIANT columns take no generic bounds (min/max over the
+    # metadata/value binaries is meaningless); their bounds come from
+    # the shredded companions in shred_map
+    fields = {f.name: (f.field_id, str(f.field_type))
+              for f in schema.fields
+              if f.field_type.is_primitive
+              and not isinstance(f.field_type, T.VariantType)}
+    variant_fids = {f.name: f.field_id for f in schema.fields
+                    if isinstance(f.field_type, T.VariantType)}
     shred_map = shred_map or {}
-    for rg_i in range(md.num_row_groups):
-        rg = md.row_group(rg_i)
-        first_col = rg.column(0)
-        # parquet deprecated ColumnChunk.file_offset (writers emit 0);
-        # the row group's true start is its first page offset
-        off = first_col.dictionary_page_offset
-        if off is None or off <= 0:
-            off = first_col.data_page_offset
-        out["split_offsets"].append(off)
-        for ci in range(rg.num_columns):
-            col = rg.column(ci)
-            name = col.path_in_schema.split(".")[0]
-            sm = shred_map.get(col.path_in_schema)
-            if sm is not None:
-                vfid, norm, _tstr = sm
-                if col.is_stats_set and col.statistics.has_min_max:
-                    st = col.statistics
-                    k = (vfid, norm)
-                    if k not in vmins or _lt(st.min, vmins[k]):
-                        vmins[k] = st.min
-                    if k not in vmaxs or _lt(vmaxs[k], st.max):
-                        vmaxs[k] = st.max
-                elif _no_bounds_but_values(col):
-                    bad_vkeys.add((vfid, norm))
-                continue
-            info = name_to_field.get(col.path_in_schema) or name_to_field.get(name)
-            if info is None:
-                continue
-            fid, tstr = info
-            is_leaf_simple = "." not in col.path_in_schema
-            out["column_sizes"][fid] = out["column_sizes"].get(fid, 0) + \
-                col.total_compressed_size
-            if not is_leaf_simple:
-                continue
-            t = types.get(fid)
-            if t is None:
-                t = types[fid] = _tfs(tstr)
-            # parquet ColumnMetaData.num_values counts all values incl. nulls
-            out["value_counts"][fid] = out["value_counts"].get(fid, 0) + \
-                col.num_values
-            if col.is_stats_set:
-                st = col.statistics
-                if st.null_count is not None:
-                    out["null_counts"][fid] = out["null_counts"].get(fid, 0) + \
-                        st.null_count
-                if st.has_min_max and fid not in geo_fids:
-                    if isinstance(t, _T.DecimalType) and \
-                            st.physical_type in ("INT32", "INT64"):
-                        # pyarrow cannot decode int-backed decimal stats
-                        # (ArrowNotImplementedError); the raw values are
-                        # the unscaled integers
-                        mn = Decimal(st.min_raw).scaleb(-t.scale)
-                        mx = Decimal(st.max_raw).scaleb(-t.scale)
-                    else:
-                        mn, mx = st.min, st.max
-                    if fid not in mins or _lt(mn, mins[fid]):
-                        mins[fid] = mn
-                    if fid not in maxs or _lt(maxs[fid], mx):
-                        maxs[fid] = mx
-            if fid not in geo_fids and _no_bounds_but_values(col):
-                bad_fids.add(fid)
-    for fid in bad_fids:
-        mins.pop(fid, None)
-        maxs.pop(fid, None)
-    for k in bad_vkeys:
-        vmins.pop(k, None)
-        vmaxs.pop(k, None)
-    for fid, mn in mins.items():
-        t = types[fid]
-        mn2 = _truncate_lower(mn, truncate_len)
-        try:
-            out["lower"][fid] = _to_bytes(t, mn2)
-        except (TypeError, ValueError):
-            pass
-    for fid, mx in maxs.items():
-        t = types[fid]
-        mx2 = _truncate_upper(mx, truncate_len)
-        if mx2 is None:
-            continue
-        try:
-            out["upper"][fid] = _to_bytes(t, mx2)
-        except (TypeError, ValueError):
-            pass
-    if vmins or vmaxs:
-        vl: Dict[int, Dict[str, Any]] = {}
-        vu: Dict[int, Dict[str, Any]] = {}
-        for (vfid, norm), v in vmins.items():
-            vl.setdefault(vfid, {})[norm] = _truncate_lower(v, truncate_len)
-        for (vfid, norm), v in vmaxs.items():
-            v2 = _truncate_upper(v, truncate_len)
-            if v2 is None:
-                continue
-            vu.setdefault(vfid, {})[norm] = v2
-        out["variant_lower"] = vl
-        out["variant_upper"] = vu
-    for name, (fid, tstr) in geo_cols.items():
-        if tstr.startswith("geography"):
-            continue  # geodesic edges: vertex min/max is unsafe, no bounds
-        from ..geo import GeoBoundsAccumulator
-        acc = GeoBoundsAccumulator()
-        try:
-            for chunk in pf.read(columns=[name]).column(0).chunks:
-                for v in chunk:
-                    if v.is_valid:
-                        acc.add_wkb(v.as_py())
-        except (ValueError, KeyError):
-            continue  # unparsable WKB: omit bounds (disables pruning, safe)
-        lower, upper = acc.bounds()
-        if lower is not None:
-            out["lower"][fid] = lower
-            out["upper"][fid] = upper
-    return out
+    enc_props = dict(properties) if encrypted else None
+
+    def harvest(p):
+        return _harvest_one(p, fields, truncate_len, shred_map, enc_props,
+                            variant_fids)
+
+    paths = [p for p, _ in files]
+    if spark is None or len(paths) <= FOOTER_DRIVER_FILES:
+        stats = [harvest(p) for p in paths]
+    else:
+        stats = spark.sparkContext.parallelize(
+            paths, min(len(paths), 64)).map(harvest).collect()
+    unopened = [p for p, s in zip(paths, stats) if s is None]
+    if unopened:
+        if spark is None:
+            raise ValueError(f"pyarrow cannot open the parquet footer of "
+                             f"{unopened[0]} and no Spark session is "
+                             f"available for the JVM reader")
+        jvm_stats = dict(zip(unopened, _harvest_via_jvm_footers(
+            spark, unopened, fields, shred_map, truncate_len,
+            variant_fids)))
+        stats = [s or jvm_stats[p] for p, s in zip(paths, stats)]
+    return [_data_file(s, part, sort_order_id)
+            for s, (_p, part) in zip(stats, files)]
+
+
+def stamp_field_ids(arrow_schema, schema: Schema):
+    """``arrow_schema`` with each top-level field carrying its table
+    field id, so a pyarrow-written file resolves columns by id."""
+    import pyarrow as pa
+    fields = []
+    for f in arrow_schema:
+        sf = schema.find_field(f.name)
+        fields.append(f if sf is None else f.with_metadata(
+            {b"PARQUET:field_id": str(sf.field_id).encode()}))
+    return pa.schema(fields)
+
+
+def _data_file(s: Dict[str, Any], partition: Dict[str, Any],
+               sort_order_id: Optional[int]) -> DataFile:
+    lower, upper = dict(s["lower"]), dict(s["upper"])
+    if s.get("variant_lower") or s.get("variant_upper"):
+        # encode per-path bounds into the spec's variant bounds objects
+        # under the variant column's field id
+        from ..variant import encode_variant_blob
+        for dst, src in ((lower, s.get("variant_lower")),
+                         (upper, s.get("variant_upper"))):
+            for vfid, m in (src or {}).items():
+                try:
+                    dst[vfid] = encode_variant_blob(m)
+                except (TypeError, ValueError):
+                    pass
+    return DataFile(
+        content=CONTENT_DATA, file_path=s["path"], file_format="PARQUET",
+        partition=partition, record_count=s["record_count"],
+        file_size_in_bytes=s["file_size"], column_sizes=s["column_sizes"],
+        value_counts=s["value_counts"], null_value_counts=s["null_counts"],
+        lower_bounds=lower, upper_bounds=upper,
+        split_offsets=sorted(s["split_offsets"]) or None,
+        sort_order_id=sort_order_id,
+        name_based=not s["has_field_ids"])
 
 
 def _lt(a: Any, b: Any) -> bool:
@@ -1072,119 +944,14 @@ def write_dataframe(df: DataFrame, schema: Schema, spec: PartitionSpec,
         files = [(dst, part) for (_s, dst), (_p, part) in zip(moves, files)]
         shutil.rmtree(out_dir, ignore_errors=True)
 
-    truncate_len = int(properties.get(PROP_METRICS_TRUNCATE,
-                                      DEFAULT_METRICS_TRUNCATE))
-    # VARIANT columns are excluded from the generic harvest (parquet
-    # min/max over the metadata/value binaries is meaningless); their
-    # bounds come from the shredded companions via shred_map
-    name_to_field = {
-        f.name: (f.field_id, str(f.field_type))
-        for f in schema.fields
-        if f.field_type.is_primitive
-        and not isinstance(f.field_type, T.VariantType)}
-    paths = [p for p, _ in files]
-    has_variant = any(isinstance(f.field_type, T.VariantType)
-                      for f in schema.fields)
-    if pme_on:
-        # encrypted footers: neither pyarrow-without-keys nor the JVM
-        # footer reader can open them — harvest per-file with the
-        # engine-KMS decryption properties on executors (variant+PME
-        # falls to the Spark aggregation, whose JVM scan decrypts via
-        # the session's crypto factory)
-        if has_variant:
-            stats_list = _harvest_via_spark(spark, paths, name_to_field,
-                                            shred_map, truncate_len)
-        else:
-            props_b = dict(properties)
-            stats_list = spark.sparkContext.parallelize(
-                paths, max(1, min(len(paths), 64))) \
-                .map(lambda p: _harvest_one(p, name_to_field,
-                                            truncate_len, shred_map,
-                                            enc_props=props_b)).collect()
-    elif has_variant:
-        # this container's pyarrow cannot open footers carrying the
-        # VARIANT logical type (unrecognized Thrift LogicalType — same
-        # env limitation as GEOMETRY), but parquet-java CAN: harvest
-        # through the JVM gateway for full footer parity (column sizes,
-        # split offsets, bounds incl. shredded leaves); fall back to
-        # the one-pass Spark aggregation if the JVM classes are absent
-        variant_fids = {f.name: f.field_id for f in schema.fields
-                        if isinstance(f.field_type, T.VariantType)}
-        try:
-            stats_list = _harvest_via_jvm_footers(
-                spark, paths, name_to_field, shred_map, truncate_len,
-                variant_fids)
-        except (Py4JError, TypeError,
-                AttributeError) as e:  # pragma: no cover - classpath envs
-            # ONLY gateway/classpath absence falls back (JavaPackage not
-            # callable -> TypeError/AttributeError, protocol-level
-            # Py4JError); a genuine JVM-side harvest failure surfaces
-            # as Py4JJavaError (a Py4JError SUBCLASS) and must stay
-            # loud — silently degraded stats (no split_offsets, no
-            # shredded bounds) are how pruning regressions hide
-            from py4j.protocol import Py4JJavaError
-            if isinstance(e, Py4JJavaError):
-                raise
-            import logging
-            logging.getLogger(__name__).warning(
-                "JVM footer harvest unavailable (%s: %s); falling back "
-                "to Spark-aggregation stats", type(e).__name__, e)
-            stats_list = _harvest_via_spark(spark, paths, name_to_field,
-                                            shred_map, truncate_len)
-    else:
-        # harvest footers on executors for real file counts (O(files)
-        # work never lands on the driver) — but BELOW a small threshold
-        # read them driver-side: dispatching a Python-worker job costs
-        # more than opening a handful of footers (measured ~0.2 s of
-        # pure job overhead per small append; commits of 1-8 files are
-        # the common case for tests, maintenance and micro-batches).
-        # Env-overridable for deployments where driver-side footer
-        # reads are the wrong default (e.g. high-latency object stores).
-        thr = int(os.environ.get(
-            "SPARK_GRAFT_FOOTER_DRIVER_THRESHOLD", "16"))
-        if len(paths) <= thr:
-            stats_list = [_harvest_one(p, name_to_field, truncate_len,
-                                       shred_map) for p in paths]
-        else:
-            stats_list = spark.sparkContext.parallelize(
-                paths, max(1, min(len(paths), 64))) \
-                .map(lambda p: _harvest_one(p, name_to_field,
-                                            truncate_len,
-                                            shred_map)).collect()
-    stats_by_path = {s["path"]: s for s in stats_list}
-
-    out: List[DataFile] = []
-    for path, part in files:
-        s = stats_by_path[path]
-        lower, upper = dict(s["lower"]), dict(s["upper"])
-        if s.get("variant_lower") or s.get("variant_upper"):
-            # encode per-path bounds into the spec's variant bounds
-            # objects under the variant column's field id
-            from ..variant import encode_variant_blob
-            for vfid, m in (s.get("variant_lower") or {}).items():
-                try:
-                    lower[vfid] = encode_variant_blob(m)
-                except (TypeError, ValueError):
-                    pass
-            for vfid, m in (s.get("variant_upper") or {}).items():
-                try:
-                    upper[vfid] = encode_variant_blob(m)
-                except (TypeError, ValueError):
-                    pass
-        out.append(DataFile(
-            content=CONTENT_DATA, file_path=path, file_format="PARQUET",
-            partition=part, record_count=s["record_count"],
-            file_size_in_bytes=s["file_size"],
-            column_sizes=s["column_sizes"], value_counts=s["value_counts"],
-            null_value_counts=s["null_counts"],
-            lower_bounds=lower, upper_bounds=upper,
-            split_offsets=sorted(s["split_offsets"]) or None,
-            # zorder distribution SKIPS the sort-order sort (Morton-key
-            # clustering instead): claiming sort_order_id would tell
-            # readers the files are order-sorted when they are not
-            sort_order_id=(sort_order.order_id
-                           if sort_order and dist_mode != "zorder"
-                           else None)))
+    out = harvest_data_files(
+        spark, files, schema, properties, shred_map=shred_map,
+        encrypted=pme_on,
+        # zorder distribution SKIPS the sort-order sort (Morton-key
+        # clustering instead): claiming sort_order_id would tell
+        # readers the files are order-sorted when they are not
+        sort_order_id=(sort_order.order_id
+                       if sort_order and dist_mode != "zorder" else None))
     # encrypted tables: stamp a wrapped per-file DEK envelope on every
     # new data file (encryption.table-key-id + kms-type properties)
     from ..encryption import attach_file_keys

@@ -81,18 +81,18 @@ def test_footer_probe_cached_per_path(spark, sf_dir, catalog, monkeypatch):
           ' {"field-id": 3, "names": ["r_comment"]}]')
     t.update_properties({PROP_NAME_MAPPING: nm})
 
-    SC._FIELD_ID_PROBE_CACHE.clear()
+    SC._FOOTER_PROBE_CACHE.clear()
     t.to_df(spark).count()
-    first = dict(SC._FIELD_ID_PROBE_CACHE)
+    first = dict(SC._FOOTER_PROBE_CACHE)
     assert first, "probe cache not populated by a name-mapped scan"
 
     # second scan must not launch another probe: poison the prober
     monkeypatch.setattr(
-        SC, "_file_has_field_ids",
+        SC, "_footer_field_ids",
         lambda path: (_ for _ in ()).throw(
             AssertionError("re-probed an already-cached file")))
     t.to_df(spark).count()
-    assert dict(SC._FIELD_ID_PROBE_CACHE) == first
+    assert dict(SC._FOOTER_PROBE_CACHE) == first
 
 
 def _plan(df) -> str:

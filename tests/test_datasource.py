@@ -404,3 +404,70 @@ def test_pushdownless_reader_fallback(spark, wh):
     exp = (cat.load_table("db.li").to_df(spark)
            .filter(F.col("l_linenumber") == 2))
     assert got.count() == exp.count()
+
+
+def _renamed_table(spark, root):
+    """(1,'a'),(2,'b') appended, then column ``v`` renamed to ``w``: the
+    data file still names the column ``v`` and only its field id ties
+    it to ``w``."""
+    cat = FilesystemCatalog(root)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    t = cat.create_table("db.ren", Schema.from_spark(df.schema))
+    t.append(df)
+    t = cat.load_table("db.ren")
+    t.update_schema().rename_column("v", "w").commit()
+    return cat.load_table("db.ren")
+
+
+def test_batch_read_resolves_renamed_column(spark, tmp_path, sf_dir):
+    """The batch reader selects file columns by field id and emits the
+    current names, as ``to_df`` does; by name it read ``w`` as NULL."""
+    from tests.conftest import id_less_table
+    from iceberg_go_spark.sources.datasource import register
+    register(spark)
+    root = str(tmp_path / "wh")
+    t = _renamed_table(spark, root)
+    got = _read(spark, root, table="db.ren")
+    assert got.columns == ["id", "w"]
+    assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, t.to_df(spark).collect()))
+
+    # an ID-less file resolves through the table's name mapping, which
+    # keeps the old name as an alias after the rename
+    nation = read_table(spark, "nation", sf_dir)
+    cat = FilesystemCatalog(root)
+    idless = id_less_table(spark, cat, "db.idless", nation,
+                           str(tmp_path / "idless.parquet"))
+    idless.update_schema().rename_column("n_name", "name").commit()
+    got = _read(spark, root, table="db.idless")
+    assert got.filter(F.col("name").isNull()).count() == 0
+    assert sorted(r.name for r in got.collect()) == \
+        sorted(r.n_name for r in nation.collect())
+
+
+def test_stream_read_resolves_renamed_column(spark, tmp_path):
+    """The stream reader reads files through the batch reader's column
+    resolution: a renamed column streams its values, not NULL."""
+    import time
+
+    from iceberg_go_spark.sources.datasource import register
+    register(spark)
+    root = str(tmp_path / "wh")
+    _renamed_table(spark, root)
+    out = str(tmp_path / "out")
+    q = (spark.readStream.format("iceberg_go_spark")
+         .option("warehouse", root).option("table", "db.ren")
+         .option("starting_snapshot_id", "0").load()
+         .writeStream.format("parquet")
+         .option("path", out)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    for _ in range(100):
+        if not q.isActive:
+            break
+        time.sleep(0.2)
+    got = spark.read.parquet(out)
+    assert got.columns == ["id", "w"]
+    assert sorted(map(tuple, got.collect())) == [(1, "a"), (2, "b")]

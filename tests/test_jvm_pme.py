@@ -78,6 +78,28 @@ got = spark.read.parquet(pa_dir)
 assert got.count() == df.count()
 print("SPARK-CROSS-READ-OK")
 
+# a VARIANT table appended under JVM PME: pyarrow cannot open the
+# VARIANT footer, so the harvest reads it through parquet-java, which
+# decrypts it with the session's crypto factory
+from iceberg_go_spark import types as T
+from iceberg_go_spark.catalog import FilesystemCatalog
+from iceberg_go_spark.schema import Schema
+vprops = dict(props, **{"format-version": "3",
+                        ENC.PARQUET_COLUMN_KEYS_KEY: "k1:id"})
+cat = FilesystemCatalog(tempfile.mkdtemp(prefix="jvmpme_wh_"))
+vt = cat.create_table("db.v", Schema([T.NestedField(1, "id", T.LongType()),
+                                      T.NestedField(2, "v", T.VariantType())]),
+                      properties=vprops)
+vt.append(spark.sql("select id, parse_json('{\"a\":' || id || '}') as v "
+                    "from range(50)").coalesce(1))
+(task,) = cat.load_table("db.v").scan().plan_files()
+d = task.data_file
+assert d.record_count == 50, d
+assert d.split_offsets, d
+assert 1 in d.lower_bounds and 1 in d.upper_bounds, d
+assert 2 in d.column_sizes, d
+print("VARIANT-PME-HARVEST-OK")
+
 # unapply: the next write in the SAME session must be plaintext again
 ENC.unapply_parquet_encryption(spark)
 plain = tempfile.mkdtemp(prefix="jvmpme_plain_") + "/p"
@@ -108,6 +130,6 @@ def test_jvm_pme_end_to_end(tmp_path):
     assert "ALL-JVM-PME-OK" in r.stdout, r.stdout + r.stderr
     for sentinel in ("JVM-WRITE-READ-OK", "PLAINTEXT-REJECTED-OK",
                      "PYARROW-CROSS-READ-OK", "SPARK-CROSS-READ-OK",
-                     "UNAPPLY-OK"):
+                     "VARIANT-PME-HARVEST-OK", "UNAPPLY-OK"):
         assert sentinel in r.stdout
     assert "BAD-PLAINTEXT-READ" not in r.stdout

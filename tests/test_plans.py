@@ -284,6 +284,60 @@ def test_query_registry_parity():
     assert [n for n in bench.HEADLINE + bench.EXTRA if n not in q] == []
 
 
+# every environment variable the package reads: deployment settings,
+# each declared here on purpose.  A new env knob is a new policy switch;
+# add it to this list only with its reason.
+ENV_KNOBS = {
+    "AWS_ACCESS_KEY_ID", "AWS_REGION", "AWS_SECRET_ACCESS_KEY",
+    "AWS_SESSION_TOKEN",                  # SigV4 REST signing (config.py)
+    "ICEBERG_GO_SPARK_HOME",              # config file location
+    "ICEBERG_REST_PLAN_TIMEOUT_S",        # REST server-side planning wait
+    "ICEBERG_SPARK_BROADCAST_ROW_LIMIT",  # delete anti-join broadcast gate
+    "PYTHONPATH",                         # shipped to Python workers
+    "SPARK_DRIVER_MEM", "SPARK_GRAFT_CPUS",  # session sizing
+    "SPARK_GRAFT_LISTING_THRESHOLD",      # parallel file-listing gate
+    "SPARK_HOME",                         # parquet jars for the JVM KMS
+}
+
+
+def test_env_knob_inventory():
+    """AST inventory of the package's environment reads
+    (``os.environ.get``/``[...]``/``in``, ``os.getenv``) against
+    ENV_KNOBS: an undeclared knob fails, and so does a read whose key
+    is not a literal (it could not be inventoried)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "iceberg_go_spark"
+
+    def is_environ(node):
+        return isinstance(node, ast.Attribute) and node.attr == "environ"
+
+    found, opaque = set(), []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            key = None
+            if isinstance(node, ast.Call) and isinstance(
+                    node.func, ast.Attribute) and node.args and (
+                    (node.func.attr == "get" and is_environ(node.func.value))
+                    or node.func.attr == "getenv"):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and is_environ(
+                    node.value) and isinstance(node.ctx, ast.Load):
+                key = node.slice
+            elif isinstance(node, ast.Compare) and any(
+                    is_environ(c) for c in node.comparators):
+                key = node.left
+            if key is None:
+                continue
+            if isinstance(key, ast.Constant) and isinstance(key.value, str):
+                found.add(key.value)
+            else:
+                opaque.append(f"{path.name}:{node.lineno}")
+    assert opaque == []
+    assert found == ENV_KNOBS
+
+
 def test_package_ships_no_test_doubles():
     """Test doubles (fake catalog clients, local wire servers) live under
     tests/support; the package holds only engine code."""
@@ -399,7 +453,7 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     t = cat.create_table("db.mor", sch,
                          spec_from_names(sch, ("o_orderdate", "year")))
     t.append(orders)
-    probed = set(SC._FIELD_ID_PROBE_CACHE)
+    probed = set(SC._FOOTER_PROBE_CACHE)
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     t.delete_where(spark, E.eq("o_orderstatus", "F"), mode="merge-on-read")
     monkeypatch.undo()
@@ -410,7 +464,7 @@ def test_delete_application_runs_without_python_workers(spark, tmp_path,
     t.update_where(spark, E.eq("o_orderstatus", "O"),
                    {"o_totalprice": "o_totalprice + 1"})
     t.merge_into(spark, orders.limit(5), ["o_orderkey"])
-    assert set(SC._FIELD_ID_PROBE_CACHE) == probed
+    assert set(SC._FOOTER_PROBE_CACHE) == probed
 
     idless = id_less_table(spark, cat, "db.idless", orders,
                            str(tmp_path / "idless.parquet"))

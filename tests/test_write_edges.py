@@ -172,3 +172,66 @@ def test_decimal_bounds_harvest_and_prune(spark, tmp_path, n_files):
         want = sorted(r.id for r in df.filter(sql).collect())
         assert got == want and want, sql
         assert scan.report.skipped_data_files > 0, sql
+
+
+def test_footer_readers_fold_alike(spark, tmp_path):
+    """The pyarrow and the JVM footer readers feed one fold: on one
+    engine-written file (ints, strings, decimal(9,2), dates, NULLs, two
+    or more row groups) they must produce the same stats."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from iceberg_go_spark.table import write as W
+
+    rows = [(i, i * 7 - 900, None if i % 5 == 0 else f"name-{i:05d}",
+             Decimal(i * 13 - 2000).scaleb(-2),
+             None if i % 7 == 0 else dt.date(2020, 1, 1)
+             + dt.timedelta(days=i))
+            for i in range(1000)]
+    df = spark.createDataFrame(
+        rows, "i int, l long, s string, d decimal(9,2), dt date") \
+        .coalesce(1)
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    t = cat.create_table("db.fold", Schema.from_spark(df.schema),
+                         properties={
+                             "write.parquet.row-group-size-bytes": "1024"})
+    t.append(df)
+    (task,) = cat.load_table("db.fold").scan().plan_files()
+    path = task.data_file.file_path
+    fields = {f.name: (f.field_id, str(f.field_type))
+              for f in t.schema().fields}
+    py = W._harvest_one(path, fields, 16)
+    (jvm,) = W._harvest_via_jvm_footers(spark, [path], fields, {}, 16, {})
+    assert len(py["split_offsets"]) >= 2
+    assert py["record_count"] == 1000
+    assert set(py["lower"]) == set(py["upper"]) == \
+        {fid for fid, _t in fields.values()}  # decimal bounds included
+    for k in ("record_count", "column_sizes", "value_counts",
+              "null_counts", "lower", "upper", "split_offsets"):
+        assert py[k] == jvm[k], k
+    assert py == jvm
+
+
+def test_add_files_truncates_bounds_per_table(spark, tmp_path):
+    """add_files truncates string bounds at the table's
+    write.metadata.metrics.truncate-length, like every other harvest."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "long.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2], pa.int64()),
+        "s": pa.array(["alphabetical", "zebra crossing"])}), p)
+    cat = FilesystemCatalog(str(tmp_path / "wh"))
+    t = cat.create_table(
+        "db.trunc", Schema([T.NestedField(1, "id", T.LongType()),
+                            T.NestedField(2, "s", T.StringType())]),
+        properties={"write.metadata.metrics.truncate-length": "4"})
+    txn = t.new_transaction()
+    txn.add_files(spark, [p])
+    txn.commit()
+    (task,) = cat.load_table("db.trunc").scan().plan_files()
+    d = task.data_file
+    assert d.lower_bounds[2] == b"alph"
+    assert d.upper_bounds[2] == b"zebs"
+    assert all(len(b) <= 4 for b in (d.lower_bounds[2], d.upper_bounds[2]))
